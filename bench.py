@@ -402,6 +402,18 @@ EXTRA_R8 = [
 ]
 
 
+def _fingerprint_cpus() -> int:
+    """The core count Spark runs with: ``$SPARK_GRAFT_CPUS`` with
+    session.py's default of 32; a malformed value falls back to the
+    host's CPU count instead of failing the bench."""
+    import multiprocessing
+
+    try:
+        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    except ValueError:
+        return multiprocessing.cpu_count()
+
+
 def _env_fingerprint() -> dict:
     """One-line box fingerprint carried in the bench JSON.
 
@@ -409,7 +421,6 @@ def _env_fingerprint() -> dict:
     IDENTICAL code (driver 37.3s vs solo 22.3s, uniform 1.25-2.4x
     per-query including scan shapes untouched since round 2). This block
     lets a verdict separate box contention from a real regression."""
-    import multiprocessing
     import platform
 
     fp: dict = {
@@ -417,8 +428,7 @@ def _env_fingerprint() -> dict:
         # (session.py), so the fingerprint must report the SAME number or
         # a low-core driver run is unreadable from the record (the r11
         # scaling block flagged suspect_cpus_ignored on exactly this).
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS",
-                                   multiprocessing.cpu_count())),
+        "cpus": _fingerprint_cpus(),
         "platform": platform.platform(),
         "python": platform.python_version(),
     }

@@ -49,11 +49,16 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact dedup on the normalized-content fingerprint, keeping the
     lowest id per group (deterministic first-wins).
 
-    Shape: ONE hash aggregation — ``min_by(struct(row), id)`` — with
-    map-side partial combine, instead of a window, which would shuffle
-    every duplicate row and then SORT each partition. At 100 TB the agg
-    form ships one winner candidate per (partition, fingerprint) and
-    never sorts."""
+    Shape: ONE aggregation — ``min_by(struct(row), id)`` — with map-side
+    partial combine, instead of a window, which would shuffle every
+    duplicate row. At 100 TB the agg form ships one winner candidate per
+    (partition, fingerprint). It does sort: a struct aggregation buffer
+    is not a fixed-width mutable field, so ``HashAggregate`` cannot hold
+    it and the executed plan is a ``SortAggregate`` with two ``Sort``
+    nodes (by fingerprint before the partial and before the final
+    aggregate). Those sorts buffer their partitions in execution memory,
+    which makes this operator the peak-memory stage of the benchmark's
+    ``llm_curation`` workload."""
     cols = df.columns
     return (
         df.withColumn("__fp", fingerprint(text_col))
@@ -320,7 +325,7 @@ def ngram_jaccard_pairs(
             .limit(bitset_max_vocab + 1)
             .collect()
         ]
-        if len(probe) <= bitset_max_vocab and all(
+        if probe and len(probe) <= bitset_max_vocab and all(
             isinstance(v, int) for v in probe
         ):
             vocab = sorted(probe)

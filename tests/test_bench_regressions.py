@@ -291,3 +291,18 @@ def test_regressions_compact_surfaces_confirm_load_context(tmp_path):
     out2 = bench._regressions({"a": 1.0, "b": 1.0}, tmp_path,
                               remeasure=lambda name: 1.0, loads={})
     assert "worst_load_avg_1m" not in bench._regressions_compact(out2)
+
+
+def test_fingerprint_cpus_defaults_like_session(monkeypatch):
+    # unset: the same "32" session.py gives local[...]
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert bench._fingerprint_cpus() == 32
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    assert bench._fingerprint_cpus() == 6
+
+
+def test_fingerprint_cpus_malformed_falls_back_to_cpu_count(monkeypatch):
+    import multiprocessing
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "four")
+    assert bench._fingerprint_cpus() == multiprocessing.cpu_count()

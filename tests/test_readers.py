@@ -295,3 +295,190 @@ def test_python_datasource_empty_prune_returns_zero_rows(spark):
         .filter("shard = 9")
     )
     assert df.count() == 0
+
+
+# -- catalog parquet reads: schema from the footer, on the driver ----------
+
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@pytest.fixture
+def nanos_as_long_restored(spark):
+    """read_events pins nanosAsLong=true session-wide; put the prior value
+    back so the setting does not leak into later tests."""
+    before = spark.conf.get(NANOS_AS_LONG, None)
+    yield
+    if before is None:
+        spark.conf.unset(NANOS_AS_LONG)
+    else:
+        spark.conf.set(NANOS_AS_LONG, before)
+
+
+def _job_ids(spark, action) -> list[int]:
+    """Spark job ids started by ``action``, read from the status tracker
+    under a fresh job group once the listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"readers-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "parquet schema resolution")
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_parquet_table_schema_matches_spark_inference(spark, sf_dir):
+    from data_integration_case_study_spark.sources.readers import (
+        read_parquet_table,
+    )
+
+    names = sorted(
+        f[: -len(".parquet")] for f in os.listdir(sf_dir) if f.endswith(".parquet")
+    )
+    assert len(names) == 10
+    for name in names:
+        got = read_parquet_table(spark, sf_dir, name)
+        want = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        assert type(got) is type(want)
+        assert got.schema == want.schema, name
+
+
+def test_read_events_schema_under_both_nanos_settings(
+    spark, sf_dir, tmp_path, nanos_as_long_restored
+):
+    """The harness ``events.parquet`` and a TIMESTAMP(NANOS) twin: the
+    footer schema is Spark's inferred one under either nanosAsLong
+    setting (both refuse NANOS when it is off), and ``read_events``
+    normalizes ``ts`` to a timestamp whatever the setting was before."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    from data_integration_case_study_spark.sources.readers import (
+        read_events,
+        read_parquet,
+    )
+
+    stamps = [datetime.datetime(2024, 1, 1, 12, 0, 0, 123456),
+              datetime.datetime(2024, 1, 2, 0, 0, 1)]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(stamps, pa.timestamp("ns")),
+            "value": pa.array([0.5, 1.5]),
+        }),
+        str(tmp_path / "events.parquet"),
+        version="2.6",
+    )
+    for d in (sf_dir, str(tmp_path)):
+        path = f"{d}/events.parquet"
+        for setting in ("true", "false"):
+            spark.conf.set(NANOS_AS_LONG, setting)
+            if d == str(tmp_path) and setting == "false":
+                for read in (spark.read.parquet, lambda p: read_parquet(spark, p)):
+                    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+                        read(path)
+            else:
+                want = spark.read.parquet(path).schema
+                assert read_parquet(spark, path).schema == want, (d, setting)
+
+            spark.conf.set(NANOS_AS_LONG, setting)
+            events = read_events(spark, d)
+            spark.conf.set(NANOS_AS_LONG, "true")
+            raw = spark.read.parquet(path).schema
+            assert [(f.name, f.dataType) for f in events.schema] == [
+                (f.name, TimestampType() if f.name == "ts" else f.dataType)
+                for f in raw
+            ], (d, setting)
+    got = [r["ts"] for r in read_events(spark, str(tmp_path)).orderBy("event_id").collect()]
+    assert got == stamps
+
+
+def test_single_file_read_starts_no_spark_job(spark, sf_dir):
+    from data_integration_case_study_spark.sources.readers import (
+        read_events,
+        read_parquet_table,
+    )
+
+    path = f"{sf_dir}/lineitem.parquet"
+    # control: Spark's own inference runs a job, and the probe sees it
+    assert _job_ids(spark, lambda: spark.read.parquet(path))
+    assert _job_ids(spark, lambda: read_parquet_table(spark, sf_dir, "lineitem")) == []
+    assert _job_ids(spark, lambda: read_events(spark, sf_dir)) == []
+
+
+def test_directory_and_glob_tables_keep_spark_inference(spark, sf_dir, tmp_path):
+    from data_integration_case_study_spark.sources.readers import (
+        read_parquet_table,
+    )
+
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    nation.write.parquet(f"{tmp_path}/plain/nation.parquet")
+    nation.write.partitionBy("n_regionkey").parquet(
+        f"{tmp_path}/partitioned/nation.parquet"
+    )
+    # a glob is not a file either: Spark expands it
+    for layout in ("plain", "partitioned", "pl*"):
+        got = read_parquet_table(spark, f"{tmp_path}/{layout}", "nation")
+        want = spark.read.parquet(f"{tmp_path}/{layout}/nation.parquet")
+        assert got.schema == want.schema, layout
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        ), layout
+
+
+def test_missing_table_raises_spark_path_error(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    from data_integration_case_study_spark.sources.readers import (
+        read_parquet_table,
+    )
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_parquet_table(spark, str(tmp_path), "nope")
+
+
+def test_missing_footer_class_raises(spark):
+    from data_integration_case_study_spark.sources.readers import _java_class
+
+    with pytest.raises(RuntimeError, match="does not provide"):
+        _java_class(spark._jvm, "org.apache.parquet.hadoop.NoSuchFooterReader")
+
+
+def test_plans_and_operators_never_read_parquet_directly():
+    """Every catalog read goes through sources.readers, whose single-file
+    path resolves the schema without a Spark job; a direct
+    ``<x>.read[...].parquet(...)`` in plans/ or operators/ would bring the
+    per-read inference job back."""
+    import ast
+    from pathlib import Path
+
+    import data_integration_case_study_spark as pkg
+
+    def reads_parquet(node: ast.AST) -> bool:
+        if not (isinstance(node, ast.Attribute) and node.attr == "parquet"):
+            return False
+        inner = node.value
+        while isinstance(inner, (ast.Attribute, ast.Call)):
+            if isinstance(inner, ast.Attribute) and inner.attr == "read":
+                return True
+            inner = inner.value if isinstance(inner, ast.Attribute) else inner.func
+        return False
+
+    root = Path(pkg.__file__).parent
+    files = sorted((root / "plans").rglob("*.py")) + sorted(
+        (root / "operators").rglob("*.py")
+    )
+    assert len(files) > 20
+    offenders = [
+        f"{f.relative_to(root)}:{node.lineno}"
+        for f in files
+        for node in ast.walk(ast.parse(f.read_text()))
+        if reads_parquet(node)
+    ]
+    assert offenders == []

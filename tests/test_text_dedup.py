@@ -394,3 +394,24 @@ def test_ngram_bitset_verify_matches_array_verify(spark):
     got_fast, got_slow = rows(fast), rows(slow)
     assert got_fast, "test must produce pairs"
     assert got_fast == got_slow
+
+
+def test_ngram_window_empty_vocabulary_returns_empty_frame(spark):
+    """Numeric token arrays that are all empty probe an empty vocabulary;
+    the window path must keep the array verify and return an empty frame
+    with its schema, not build a zero-word bitset (whose popcount sum is
+    an empty SQL expression)."""
+    df = spark.createDataFrame(
+        [(1, "a", []), (2, "a", []), (3, "b", [])],
+        "id long, blk string, toks array<long>",
+    )
+    out = dedup.ngram_jaccard_pairs(
+        df, "id", "t", "blk", threshold=0.3, n=1, tokens_col="toks",
+        block_window=4,
+    )
+    array_path = dedup.ngram_jaccard_pairs(
+        df, "id", "t", "blk", threshold=0.3, n=1, tokens_col="toks",
+        block_window=4, bitset_max_vocab=0,
+    )
+    assert out.collect() == []
+    assert out.schema == array_path.schema
