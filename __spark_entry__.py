@@ -8,7 +8,10 @@ value-hash). Query keys map to SURVEY.md §2 operator IDs.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Iterable, Mapping, Sequence
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,376 +43,38 @@ def entry(spark: SparkSession) -> DataFrame:
     return analytics.flagship_revenue_by_nation(spark, "/root/testdata/sf0.001")
 
 
-# The driver evaluates the FIRST len(DRIVER_WINDOW) keys of queries() (dict
-# insertion order). Round 11 ordering: ROTATION.md's derived r11 slice —
-# TAIL[0:50] as maintained at the r10 rotation, re-derived at this pin
-# with rule 1 applied to the round-11 code changes. Composition: THREE
-# rule-1 members at the head — fuzzy_name_pairs (the r10 post-pin
-# sort-merge spill, plus its shared _levenshtein2_pairs helper changed
-# again this round), er_clusters_blocked (round-10 verdict ask #4: the
-# block is now COMPOUND (nation, 14-char name-prefix-class) so
-# within-block occupancy stops growing with the corpus — the ANSWER
-# changes by blocking design, oracle mirrored), and spatial_grid_join
-# (advice #1: the occupancy frame now carries per-cell max |lat| so the
-# estimate-path band guard tests the exact extreme; physical frame
-# change rides under the same answer) — then the two names the r10
-# spatial members displaced (kmv/cms), then the round-4/5 blocks per
-# ROTATION.md. path_pattern_conversion + trend_daily_revenue shift
-# right to r12 (the plan shifts right; it never drops a name).
-# Pre-pin gates on round-11 code: strict --vanilla sf0.01 + tuned
-# sf0.1 sweeps of the 50 pinned names and a float census of all 50 at
-# both SFs (results in ROUND11_NOTES.md).
-DRIVER_WINDOW = [
-    # -- rule 1: round-11 code-changed --
-    "fuzzy_name_pairs",
-    "er_clusters_blocked",
-    "spatial_grid_join",
-    # -- rule 2: the two names the r10 rule-1 spatial members displaced --
-    "kmv_distinct_users",
-    "cms_heavy_users",
-    # -- rule 2: round-4 window block (oldest never-reproven vintage) --
-    "first_touch_attribution",
-    "set_similarity_exact",
-    "bm25_search",
-    "triangle_count_knn",
-    "knn_graph",
-    "knn_density_outliers",
-    "semantic_dedup",
-    "embedding_neardups_lsh",
-    "random_projection",
-    "ann_lsh_topk",
-    "ann_lsh_multiprobe",
-    "merge_upsert_orders",
-    "cdc_apply_changes_orders",
-    "paragraph_dedup",
-    "p_norm_phone",
-    "integration_entities",
-    "integration_relations",
-    "bpe_train_merges",
-    "bpe_encode_stats",
-    "tf_idf",
-    "vocab_overlap",
-    "minhash_lsh_neardups",
-    "cross_corpus_neardup",
-    "neardup_clusters",
-    # -- rule 2: round-5 window block head --
-    "jsd_sources",
-    "burrows_delta_sources",
-    "hill_tail_index",
-    "hits_knn",
-    "kcore_copurchase",
-    "personalized_pagerank_knn",
-    "logreg_quality_irls",
-    "als_rank2_copurchase",
-    "grid_dbscan_clusters",
-    "rfm_segments",
-    "chi2_priority_status",
-    "welch_t_test_events",
-    "ewma_daily_revenue",
-    "basket_association_rules",
-    "winnowing_doc_fingerprints",
-    "link_prediction_knn",
-    "top_terms_per_doc",
-    "seasonal_anomaly_daily",
-    "ivm_orders_by_status",
-    "golden_record_customers",
-    "benford_price_audit",]
+# The correctness check hash-compares only the first WINDOW keys of
+# queries().
+WINDOW = 50
 
-TAIL = [
-    # ---- round-5 window proven remainder: the two names the r11
-    # rule-1 members (er_clusters_blocked, spatial_grid_join) displaced
-    # (ROTATION.md: the plan shifts right, it never drops a name) —
-    # next in line for r12 ----
-    "path_pattern_conversion",
-    "trend_daily_revenue",
-    "corr_matrix_lineitem",
-    "sketch_profile_orders",
-    "winnowing_overlap_pairs",
-    "changepoint_scan_daily",
-    "seasonal_naive_backtest",
-    "bigram_collocations",
-    "hll_distinct_report",
-    "degree_assortativity_knn",
-    "phrase_search_postings",
-    "mmr_diverse_selection",
-    "fs_em_fit",
-    "scd2_point_in_time",
-    "weighted_bernoulli_sample",
-    "clustering_coefficient_knn",
-    "cluster_size_distribution",
-    "zipf_fit_terms",
-    "psi_drift_by_type",
-    "top_event_trigrams",
-    # ---- round-6 window proven (all 50 green in CORRECTNESS_r06.json) ----
-    "log_odds_tokens",
-    "good_turing_mass",
-    "mcnemar_halves",
-    "key_skew_report",
-    "bloom_filter_pruning",
-    "mann_whitney_events",
-    "event_precedence_counts",
-    "range_join_ship_weeks",
-    "survival_km_conversion",
-    "entropy_census",
-    "kmv_set_ops_users",
-    "ams_f2_events",
-    "quality_threshold_curve",
-    "heaps_law_fit",
-    "fd_discovery",
-    "join_size_estimate",
-    "roc_auc_quality",
-    "k_anonymity_census",
-    "shapley_attribution",
-    "mutual_information_pairs",
-    "capture_recapture_docs",
-    "lift_curve_lm",
-    "seq_pattern_support",
-    "two_proportion_test",
-    "readability_by_source",
-    "reconciliation_totals",
-    "lang_confusion_matrix",
-    "kruskal_wallis_priority",
-    "fk_integrity_audit",
-    "er_blocking_quality",
-    "audience_bitmask_census",
-    "inter_event_latency_quantiles",
-    "acf_daily_revenue",
-    "bootstrap_ci_revenue",
-    "item_item_cosine",
-    "containment_pairs",
-    "embedding_drift_by_label",
-    "weighted_reservoir_sample",
-    "order_day_streaks",
-    "spearman_price_items",
-    "anova_f_priority",
-    "ccf_revenue_signups",
-    "theil_sen_trend",
-    "ind_discovery",
-    "trimmed_mean_orders",
-    "neyman_allocation",
-    "harmonic_centrality_3hop",
-    # ---- round-7 window proven (all 50 green in CORRECTNESS_r07.json) ----
-    "neardup_eval",
-    "ann_recall_at_k",
-    "negative_sampling_pairs",
-    "hard_negatives_knn",
-    "brown_forsythe_priority",
-    "jarque_bera_daily",
-    "kendall_tau_daily",
-    "durbin_watson_monthly",
-    "cusum_daily_revenue",
-    "seasonal_decompose_daily",
-    "calibration_bins_quality",
-    "dp_noisy_counts",
-    "phonetic_blocking_pairs",
-    "cuped_adjustment",
-    "isotonic_calibration",
-    "permutation_fdr_nations",
-    "ipf_raking",
-    "motif_discovery_daily",
-    "simpsons_paradox_scan",
-    "payload_byte_entropy",
-    "column_type_inference",
-    "pca_top_component",
-    "markov_attribution",
-    "rake_keyphrases",
-    "conformal_backtest_daily",
-    "hbos_outliers",
-    "textrank_keywords",
-    "journey_similarity_pairs",
-    "lof_outliers",
-    "log_rank_conversion",
-    "ar1_forecast_backtest",
-    "overdispersion_events",
-    "g_test_independence",
-    "schema_matching_scores",
-    "approx_fd_strength",
-    "rec_hitrate_eval",
-    "modularity_knn_labels",
-    "evt_gumbel_daily",
-    "dickey_fuller_daily",
-    "burstiness_interevent",
-    "duplicate_payment_flags",
-    "abc_analysis_parts",
-    "woe_iv_quality",
-    "decision_stump_quality",
-    "silhouette_labels",
-    "adjusted_rand_kmeans_labels",
-    "average_precision_quality",
-    "lorenz_curve_deciles",
-    "cochran_armitage_trend",
-    # ---- round-8 window proven (all 50 green in CORRECTNESS_r08.json;
-    # the outgoing r8 window, appended at rotation per the ROTATION.md
-    # rounds-9+ policy so TAIL stays sorted by proof vintage) ----
-    "ljung_box_daily",
-    "uplift_by_segment",
-    "periodogram_daily",
-    "hurst_rs_daily",
-    "price_elasticity_parts",
-    "quantile_normalize_sources",
-    "granger_signups_revenue",
-    "order_velocity_flags",
-    "cohort_ltv_matrix",
-    "markov_entropy_rate",
-    "weibull_fit_conversion",
-    "bass_diffusion_fit",
-    "control_chart_daily",
-    "dau_wau_mau",
-    "frequent_triples",
-    "price_volume_mix",
-    "rocchio_expansion",
-    "bounce_rate_daily",
-    "empirical_bayes_returns",
-    "geometric_median_embeddings",
-    "stratified_ate",
-    "rec_catalog_coverage",
-    "quota_apportionment_sources",
-    "wilson_ci_segments",
-    "icc_design_effect",
-    "fs_match_scores",
-    "null_safe_join_counts",
-    "o1_seeded_sample",
-    "p1_positional_rename",
-    "t_dates_roundtrip",
-    "f4_entity_type",
-    "f5_code_map",
-    "d1_surrogate_key",
-    "setops_intersect",
-    "setops_except",
-    "a5_duplicate_keys",
-    "window_lag_running_total",
-    "topk_orders",
-    "cube_status_priority",
-    "q14_promo_revenue",
-    "q16_supplier_parts",
-    "q4_order_priority",
-    "q18_large_orders",
-    "a1_null_profile",
-    "a2_row_count",
-    "a3_distinct_values",
-    "a4_count_flagged",
-    "doc_fingerprints",
-    "json_extract_props",
-    "term_frequency",
-    # ---- round-9 window proven (all 50 green in CORRECTNESS_r09.json;
-    # the outgoing r9 window appended at rotation per the ROTATION.md
-    # rounds-9+ policy so TAIL stays sorted by proof vintage —
-    # spatial_grid_join / spatial_knn_join excepted: round-10 code
-    # changes put them back in the r10 window under rule 1) ----
+# Queries whose code changed since their last green CORRECTNESS row; they
+# lead the window until a record proves them (ROTATION.md rule 1).
+MUST_PROVE = (
+    # r11 oracle edit + r12 bitset verify; r12 markov fold; r12 batch decoder
     "ngram_jaccard_neardups",
-    "neardup_method_agreement",
-    "embedding_neardups",
-    "pack_sequences",
-    "trailing_7d_user_spend",
-    "exact_dedup_documents",
-    "simhash_neardups",
-    "cosine_topk",
-    "label_centroids",
-    "multimodal_metadata",
-    "multimodal_frame_sample",
-    "pivot_event_counts",
-    "quantiles_by_segment",
-    "grouping_sets_revenue",
-    "global_sorted_orders",
-    "scalar_subquery_above_avg",
-    "string_agg_nations",
-    "salted_agg_status",
-    "salted_join_revenue",
-    "range_count_prefix_sum",
-    "flagship_revenue_by_nation",
-    "conversion_funnel",
-    "unpivot_event_counts",
-    "doc_chunking",
-    "train_val_test_split",
-    "stratified_sample",
-    "bigram_counts",
-    "pii_redaction",
-    "q12_shipmode_priority",
-    "lang_source_stats",
-    "profile_report_customer",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "rollup_revenue",
-    "tumbling_hourly",
-    "session_windows_4h",
-    "asof_click_purchase",
-    "window_rank_orders",
-    "quality_scores",
-    "lang_id_heuristic",
-    "j2_semi_join",
-    "d3_first_wins_dedup",
-    "quality_classifier",
-    "event_type_markov",
-    "heavy_hitter_users",
-    "bpe_token_stats",
-    "multimodal_resize",
-    # ---- round-10 window proven (all 50 green in CORRECTNESS_r10.json;
-    # the outgoing r10 window appended at rotation per the ROTATION.md
-    # rounds-9+ policy so TAIL stays sorted by proof vintage —
-    # er_clusters_blocked / spatial_grid_join excepted: round-11 code
-    # changes put them back in the r11 window under rule 1) ----
-    "multimodal_ahash_neardups",
-    "multimodal_phash_neardups",
-    "spatial_knn_join",
-    "snapshot_diff_orders",
+    "markov_attribution",
     "multimodal_features",
-    "ivf_topk",
-    "kmeans_centroids",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q17_small_quantity",
-    "q19_discounted_revenue",
-    "q20_part_promotion",
-    "q21_waiting_suppliers",
-    "q22_sales_opportunity",
-    "repetition_filters",
-    "ngram_decontamination",
-    "bigram_doc_scores",
-    "pq_topk",
-    "shuffle_shards",
-    "source_mixture_weights",
-    "corpus_retention_funnel",
-    "ivf_pq_topk",
-    "gap_fill_hourly",
-    "cohort_retention",
-    "knn_label_propagation",
-    "ks_drift_by_type",
-    "sliding_hourly",
-    "interval_join_quarters",
-    "q2_best_supplier",
-    "text_token_stats",
-    "left_outer_order_counts",
-    "two_hop_relations",
-    "j_anti_join",
-    "q6_forecast_revenue",
-    "scd2_orders",
-    "stats_profile_lineitem",
+    # r11 soft-witness backlog (VERDICT.md "Next round" item 1)
+    "multimodal_phash_neardups",
+    "simhash_neardups",
+    "neardup_method_agreement",
+    "neardup_eval",
+    "motif_discovery_daily",
+    "harmonic_centrality_3hop",
     "pagerank_knn",
-    "decile_rank_orders",
-    "mad_outliers_orders",
-    "sorted_neighborhood_matches",
-    "histogram_quantiles_orders",
-    "pareto_frontier_orders",
-    "dq_expectations_orders",]
-
-_QUERY_ORDER = DRIVER_WINDOW + TAIL
-
-if len(DRIVER_WINDOW) != 50:
-    raise RuntimeError(
-        f"driver window must be exactly 50 queries, got {len(DRIVER_WINDOW)}"
-    )
+    "textrank_keywords",
+    "multimodal_resize",
+    "multimodal_ahash_neardups",
+    "rec_hitrate_eval",
+    "schema_matching_scores",
+    "kmeans_centroids",
+    "cluster_size_distribution",
+)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, in the
-    explicit driver-window order above."""
-    merged = {
+def _catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every query, in catalog merge order."""
+    return {
         "flagship_revenue_by_nation": analytics.flagship_revenue_by_nation,
         **analysis_queries.QUERIES,
         **reference_queries.QUERIES,
@@ -429,14 +94,72 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         **tsa_queries.QUERIES,
         **diagnostics_queries.QUERIES,
     }
-    if set(merged) != set(_QUERY_ORDER):
-        # explicit raise (not assert): the driver-window contract must
-        # survive `python -O`
+
+
+def _is_proof(row: dict) -> bool:
+    return not row.get("err") and all(
+        row.get(k) for k in ("rows_match", "schema_match", "hash_match")
+    )
+
+
+def query_order(
+    names: Iterable[str],
+    records: Mapping[int, Mapping[str, dict]],
+    must_prove: Sequence[str],
+) -> list[str]:
+    """The rotation policy (ROTATION.md) as a sort: ``must_prove`` first,
+    then every other name oldest proof first.
+
+    ``records`` maps a round number to that round's CORRECTNESS record
+    (query name -> row, in the order it was checked). A row proves its query
+    when ``err`` is unset and rows, schema and hash all match. A name's
+    key is (round, position in that round's record) of its LAST proving
+    row, so a red latest row falls back to the older green one. Names
+    never proven sort first, in catalog order (``names`` order).
+
+    Raises RuntimeError (not assert: must survive ``python -O``) when
+    ``must_prove`` names an unknown query, repeats one, or would not fit
+    in the window.
+    """
+    names = list(names)
+    unknown = [n for n in must_prove if n not in names]
+    if unknown or len(set(must_prove)) != len(must_prove) \
+            or len(must_prove) > WINDOW:
         raise RuntimeError(
-            "catalog/_QUERY_ORDER mismatch: "
-            f"{sorted(set(merged) ^ set(_QUERY_ORDER))}"
+            f"MUST_PROVE must be at most {WINDOW} distinct catalog names; "
+            f"unknown={unknown}, got {list(must_prove)}"
         )
-    return {k: merged[k] for k in _QUERY_ORDER}
+    proof = {}
+    for rnd in sorted(records):
+        for pos, (name, row) in enumerate(records[rnd].items()):
+            if _is_proof(row):
+                proof[name] = (rnd, pos)
+    rest = [n for n in names if n not in must_prove]
+    # sorted() is stable: never-proven names keep their catalog order
+    return [*must_prove, *sorted(rest, key=lambda n: proof.get(n, (-1, 0)))]
+
+
+def _correctness_records(here: Path) -> dict[int, dict]:
+    out = {}
+    for p in here.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
+        if m:
+            out[int(m.group(1))] = json.loads(p.read_text())
+    return out
+
+
+_ORDER = query_order(
+    _catalog(), _correctness_records(Path(__file__).resolve().parent),
+    MUST_PROVE,
+)
+DRIVER_WINDOW = _ORDER[:WINDOW]
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """One entry per implemented operator from SURVEY.md §2, in
+    ``query_order`` (the first WINDOW keys are the checked window)."""
+    catalog = _catalog()
+    return {k: catalog[k] for k in _ORDER}
 
 
 def oracle_sql() -> dict[str, str]:

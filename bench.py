@@ -60,346 +60,10 @@ HEADLINE = [
     "tf_idf",
 ]
 
-# Round-2 additions, timed separately so HEADLINE's round-over-round
-# deltas stay comparable; reported under "extra" in the same JSON line.
-# PINNED since round 2 with a 1.5x per-query regression guard vs the
-# previous round's BENCH_r{N}.json (checked at round end; rationale for
-# any excursion goes in the commit that causes it). Known round-3
-# excursions: (1) fuzzy_name_pairs changed semantics from a 1/50 block
-# sample to the complete distance-2 pair set (~12x more answer rows), so
-# its r2 timing is not comparable. (2) neardup_clusters' r2 number was
-# flattered by cache leakage - before the per-query clearCache landed
-# (round 3), it inherited minhash_lsh_neardups' persisted per-doc summary
-# from the previous timing slot; isolated it pays for its own MinHash
-# pass (~3.5s of its ~5.4s; the label-propagation rounds are ~1.7s).
-EXTRA = [
-    "doc_chunking",
-    "pack_sequences",
-    "pii_redaction",
-    "neardup_clusters",
-    "ann_lsh_multiprobe",
-    "merge_upsert_orders",
-    "fuzzy_name_pairs",
-    "trailing_7d_user_spend",
-]
 
-# Round-3 additions, same one-round-late pinning discipline.
-EXTRA_R3 = [
-    "kmeans_centroids",
-    "pq_topk",
-    "repetition_filters",
-    "ngram_decontamination",
-    "bigram_doc_scores",
-    "shuffle_shards",
-    "source_mixture_weights",
-    "semantic_dedup",
-    "corpus_retention_funnel",
-    "ivf_pq_topk",
-    # late-round-3 batch (corpus curation / vectors / events)
-    "paragraph_dedup",
-    "cross_corpus_neardup",
-    "quality_classifier",
-    "vocab_overlap",
-    "random_projection",
-    "knn_graph",
-    "event_type_markov",
-    "heavy_hitter_users",
-    "bpe_token_stats",
-    "multimodal_resize",
-    "cdc_apply_changes_orders",
-    "snapshot_diff_orders",
-    "knn_density_outliers",
-    "bpe_train_merges",
-    "bpe_encode_stats",
-    "knn_label_propagation",
-    "gap_fill_hourly",
-    "cohort_retention",
-    "ks_drift_by_type",
-]
-
-# Round-4 additions (warehouse / sketch / search / graph batch), same
-# one-round-late pinning discipline.
-EXTRA_R4 = [
-    "scd2_orders",
-    "dq_expectations_orders",
-    "kmv_distinct_users",
-    "cms_heavy_users",
-    "first_touch_attribution",
-    "set_similarity_exact",
-    "bm25_search",
-    "triangle_count_knn",
-    "er_clusters_blocked",
-    "pagerank_knn",
-    "stats_profile_lineitem",
-    "decile_rank_orders",
-    "mad_outliers_orders",
-    "sorted_neighborhood_matches",
-    "histogram_quantiles_orders",
-    "fs_match_scores",
-    "pareto_frontier_orders",
-    # late-round-4 mining/statistics batch
-    "rfm_segments",
-    "chi2_priority_status",
-    "welch_t_test_events",
-    "ewma_daily_revenue",
-    "key_skew_report",
-    "basket_association_rules",
-    "bloom_filter_pruning",
-    "winnowing_doc_fingerprints",
-    "link_prediction_knn",
-    "top_terms_per_doc",
-    "seasonal_anomaly_daily",
-    "ivm_orders_by_status",
-    "golden_record_customers",
-    "mann_whitney_events",
-    "benford_price_audit",
-    "path_pattern_conversion",
-    "trend_daily_revenue",
-    "corr_matrix_lineitem",
-    "sketch_profile_orders",
-    "multimodal_ahash_neardups",
-    "winnowing_overlap_pairs",
-    "event_precedence_counts",
-    # continuation batch (statistics / sketches / IR / vectors / linkage)
-    "changepoint_scan_daily",
-    "seasonal_naive_backtest",
-    "bigram_collocations",
-    "hll_distinct_report",
-    "degree_assortativity_knn",
-    "phrase_search_postings",
-    "mmr_diverse_selection",
-    "fs_em_fit",
-    "scd2_point_in_time",
-    "weighted_bernoulli_sample",
-    "clustering_coefficient_knn",
-    "cluster_size_distribution",
-    "zipf_fit_terms",
-    "psi_drift_by_type",
-    "top_event_trigrams",
-    "fk_integrity_audit",
-    "er_blocking_quality",
-    "spatial_grid_join",
-    "audience_bitmask_census",
-    "inter_event_latency_quantiles",
-    # statistics-continuation batch
-    "survival_km_conversion",
-    "acf_daily_revenue",
-    "bootstrap_ci_revenue",
-    "item_item_cosine",
-    "entropy_census",
-    "kmv_set_ops_users",
-    "ams_f2_events",
-    "containment_pairs",
-    "kcore_copurchase",
-    "quality_threshold_curve",
-    "embedding_drift_by_label",
-    "weighted_reservoir_sample",
-    "heaps_law_fit",
-    "fd_discovery",
-    "order_day_streaks",
-    "join_size_estimate",
-    # analysis batch 2
-    "spearman_price_items",
-    "anova_f_priority",
-    "ccf_revenue_signups",
-    "theil_sen_trend",
-    "ind_discovery",
-    "roc_auc_quality",
-    "k_anonymity_census",
-    "shapley_attribution",
-    "mutual_information_pairs",
-    "trimmed_mean_orders",
-    "neyman_allocation",
-    "capture_recapture_docs",
-    "harmonic_centrality_3hop",
-    "lift_curve_lm",
-    "seq_pattern_support",
-    "two_proportion_test",
-    "readability_by_source",
-    "reconciliation_totals",
-    "neardup_eval",
-    "ann_recall_at_k",
-    "lang_confusion_matrix",
-    "negative_sampling_pairs",
-    "hard_negatives_knn",
-    # time-series & distribution diagnostics batch
-    "kruskal_wallis_priority",
-    "brown_forsythe_priority",
-    "jarque_bera_daily",
-    "kendall_tau_daily",
-    "durbin_watson_monthly",
-    "cusum_daily_revenue",
-    "seasonal_decompose_daily",
-    "multimodal_phash_neardups",
-    "calibration_bins_quality",
-    "dp_noisy_counts",
-    "personalized_pagerank_knn",
-    "phonetic_blocking_pairs",
-    "logreg_quality_irls",
-    "als_rank2_copurchase",
-    "cuped_adjustment",
-    "grid_dbscan_clusters",
-    # diagnostics batch (continuation session 7)
-    "hits_knn",
-    "isotonic_calibration",
-    "permutation_fdr_nations",
-    "ipf_raking",
-    "motif_discovery_daily",
-    "simpsons_paradox_scan",
-    "payload_byte_entropy",
-    "column_type_inference",
-    "pca_top_component",
-    "markov_attribution",
-    "rake_keyphrases",
-    "conformal_backtest_daily",
-    "hbos_outliers",
-    "textrank_keywords",
-    "journey_similarity_pairs",
-    # inference & evaluation batch (continuation session 8)
-    "lof_outliers",
-    "log_rank_conversion",
-    "ar1_forecast_backtest",
-    "overdispersion_events",
-    "g_test_independence",
-    "schema_matching_scores",
-    "approx_fd_strength",
-    "rec_hitrate_eval",
-    "modularity_knn_labels",
-    "evt_gumbel_daily",
-    "dickey_fuller_daily",
-    "burstiness_interevent",
-    "duplicate_payment_flags",
-    "abc_analysis_parts",
-    "woe_iv_quality",
-    "decision_stump_quality",
-    "silhouette_labels",
-    "adjusted_rand_kmeans_labels",
-    "average_precision_quality",
-    "lorenz_curve_deciles",
-    "cochran_armitage_trend",
-    "mcnemar_halves",
-    "ljung_box_daily",
-    "uplift_by_segment",
-    "periodogram_daily",
-    "hurst_rs_daily",
-    "jsd_sources",
-    "price_elasticity_parts",
-    "quantile_normalize_sources",
-    "log_odds_tokens",
-    "granger_signups_revenue",
-    "order_velocity_flags",
-    "good_turing_mass",
-    "cohort_ltv_matrix",
-    "markov_entropy_rate",
-    "weibull_fit_conversion",
-    "neardup_method_agreement",
-    "bass_diffusion_fit",
-    "control_chart_daily",
-    "burrows_delta_sources",
-    "dau_wau_mau",
-    "frequent_triples",
-    "price_volume_mix",
-    "rocchio_expansion",
-    "hill_tail_index",
-    "bounce_rate_daily",
-    "empirical_bayes_returns",
-    "geometric_median_embeddings",
-    "stratified_ate",
-    "rec_catalog_coverage",
-    "quota_apportionment_sources",
-    "wilson_ci_segments",
-    "icc_design_effect",
-]
-
-# Round-5 additions: the 77 catalog queries that had no timing row through
-# round 4 (r1/r2-era micro-queries, the 19 TPC-H extras q2-q22, and the
-# post-bench round-3 batch). With this list, every catalog query has a
-# timing row in BENCH_r{N}_local.json. Mostly sub-second scan shapes.
-EXTRA_R5 = [
-    "sliding_hourly",
-    "interval_join_quarters",
-    "q2_best_supplier",
-    "text_token_stats",
-    "left_outer_order_counts",
-    "two_hop_relations",
-    "j_anti_join",
-    "q6_forecast_revenue",
-    "embedding_neardups_lsh",
-    "ann_lsh_topk",
-    "integration_relations",
-    "o1_seeded_sample",
-    "p1_positional_rename",
-    "t_dates_roundtrip",
-    "f4_entity_type",
-    "f5_code_map",
-    "d1_surrogate_key",
-    "setops_intersect",
-    "setops_except",
-    "a5_duplicate_keys",
-    "window_lag_running_total",
-    "topk_orders",
-    "cube_status_priority",
-    "q14_promo_revenue",
-    "q16_supplier_parts",
-    "q4_order_priority",
-    "q18_large_orders",
-    "a1_null_profile",
-    "a2_row_count",
-    "a3_distinct_values",
-    "a4_count_flagged",
-    "doc_fingerprints",
-    "json_extract_props",
-    "ngram_jaccard_neardups",
-    "simhash_neardups",
-    "embedding_neardups",
-    "label_centroids",
-    "multimodal_metadata",
-    "multimodal_frame_sample",
-    "pivot_event_counts",
-    "quantiles_by_segment",
-    "grouping_sets_revenue",
-    "global_sorted_orders",
-    "scalar_subquery_above_avg",
-    "string_agg_nations",
-    "salted_agg_status",
-    "salted_join_revenue",
-    "range_join_ship_weeks",
-    "null_safe_join_counts",
-    "conversion_funnel",
-    "unpivot_event_counts",
-    "train_val_test_split",
-    "stratified_sample",
-    "bigram_counts",
-    "q12_shipmode_priority",
-    "lang_source_stats",
-    "profile_report_customer",
-    "rollup_revenue",
-    "tumbling_hourly",
-    "quality_scores",
-    "lang_id_heuristic",
-    "j2_semi_join",
-    "d3_first_wins_dedup",
-    "multimodal_features",
-    "ivf_topk",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q17_small_quantity",
-    "q19_discounted_revenue",
-    "q20_part_promotion",
-    "q21_waiting_suppliers",
-    "q22_sales_opportunity",
-]
-
-# Round-8 addition (catalog freeze lifted at 286 proven): the spatial
-# family's bounded-output scale path.
-EXTRA_R8 = [
-    "spatial_knn_join",
-]
+class UnknownHeadlineQueryError(LookupError):
+    """A HEADLINE name is not in the catalog: the headline total would
+    silently cover fewer queries."""
 
 
 def _fingerprint_cpus() -> int:
@@ -730,13 +394,17 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from data_integration_case_study_spark.session import get_spark
 
+    qs = entrymod.queries()
+    missing = [n for n in HEADLINE if n not in qs]
+    if missing:
+        raise UnknownHeadlineQueryError(
+            f"HEADLINE names not in queries(): {missing}")
+
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
-    names = [n for n in HEADLINE if n in qs]
 
     # warm the JVM + parquet footers once so we measure query exec, not init
-    qs[names[0]](spark, sf_dir).limit(1).collect()
+    qs[HEADLINE[0]](spark, sf_dir).limit(1).collect()
 
     # per-query 1m load samples, one per timed run (gate/remeasure reruns
     # append to the same list) — feeds the variance summary (ask #5)
@@ -762,21 +430,17 @@ def main() -> None:
         return gate_first_pass(run(name), gate_was.get(name),
                                lambda: run(name))
 
-    timings = {name: grun(name) for name in names}
-    extra = {name: grun(name) for name in EXTRA if name in qs}
-    extra_r3 = {name: grun(name) for name in EXTRA_R3 if name in qs}
-    extra_r4 = {name: grun(name) for name in EXTRA_R4 if name in qs}
-    extra_r5 = {name: grun(name) for name in EXTRA_R5 if name in qs}
-    extra_r8 = {name: grun(name) for name in EXTRA_R8 if name in qs}
+    timings = {name: grun(name) for name in HEADLINE}
+    # every other catalog query, in queries() order
+    extras = {name: grun(name) for name in qs if name not in HEADLINE}
 
     total = round(sum(timings.values()), 3)
-    extras = {**extra, **extra_r3, **extra_r4, **extra_r5, **extra_r8}
     env = _env_fingerprint()  # one snapshot, shared by both outputs
     regress = _regressions({**timings, **extras},
                            Path(__file__).resolve().parent, sf_val,
                            remeasure=run, loads=load_samples)
     variance = _variance_summary({**timings, **extras}, gate_was,
-                                 names, load_samples)
+                                 HEADLINE, load_samples)
 
     # Full per-query detail goes to a sidecar file (the driver's stdout
     # capture keeps only a tail; see module docstring).
@@ -786,12 +450,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "extra": extra,
-        "extra_total": round(sum(extra.values()), 3),
-        "extra_r3": extra_r3,
-        "extra_r4": extra_r4,
-        "extra_r5": extra_r5,
-        "extra_r8": extra_r8,
+        "extra": extras,
         "extras_total": round(sum(extras.values()), 3),
         "sf": sf_val,
         "env": env,

@@ -8,8 +8,9 @@ reset_session_state), then measures
     actions a query runs while building),
   - exec_s: the noop-sink wall (guide §1.4 — computes every column of
     every row, ships nothing to the driver),
-and optionally writes `.explain("formatted")` to plans/r12/<name>_<tag>.txt
-so plan claims are checkable without running Spark.
+and optionally writes `.explain("formatted")` to
+.perfbench/plans/<name>_<tag>.txt (gitignored) so plan claims are
+checkable without running Spark.
 
 Usage:
   python scripts/profile_queries.py NAME [NAME...] [--explain TAG] [--reps N]
@@ -41,20 +42,12 @@ def newest_sidecar() -> dict:
     return json.loads(best[1].read_text()) if best else {}
 
 
-def merged_timings(sidecar: dict) -> dict:
-    out = {}
-    for k, v in sidecar.items():
-        if isinstance(v, dict) and (k == "queries" or k.startswith("extra")):
-            out.update(v)
-    return out
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
     ap.add_argument("--top", type=int, default=0)
     ap.add_argument("--explain", default=None,
-                    help="write plans/r12/<name>_<TAG>.txt explain dumps")
+                    help="write .perfbench/plans/<name>_<TAG>.txt explain dumps")
     ap.add_argument("--reps", type=int, default=1)
     ap.add_argument("--json-out", default=None)
     args = ap.parse_args()
@@ -62,7 +55,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as entrymod
-    from bench import reset_session_state
+    from bench import _merge_timing_sections, reset_session_state
     from data_integration_case_study_spark.session import get_spark
 
     spark = get_spark("profile")
@@ -71,7 +64,7 @@ def main() -> None:
 
     names = list(args.names)
     if args.top:
-        t = merged_timings(newest_sidecar())
+        t = _merge_timing_sections(newest_sidecar())
         names += [n for n, _ in sorted(t.items(), key=lambda kv: -kv[1])[: args.top]
                   if n not in names]
     if not names:
@@ -80,7 +73,7 @@ def main() -> None:
     # warm JVM + parquet footers outside any timing
     next(iter(qs.values()))(spark, sf_dir).limit(1).collect()
 
-    plans_dir = HERE / "plans" / "r12"
+    plans_dir = HERE / ".perfbench" / "plans"
     if args.explain:
         plans_dir.mkdir(parents=True, exist_ok=True)
 

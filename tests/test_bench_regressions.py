@@ -7,6 +7,8 @@ from __future__ import annotations
 import json
 import math
 
+import pytest
+
 import bench
 from scripts.float_census import census
 
@@ -306,3 +308,15 @@ def test_fingerprint_cpus_malformed_falls_back_to_cpu_count(monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "four")
     assert bench._fingerprint_cpus() == multiprocessing.cpu_count()
+
+
+def test_main_raises_on_headline_name_missing_from_catalog(monkeypatch):
+    # a renamed headline query must not shrink the 15-query total silently;
+    # the check runs before any Spark session starts
+    from data_integration_case_study_spark import session
+
+    monkeypatch.setattr(bench, "HEADLINE", bench.HEADLINE + ["no_such_query"])
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: pytest.fail(
+        "Spark started before the headline check"))
+    with pytest.raises(bench.UnknownHeadlineQueryError, match="no_such_query"):
+        bench.main()

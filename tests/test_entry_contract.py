@@ -1,60 +1,44 @@
 """Driver-contract invariants: the correctness window is exactly what we
 think it is (the round-1 lesson: the driver checks only the FIRST 50 keys
-of queries(), silently).
-
-The window is a Python-level constant (``DRIVER_WINDOW``) rather than a
-parsed source-comment label, so reformatting cannot silently skew the
-check (round-2 advice)."""
+of queries(), silently), and ``query_order`` implements the rotation
+policy in ROTATION.md."""
 
 from __future__ import annotations
+
+import pytest
 
 import __spark_entry__ as m
 
 WINDOW = 50
 
-# Queries whose RESULTS have no driver row from the current code: never
-# driver-proven, brand new this round, or code-path-changed this round.
-# These MUST sit inside the checked window until a fresh green row
-# exists. (Everything else in the catalog holds a green row from its most
-# recent window appearance; the full --vanilla sf0.01 sweep re-validates
-# those locally with the driver's own comparator each round.)
-# EXCEPTION (round-4 verdict, structural): 165 queries landed in round 4
-# against a 50-slot window, so the never-proven backlog rotates through
-# per ROTATION.md (r6 is this round; r7/r8 finish it).
-# ROUND 11: the window is ROTATION.md's derived r11 slice — TAIL[0:50]
-# as maintained at the r10 rotation, re-derived at the pin with rule 1
-# applied to round-11 code changes. MUST_PROVE: fuzzy_name_pairs (the
-# r10 post-pin sort-merge spill, and the shared _levenshtein2_pairs
-# helper changed again this round for multi-column blocks),
-# er_clusters_blocked (verdict ask #4: compound (nation, prefix-class)
-# block — answer changes by blocking design, oracle mirrored), and
-# spatial_grid_join (advice #1: occupancy frame carries per-cell max
-# |lat| for the exact-extreme band guard). The 47 rule-2 names (kmv/cms
-# + the round-4/5 blocks) fill the remaining re-proof slots (not
-# MUST_PROVE — their green rows are merely oldest-vintage).
-MUST_PROVE = [
-    # changed-code rule (round-11: shared ER helper + compound block +
-    # occupancy-frame band guard)
-    "fuzzy_name_pairs", "er_clusters_blocked", "spatial_grid_join",
-]
+
+def _row(green: bool = True, err: str | None = None) -> dict:
+    return {"rows_match": True, "schema_match": True, "hash_match": green,
+            "spark_rows": 1, "oracle_rows": 1, "err": err}
 
 
 def test_driver_window_is_exactly_50():
-    assert len(m.DRIVER_WINDOW) == WINDOW
+    assert m.WINDOW == WINDOW
+    assert list(m.queries())[:WINDOW] == m.DRIVER_WINDOW
     assert len(set(m.DRIVER_WINDOW)) == WINDOW
-    assert not set(m.DRIVER_WINDOW) & set(m.TAIL)
-
-
-def test_queries_order_matches_window_constant():
-    qs = list(m.queries())
-    assert qs[:WINDOW] == m.DRIVER_WINDOW
-    assert qs[WINDOW:] == m.TAIL
 
 
 def test_unproven_queries_sit_inside_window():
-    qs = list(m.queries())
-    outside = [n for n in MUST_PROVE if qs.index(n) >= WINDOW]
-    assert not outside, outside
+    assert m.DRIVER_WINDOW[:len(m.MUST_PROVE)] == list(m.MUST_PROVE)
+
+
+def test_window_fills_with_oldest_proofs_after_must_prove():
+    records = m._correctness_records(m.Path(m.__file__).resolve().parent)
+    oldest = [n for n in m.query_order(m._catalog(), records, ())
+              if n not in m.MUST_PROVE]
+    n = len(m.MUST_PROVE)
+    assert list(m.queries())[n:WINDOW] == oldest[:WINDOW - n]
+
+
+def test_headline_is_in_catalog():
+    import bench
+
+    assert set(bench.HEADLINE) <= set(m.queries())
 
 
 def test_window_oracle_coverage():
@@ -65,16 +49,39 @@ def test_window_oracle_coverage():
     assert rows_only == [], rows_only
 
 
-def test_bench_lists_cover_catalog_exactly():
-    """Round-4 verdict ask #3: every catalog query has a timing row.
+def test_order_never_proven_first_in_catalog_order():
+    records = {3: {"b": _row()}}
+    assert m.query_order(["x", "b", "a"], records, ()) == ["x", "a", "b"]
 
-    bench.py's pinned lists must partition the catalog — no missing
-    names, no dupes, no stale names after a rotation."""
-    import bench
 
-    lists = [bench.HEADLINE, bench.EXTRA, bench.EXTRA_R3, bench.EXTRA_R4,
-             bench.EXTRA_R5, bench.EXTRA_R8]
-    names = [n for lst in lists for n in lst]
-    assert len(names) == len(set(names)), "duplicate names across bench lists"
-    catalog = set(m.DRIVER_WINDOW) | set(m.TAIL)
-    assert set(names) == catalog, sorted(set(names) ^ catalog)
+def test_order_red_latest_row_falls_back_to_older_green_round():
+    records = {
+        1: {"a": _row(), "c": _row()},
+        2: {"b": _row()},
+        3: {"a": _row(green=False)},
+        4: {"c": _row(err="boom")},
+    }
+    # a and c keep their round-1 proofs; b was last proven in round 2
+    assert m.query_order(["c", "b", "a"], records, ()) == ["a", "c", "b"]
+
+
+def test_order_ties_break_by_position_within_round():
+    records = {7: {"z": _row(), "y": _row(), "x": _row()}}
+    assert m.query_order(["x", "y", "z"], records, ()) == ["z", "y", "x"]
+
+
+def test_order_must_prove_comes_first():
+    records = {1: {"a": _row()}, 2: {"b": _row(), "c": _row()}}
+    assert m.query_order(["a", "b", "c", "d"], records, ("c", "a")) == [
+        "c", "a", "d", "b"]
+
+
+@pytest.mark.parametrize("must_prove", [
+    ("a", "nope"),
+    ("a", "a"),
+    tuple(f"q{i}" for i in range(WINDOW + 1)),
+])
+def test_order_rejects_bad_must_prove(must_prove):
+    names = ["a"] + [f"q{i}" for i in range(WINDOW + 1)]
+    with pytest.raises(RuntimeError, match="MUST_PROVE"):
+        m.query_order(names, {}, must_prove)

@@ -52,7 +52,7 @@ def _named(name: str, blob: str) -> bool:
 
 def test_every_catalog_query_has_a_replay_or_property_test():
     blob = _test_blob()
-    catalog = m.DRIVER_WINDOW + m.TAIL
+    catalog = list(m.queries())
     missing = [n for n in catalog if not _named(n, blob) and n not in EXEMPT]
     assert not missing, (
         f"{len(missing)} catalog queries have no replay/property test and "
@@ -62,7 +62,7 @@ def test_every_catalog_query_has_a_replay_or_property_test():
 
 def test_exemption_list_stays_short_and_live():
     assert len(EXEMPT) < 20, "exemption list must stay under 20"
-    catalog = set(m.DRIVER_WINDOW) | set(m.TAIL)
+    catalog = set(m.queries())
     stale = [n for n in EXEMPT if n not in catalog]
     assert not stale, f"exemptions for queries no longer in the catalog: {stale}"
     blob = _test_blob()
