@@ -69,6 +69,9 @@ MUST_PROVE = (
     "schema_matching_scores",
     "kmeans_centroids",
     "cluster_size_distribution",
+    # BPE training no longer reuses merges across queries
+    "bpe_train_merges",
+    "bpe_encode_stats",
 )
 
 

@@ -3,10 +3,10 @@
 The reference parses two silent input formats — ``%d/%m/%Y`` from its CSV
 sources (reference insert.py:110-113) and ``%Y-%m-%d`` from XLSX
 (insert.py:114-115) — and reformats on the way out (tests.py:34-35). Here
-each format is an explicit, named transform; ``strict=False`` maps
-unparseable strings to null (``try_to_date``) instead of failing the job,
-which is the 100 TB-friendly default (quarantine bad rows, don't kill a
-1000-executor stage).
+each format is an explicit, named transform that parses with
+``try_to_date``: an unparseable string becomes null instead of failing
+the job — the 100 TB-friendly behaviour (quarantine bad rows, don't kill
+a 1000-executor stage).
 """
 
 from __future__ import annotations
@@ -22,16 +22,14 @@ def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def parse_date_fr(c: Column | str, strict: bool = False) -> Column:
+def parse_date_fr(c: Column | str) -> Column:
     """T1: parse ``dd/MM/yyyy`` strings (reference insert.py:110-113)."""
-    fn = F.to_date if strict else F.try_to_date
-    return fn(_col(c), FR_FORMAT)
+    return F.try_to_date(_col(c), FR_FORMAT)
 
 
-def parse_date_iso(c: Column | str, strict: bool = False) -> Column:
+def parse_date_iso(c: Column | str) -> Column:
     """T2: parse ``yyyy-MM-dd`` strings (reference insert.py:114-115)."""
-    fn = F.to_date if strict else F.try_to_date
-    return fn(_col(c), ISO_FORMAT)
+    return F.try_to_date(_col(c), ISO_FORMAT)
 
 
 def reformat_fr_to_iso(c: Column | str) -> Column:

@@ -61,25 +61,22 @@ def attach_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def real_decoder(payload: bytes) -> list[float]:
-    """The production per-row decode hook (PIL/libav/etc.). Deliberately
-    stubbed: this environment has no media codecs, and the engine's
-    contract is that decoding is a pluggable function. Production codecs
-    should implement the BATCH contract instead (see
-    :func:`extract_features`) so no per-row Python call sits on the
-    features path; a per-row hook like this one still works through the
-    compatibility shim."""
+def real_decoder(payloads) -> list:
+    """The production batch decode hook (PIL/libav/etc.) with the
+    :func:`extract_features` decoder contract. Deliberately stubbed:
+    this environment has no media codecs, and the engine's contract is
+    that decoding is a pluggable function."""
     raise NotImplementedError(
         "media decoding requires an image/audio library; inject a decoder "
-        "or use fake_decoder for plumbing tests"
+        "or use fake_batch_decoder for plumbing tests"
     )
 
 
 def fake_decoder(payload: bytes) -> list[float]:
     """Deterministic per-row stand-in: FEATURE_DIM moments over the raw
-    bytes. Kept as the reference definition and the compatibility-shim
-    exemplar; the catalog path runs its vectorized twin
-    :func:`fake_batch_decoder` (value-identical, property-tested)."""
+    bytes. Kept as the reference definition; the catalog path runs its
+    vectorized batch twin :func:`fake_batch_decoder` (value-identical,
+    property-tested)."""
     if not payload:
         return [0.0] * FEATURE_DIM
     return [
@@ -120,11 +117,9 @@ def fake_batch_decoder(payloads) -> list:
     return vals.tolist()
 
 
-# extract_features reads these attributes to route a hook to the batch
-# path and to stamp the output's `decoder` column with the LOGICAL
+# extract_features stamps the output's `decoder` column with this LOGICAL
 # decoder identity (the vectorized twin reports the reference name, so
 # downstream values — and the oracle — are implementation-agnostic).
-fake_batch_decoder.batch_contract = True
 fake_batch_decoder.decoder_name = "fake_decoder"
 
 
@@ -133,29 +128,18 @@ def extract_features(df: DataFrame, decoder=None) -> DataFrame:
 
     Decoder contract (r12, guide §4.2): a BATCH function — it receives
     the batch's payload sequence and returns one FEATURE_DIM list per
-    payload — marked with ``batch_contract = True`` (and optionally
-    ``decoder_name`` for the output's ``decoder`` column). Arrow moves
-    payload bytes in columnar batches and the hook hands the whole batch
-    to vectorized native code; no per-row Python call sits on the
-    features path. Legacy per-row hooks (``bytes -> list[float]``) still
-    work through a compatibility shim that loops the batch in Python —
-    correct, but paying the per-row cost the batch contract exists to
-    remove. Default: :func:`fake_batch_decoder` (reports the reference
+    payload — optionally carrying ``decoder_name`` for the output's
+    ``decoder`` column (default: its ``__name__``). Arrow moves payload
+    bytes in columnar batches and the hook hands the whole batch to
+    vectorized native code; no per-row Python call sits on the features
+    path. Default: :func:`fake_batch_decoder` (reports the reference
     identity ``fake_decoder``; values byte-identical).
     """
     import pandas as pd
 
     if decoder is None:
         decoder = fake_batch_decoder
-    if getattr(decoder, "batch_contract", False):
-        batch_fn = decoder
-        name = getattr(decoder, "decoder_name", decoder.__name__)
-    else:  # per-row compatibility shim
-
-        def batch_fn(payloads, _d=decoder):
-            return [_d(p) for p in payloads]
-
-        name = decoder.__name__
+    name = getattr(decoder, "decoder_name", decoder.__name__)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -163,7 +147,7 @@ def extract_features(df: DataFrame, decoder=None) -> DataFrame:
                 {
                     "doc_id": pdf["doc_id"],
                     "n_bytes": pdf["payload"].map(len),
-                    "features": batch_fn(list(pdf["payload"])),
+                    "features": decoder(list(pdf["payload"])),
                     "decoder": name,
                 }
             )

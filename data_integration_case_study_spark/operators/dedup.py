@@ -35,6 +35,10 @@ from data_integration_case_study_spark.functions.text import (
 # A large 32-bit prime for the affine MinHash permutations.
 _MERSENNE = (1 << 31) - 1
 
+# Largest distinct token vocabulary ngram_jaccard_pairs' window path
+# verifies as fixed-width bitsets (see its docstring); 0 disables the probe.
+BITSET_MAX_VOCAB = 256
+
 
 def _tokens(text_col: str, tokens_col: str | None):
     """The detector input tokens: a pre-tokenized array column when the
@@ -234,8 +238,6 @@ def ngram_jaccard_pairs(
     n: int = 1,
     tokens_col: str | None = None,
     block_window: int | None = None,
-    persist: bool = True,
-    bitset_max_vocab: int = 256,
 ) -> DataFrame:
     """Near-dup pairs by token/{n}-gram Jaccard within a blocking key.
 
@@ -266,9 +268,9 @@ def ngram_jaccard_pairs(
     Prefix filtering needs a zipfian vocabulary to bite; the successor
     bound is distribution-free.
 
-    ``bitset_max_vocab`` (r12, guide §2.3 narrower types / §1.2
-    per-pair work): when the window path's DISTINCT token/ngram
-    vocabulary fits in this many values (probed with one bounded
+    Bitset verify (r12, guide §2.3 narrower types / §1.2 per-pair
+    work): when the window path's DISTINCT token/ngram vocabulary fits
+    in ``BITSET_MAX_VOCAB`` values (probed with one bounded
     ``distinct().limit(cap+1)`` pass — at most cap+1 longs ever reach
     the driver, the spatial pre-launch-stats pattern), each doc's token
     SET is encoded as a fixed-width bitmask over the sorted vocabulary
@@ -282,7 +284,7 @@ def ngram_jaccard_pairs(
     and |a ∪ b| = |a| + |b| − |a ∩ b| as before — hence identical
     jaccard doubles and an untouched oracle. Vocabularies larger than
     the cap (real-text corpora) keep the array verify: one wasted
-    slim probe pass, no other cost. Set 0 to disable the probe.
+    slim probe pass, no other cost.
     """
     base_toks = _tokens(text_col, tokens_col)
     toks = F.array_distinct(
@@ -317,20 +319,20 @@ def ngram_jaccard_pairs(
     # strings into SQL text is an escaping liability for zero catalog
     # benefit).
     vocab: list[int] | None = None
-    if bitset_max_vocab and block_window is not None:
+    if BITSET_MAX_VOCAB:
         probe = [
             r[0]
             for r in base.select(F.explode("toks").alias("__t"))
             .distinct()
-            .limit(bitset_max_vocab + 1)
+            .limit(BITSET_MAX_VOCAB + 1)
             .collect()
         ]
-        if probe and len(probe) <= bitset_max_vocab and all(
+        if probe and len(probe) <= BITSET_MAX_VOCAB and all(
             isinstance(v, int) for v in probe
         ):
             vocab = sorted(probe)
 
-    if block_window is not None and vocab is not None:
+    if vocab is not None:
         nw = (len(vocab) + 63) // 64
         vs_sql = "array(" + ",".join(f"{int(v)}L" for v in vocab) + ")"
         pos = base.selectExpr(
@@ -349,7 +351,7 @@ def ngram_jaccard_pairs(
         )
         # the compact mask summary (8*nw+4 bytes/doc) is what the two
         # verify sides re-read — cache IT, not the token arrays
-        summary = cache.track(summary) if persist else summary
+        summary = cache.track(summary)
         ranked = blocked_rank(summary.select("id", "block"), "block", "id")
         probes = ranked.select(
             F.col("id").alias("id_a"),
@@ -388,7 +390,7 @@ def ngram_jaccard_pairs(
         )
 
     # token arrays are read twice (both verify sides)
-    base = cache.track(base) if persist else base
+    base = cache.track(base)
     ranked = blocked_rank(base.select("id", "block"), "block", "id")
     # REPARTITION after the W-way explode: the slim ranked frame is tiny,
     # so AQE coalesces its shuffle to ~1 partition, and with only
@@ -485,7 +487,7 @@ def minhash_signatures(
 
 def _minhash_per_doc(
     df: DataFrame, id_col: str, text_col: str,
-    n: int, num_hashes: int, seed: int, persist: bool = True,
+    n: int, num_hashes: int, seed: int,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Shared single-pass (id, signature, shingles) summary used by both
@@ -503,8 +505,7 @@ def _minhash_per_doc(
     ``spark.catalog.clearCache()`` between queries (bench.py and
     scripts/check_oracle.py do); library callers release engine-owned
     caches with ``operators.cache.release_tracked()`` — every persist
-    here routes through that registry — or pass ``persist=False`` to
-    keep the operator persist-free (recomputing the summary per read).
+    here routes through that registry.
     """
     from data_integration_case_study_spark.operators import cache
 
@@ -514,7 +515,7 @@ def _minhash_per_doc(
         .agg(*_minima_aggs(num_hashes, seed), F.collect_set("h").alias("shingles"))
         .select("id", _signature_array(num_hashes), "shingles")
     )
-    return cache.track(out) if persist else out
+    return cache.track(out)
 
 
 def _band_buckets(per_doc: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -545,7 +546,6 @@ def minhash_candidate_pairs(
     n: int = 3, num_hashes: int = 32, bands: int = 8,
     threshold: float = 0.5, seed: int = 42,
     bucket_window: int | None = None,
-    persist_summary: bool = True,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs: signature -> band buckets -> bucket-local
@@ -574,11 +574,9 @@ def minhash_candidate_pairs(
     """
     # per_doc is read three times (banding + both sides of the verify
     # join); _minhash_per_doc persists it so Spark does not re-shingle and
-    # re-hash the corpus for each read (persist_summary=False opts out —
-    # see _minhash_per_doc's cache-lifecycle note).
+    # re-hash the corpus for each read (see its cache-lifecycle note).
     per_doc = _minhash_per_doc(
-        df, id_col, text_col, n, num_hashes, seed,
-        persist=persist_summary, tokens_col=tokens_col,
+        df, id_col, text_col, n, num_hashes, seed, tokens_col=tokens_col
     )
     banded = _band_buckets(per_doc, num_hashes, bands)
 
@@ -622,7 +620,6 @@ def minhash_incremental_pairs(
     new_df: DataFrame, corpus_df: DataFrame, id_col: str, text_col: str,
     n: int = 3, num_hashes: int = 32, bands: int = 8,
     threshold: float = 0.5, seed: int = 42,
-    persist_summary: bool = True,
 ) -> DataFrame:
     """Incremental (cross-corpus) MinHash dedup: near-dup pairs between an
     INCOMING batch and an already-retained corpus — the steady-state form
@@ -640,12 +637,8 @@ def minhash_incremental_pairs(
     Returns (new_id, dup_of, jaccard): incoming docs near-duplicating a
     corpus doc at >= threshold.
     """
-    new_pd = _minhash_per_doc(
-        new_df, id_col, text_col, n, num_hashes, seed, persist=persist_summary
-    )
-    corp_pd = _minhash_per_doc(
-        corpus_df, id_col, text_col, n, num_hashes, seed, persist=persist_summary
-    )
+    new_pd = _minhash_per_doc(new_df, id_col, text_col, n, num_hashes, seed)
+    corp_pd = _minhash_per_doc(corpus_df, id_col, text_col, n, num_hashes, seed)
     cand = (
         _band_buckets(new_pd, num_hashes, bands)
         .withColumnRenamed("id", "new_id")

@@ -16,13 +16,10 @@ truncate it — the standard Spark pattern for iterative algorithms
 check is ONE driver-side count of changed labels — an O(rounds) sequence
 of actions, not a per-row collect.
 
-Checkpoint durability: by default rounds use ``localCheckpoint`` (blocks
-on executor block managers — fast, but an executor loss mid-iteration
-kills the job because the truncated lineage cannot be recomputed). For
-long-running 100 TB jobs pass ``checkpoint_dir`` (an HDFS/object-store
-path visible to the whole cluster) to use reliable ``checkpoint`` —
-rounds survive executor loss at the cost of writing each round's labels
-to the shared store.
+Every loop here truncates through :func:`operators.cache.truncate` and
+pins its loop invariants with :func:`operators.cache.track`; whether
+rounds are executor-local or reliable checkpoints is the session's
+checkpoint directory, set once at session setup (see ``operators.cache``).
 """
 
 from __future__ import annotations
@@ -30,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_integration_case_study_spark.operators.iterate import lineage_truncator
+from data_integration_case_study_spark.operators import cache
 
 
 def connected_components(
@@ -38,21 +35,13 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Cluster the undirected pair graph; returns (id, cluster) where
     cluster is the component's minimum node id — deterministic and
     engine-independent, so a recursive-CTE oracle reproduces it.
-
-    ``checkpoint_dir``: when set, per-round lineage truncation uses
-    reliable ``checkpoint`` into that cluster-visible directory (survives
-    executor loss); when None, fast executor-local ``localCheckpoint``.
-    See ``operators.iterate`` for the setCheckpointDir global-state
-    caveat.
     """
-    trunc = lineage_truncator(pairs.sparkSession, checkpoint_dir)
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    edges = trunc(
+    edges = cache.truncate(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     )
     labels = (
@@ -71,7 +60,7 @@ def connected_components(
         neighbor_labels = edges.join(
             labels.withColumnRenamed("id", "b"), "b"
         ).select(F.col("a").alias("id"), "label")
-        new_labels = trunc(
+        new_labels = cache.truncate(
             labels.unionByName(neighbor_labels)
             .groupBy("id")
             .agg(F.min("label").alias("label"))
@@ -103,7 +92,6 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     rounds: int = 3,
-    checkpoint_dir: str | None = None,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-round PageRank over a directed edge list: the canonical
@@ -125,11 +113,9 @@ def pagerank(
     keeps that oracle finite. Node count enters as a broadcast 1-row
     aggregate — the plan stays one lazy DAG, no driver-side action.
 
-    Each round's ranks are lineage-truncated (``operators.iterate``, the
+    Each round's ranks are lineage-truncated (``cache.truncate``, the
     connected_components pattern): without it round r's plan re-executes
-    rounds 1..r-1, turning a linear iteration quadratic; ``checkpoint_dir``
-    switches the truncation to reliable cluster-visible checkpoints for
-    executor-loss-tolerant long runs.
+    rounds 1..r-1, turning a linear iteration quadratic.
 
     ``seeds`` (a one-column ``id`` frame) switches to PERSONALIZED
     PageRank: both the initial mass and the per-round teleport term are
@@ -138,9 +124,7 @@ def pagerank(
     restart). The seed indicator rides the node frame as a broadcast
     semi-structure; the round dataflow is unchanged."""
     from data_integration_case_study_spark.functions.numeric import dsum
-    from data_integration_case_study_spark.operators import cache
 
-    trunc = lineage_truncator(pairs.sparkSession, checkpoint_dir)
     e = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     nodes = (
         e.select(F.col("s").alias("id"))
@@ -191,7 +175,7 @@ def pagerank(
             .groupBy(F.col("d").alias("id"))
             .agg(dsum(F.col("pr") / F.col("outdeg")).alias("m"))
         )
-        pr = trunc(
+        pr = cache.truncate(
             nodes.join(contribs, "id", "left")
             .crossJoin(F.broadcast(n_nodes))
             .select(
@@ -210,7 +194,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 2,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-round HITS (hubs & authorities) over a directed edge list —
     the mutual-reinforcement sibling of :func:`pagerank`: a good HUB
@@ -234,9 +217,6 @@ def hits(
     finite. Returns (id, hub, authority)."""
     from data_integration_case_study_spark.functions.numeric import dsum
 
-    from data_integration_case_study_spark.operators import cache
-
-    trunc = lineage_truncator(pairs.sparkSession, checkpoint_dir)
     e = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     # loop-invariant node set, read by all 2*rounds half-updates — persist
     # (tracked cache) for the same cross-execution reuse reason as pagerank
@@ -256,7 +236,7 @@ def hits(
             "id", F.coalesce(F.col("__v"), F.lit(0.0)).alias("__v")
         )
         norm = raw.agg(dsum(F.col("__v"), scale=12).alias("__t"))
-        return trunc(
+        return cache.truncate(
             raw.crossJoin(F.broadcast(norm)).select(
                 "id", (F.col("__v") / F.col("__t")).alias(out)
             )
@@ -280,7 +260,6 @@ def kcore(
     rounds: int,
     src: str = "id_a",
     dst: str = "id_b",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """k-core of the undirected pair graph via ``rounds`` FIXED peeling
     iterations: repeatedly delete every node with degree < k (and its
@@ -298,10 +277,9 @@ def kcore(
     nothing — so the catalog parametrization is the converged core).
     Per round: one degree aggregation + two semi-join-shaped filters of
     the edge list — all equi-joins on node id, lineage-truncated like
-    every iterative loop here (``operators.iterate``)."""
-    trunc = lineage_truncator(pairs.sparkSession, checkpoint_dir)
+    every iterative loop here (``cache.truncate``)."""
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    edges = trunc(
+    edges = cache.truncate(
         e.unionByName(
             e.select(F.col("b").alias("a"), F.col("a").alias("b"))
         ).distinct()
@@ -313,7 +291,7 @@ def kcore(
             .filter(F.col("__d") >= k)
             .select("a")
         )
-        edges = trunc(
+        edges = cache.truncate(
             edges.join(keep, "a")
             .join(keep.withColumnRenamed("a", "b"), "b")
             .select("a", "b")

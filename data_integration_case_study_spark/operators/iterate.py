@@ -1,60 +1,7 @@
-"""Shared lineage-truncation policy for iterative DataFrame algorithms.
+"""Empty on purpose: lineage truncation for iterative loops is
+:func:`data_integration_case_study_spark.operators.cache.truncate`.
 
-Iterative loops (connected components, Lloyd's k-means) grow a linear
-lineage; every round must be checkpointed to truncate it. Two modes:
-
-- ``checkpoint_dir=None`` → ``localCheckpoint`` (executor block
-  managers — fast, but an executor loss mid-iteration kills the job
-  because the truncated lineage cannot be recomputed).
-- ``checkpoint_dir`` set → reliable ``checkpoint`` into that
-  cluster-visible directory (HDFS/object store): rounds survive executor
-  loss at the cost of writing each round's state to the shared store.
-
-CAVEAT: ``setCheckpointDir`` is SparkContext-GLOBAL state with no public
-getter — passing ``checkpoint_dir`` redirects every later
-``df.checkpoint()`` in the session to this directory, and the previous
-setting is not restored. Callers who manage their own checkpoint
-location should configure it once at session setup and pass
-``checkpoint_dir=None`` here.
+The module name stays importable only because ``perfbench/layers.py``
+and ``perfbench/run.py`` still list ``iterate`` among the traced
+operator modules; delete this file together with that entry.
 """
-
-from __future__ import annotations
-
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-def lineage_truncator(
-    spark: SparkSession, checkpoint_dir: str | None = None
-) -> Callable[[DataFrame], DataFrame]:
-    """Return the per-round truncation function for an iterative loop.
-
-    The local mode truncates LAZILY (``localCheckpoint(eager=False)``):
-    the returned frame's logical plan is the truncated ``LogicalRDD``
-    either way, but eager truncation schedules one full job per round —
-    a driver round-trip that dominated the wall of every fixed-round
-    loop with no per-round action (profiled r11: markov_attribution
-    32.1 s of build vs 0.17 s of exec; pagerank/hits/kcore similar).
-    Lazily-marked RDDs are persisted-on-first-compute, so a loop whose
-    rounds ARE forced by per-round actions (connected_components'
-    convergence counts) behaves exactly as before, while pure dataflow
-    loops (pagerank, hits, kmeans, markov, kcore) execute all rounds
-    under the single final action. Results are unchanged in both cases:
-    every loop's per-round math is decimal-snapped/exact by design, so
-    materialization timing cannot alter values.
-
-    Reliable checkpoints stay eager: their point is durability of each
-    round, which requires actually writing it out as it happens."""
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def trunc(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-
-    else:
-
-        def trunc(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
-
-    return trunc

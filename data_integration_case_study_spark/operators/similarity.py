@@ -12,11 +12,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_integration_case_study_spark.operators.iterate import lineage_truncator
 from data_integration_case_study_spark.functions.vector import (
     adaptive_n_planes,
     random_hyperplane_signature,
 )
+from data_integration_case_study_spark.operators import cache
 
 # Exact cross-engine accumulation: products are snapped to a 2^-40 binary
 # grid with floor(x*2^40 + 0.5) — deterministic round-half-up in every
@@ -268,7 +268,6 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     k: int = 8,
     n_iter: int = 2,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Lloyd's k-means over an embedding column — the training step that
     upgrades :func:`ivf_topk`'s seed cells to trained cells.
@@ -286,13 +285,10 @@ def kmeans_centroids(
 
     Each round is one broadcast join + two aggs over the exploded corpus;
     per-round lineage is truncated like ``graph.connected_components``
-    (reliable ``checkpoint`` when ``checkpoint_dir`` is given,
-    executor-local ``localCheckpoint`` otherwise — see
-    ``operators.iterate`` for the global-state caveat). Returns trained
-    centroids in long form (cell, pos, val, members)."""
+    (``cache.truncate``). Returns trained centroids in long form
+    (cell, pos, val, members)."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    trunc = lineage_truncator(df.sparkSession, checkpoint_dir)
     e = df.select(
         F.col(id_col).alias("id"), F.posexplode(F.col(vec_col)).alias("pos", "val")
     ).withColumn("val", F.col("val").cast("double"))
@@ -306,7 +302,7 @@ def kmeans_centroids(
             F.sqrt(_exact_sum_of_products(F.col("c_val"), F.col("c_val"))).alias("cell_norm")
         )
         assign = _assign_cells(e, cents, cn, "id", 1)
-        cents = trunc(
+        cents = cache.truncate(
             e.join(assign, "id")
             .groupBy("cell", "pos")
             .agg(
@@ -589,7 +585,6 @@ def embedding_neardup_pairs(
     block_col: str = "label",
     threshold: float = 0.95,
     block_window: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within a blocking key — the
     fifth dedup strategy (SURVEY §2.9). Attribute blocking is the
@@ -610,7 +605,6 @@ def embedding_neardup_pairs(
     comes from :func:`dedup.blocked_rank` — bounded-cardinality blocks
     must not become one whole-block window sort. ``None`` keeps the
     exhaustive in-block semantics."""
-    from data_integration_case_study_spark.operators import cache
     from data_integration_case_study_spark.operators.dedup import blocked_rank
 
     base = df.select(
@@ -630,7 +624,7 @@ def embedding_neardup_pairs(
         )
         scored = a.join(b, "block").filter(F.col("id_a") < F.col("id_b"))
     else:
-        base = cache.track(base) if persist else base
+        base = cache.track(base)
         ranked = blocked_rank(base.select("id", "block"), "block", "id")
         # repartition after the W-way explode — see dedup.ngram_jaccard_
         # pairs: AQE coalesces the tiny ranked shuffle to ~1 partition
@@ -678,7 +672,6 @@ def embedding_neardup_pairs_lsh(
     n_planes: int | None = None,
     seed: int = 42,
     target_bucket_size: int = 16,
-    cache_base: bool = True,
 ) -> DataFrame:
     """Embedding near-dup pairs blocked by the random-hyperplane LSH
     bucket — the 100 TB form of :func:`embedding_neardup_pairs`.
@@ -707,12 +700,9 @@ def embedding_neardup_pairs_lsh(
         F.col(vec_col).alias("v"),
         _exact_norm_col(F.col(vec_col)).alias("nrm"),
     )
-    if cache_base:
-        # base feeds both pair sides; tracked persist
-        # (operators.cache.release_tracked) — same contract as knn_graph
-        from data_integration_case_study_spark.operators import cache
-
-        base = cache.track(base)
+    # base feeds both pair sides; tracked persist
+    # (operators.cache.release_tracked) — same contract as knn_graph
+    base = cache.track(base)
     # One bucket-keyed self-join carrying whole vectors; each pair row
     # scores its dot in a single O(d) fold (see _exact_dot_cols — a
     # factor-of-d less shuffle than the exploded per-component join) and
@@ -746,7 +736,6 @@ def knn_graph(
     k: int = 3,
     n_planes: int | None = None,
     seed: int = 42,
-    cache_base: bool = True,
     target_bucket_size: int = 32,
 ) -> DataFrame:
     """Approximate k-NN GRAPH: every vector's top-k neighbors within its
@@ -792,14 +781,10 @@ def knn_graph(
         F.col(vec_col).alias("v"),
         _exact_norm_col(F.col(vec_col)).alias("nrm"),
     )
-    if cache_base:
-        # cache lifecycle is caller-owned (spark.catalog.clearCache
-        # between pipeline stages, or operators.cache.release_tracked()
-        # for library sessions); pass cache_base=False to keep the
-        # operator persist-free and recompute signatures per read
-        from data_integration_case_study_spark.operators import cache
-
-        base = cache.track(base)
+    # cache lifecycle is caller-owned (spark.catalog.clearCache between
+    # pipeline stages, or operators.cache.release_tracked() for library
+    # sessions)
+    base = cache.track(base)
     # Bucket-keyed self-join over whole vectors; each unordered pair is
     # scored once by a single O(d) fold (_exact_dot_cols) with both
     # norms riding along map-only — one Exchange on the bucket key,

@@ -1054,15 +1054,12 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: all fact-table work is the one mergeable moment pass;
     the iteration runs on a 16-row matrix regardless of SF."""
     from data_integration_case_study_spark.functions.numeric import dsum
-    from data_integration_case_study_spark.operators.iterate import (
-        lineage_truncator,
-    )
+    from data_integration_case_study_spark.operators import cache
     from data_integration_case_study_spark.plans.mining_queries import _CORR_COLS
     from data_integration_case_study_spark.sources.readers import (
         spread_to_parallelism,
     )
 
-    trunc = lineage_truncator(spark, None)
     li = spread_to_parallelism(read_parquet_table(spark, sf_dir, "lineitem"))
     aggs = [F.count(F.lit(1)).cast("double").alias("n")]
     for c in _CORR_COLS:
@@ -1102,8 +1099,6 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         m.select(F.explode(F.array(*cells)).alias("c"))
         .select("c.i", "c.j", "c.val")
     )
-    from data_integration_case_study_spark.operators import cache
-
     mat = cache.track(mat)
     v = mat.select("j").distinct().withColumn("v", F.lit(0.5))
     for _ in range(_PCA_ROUNDS):
@@ -1113,7 +1108,7 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm = w.agg(
             F.sqrt(dsum(F.col("w") * F.col("w"), scale=12)).alias("t")
         )
-        v = trunc(
+        v = cache.truncate(
             w.crossJoin(F.broadcast(norm)).select(
                 F.col("i").alias("j"), (F.col("w") / F.col("t")).alias("v")
             )

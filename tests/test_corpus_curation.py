@@ -163,6 +163,31 @@ def test_bpe_train_merges_golden(spark, tmp_path):
     assert got == [(1, "l", "o", 3), (2, "lo", "w", 3), (3, "e", "r", 1)]
 
 
+def test_bpe_train_merges_reads_rewritten_corpus(spark, tmp_path):
+    """Merges are trained from the corpus as it is at call time: a
+    rewritten documents file in the same session yields its own merges,
+    never the previous corpus's."""
+    from data_integration_case_study_spark.plans.pipeline_queries import (
+        bpe_train_merges,
+    )
+
+    d = str(tmp_path / "corpus")
+
+    def train(text):
+        spark.createDataFrame(
+            [(0, text)], "doc_id long, text string"
+        ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
+        return [
+            (r["round"], r["left_sym"], r["right_sym"], r["pair_freq"])
+            for r in bpe_train_merges(spark, d).orderBy("round").collect()
+        ]
+
+    assert train("low low lower") == [
+        (1, "l", "o", 3), (2, "lo", "w", 3), (3, "e", "r", 1)]
+    assert train("xyz xyz xy") == [
+        (1, "x", "y", 3), (2, "xy", "z", 2)]
+
+
 def test_merge_apply_changes_rejects_unknown_op(spark):
     import pytest as _pytest
 

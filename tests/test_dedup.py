@@ -31,9 +31,28 @@ def test_engine_cache_registry_releases_tracked_persists(spark, sf_dir):
     # double release is a safe no-op
     assert cache.release_tracked() == 0
     mine.unpersist(True)
-    # opt-out path builds a persist-free plan
-    pf = dedup.minhash_candidate_pairs(
-        d, "doc_id", "text", persist_summary=False
-    )
-    pf.count()
-    assert cache.release_tracked() == 0
+
+
+def test_only_cache_module_materializes():
+    """operators.cache is the engine's one materialization policy: no
+    other module under the package calls ``.persist(``, ``.checkpoint(``
+    or ``.localCheckpoint(`` (they go through cache.track /
+    cache.truncate)."""
+    import ast
+    from pathlib import Path
+
+    import data_integration_case_study_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    files = sorted(root.rglob("*.py"))
+    assert len(files) > 40
+    offenders = [
+        f"{f.relative_to(root)}:{node.lineno}"
+        for f in files
+        if f != root / "operators" / "cache.py"
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("persist", "checkpoint", "localCheckpoint")
+    ]
+    assert offenders == []

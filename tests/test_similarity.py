@@ -231,7 +231,7 @@ def test_multimodal_features_match_driver_python(spark, sf_dir):
 
 def test_real_decoder_stubbed():
     with pytest.raises(NotImplementedError):
-        mm.real_decoder(b"bytes")
+        mm.real_decoder([b"bytes"])
 
 
 def test_frame_sample_grid(spark):
@@ -540,20 +540,26 @@ def test_fake_batch_decoder_matches_per_row():
     assert mm.fake_batch_decoder([]) == []
 
 
-def test_extract_features_per_row_shim(spark):
-    """A legacy per-row decoder still works through the shim and stamps
-    its own name; the default (batch) path stamps the reference name."""
+def test_extract_features_batch_decoder(spark):
+    """An injected batch decoder receives the batch's payloads and
+    stamps its own name; the default path stamps the reference name."""
     from data_integration_case_study_spark.multimodal import binary as mm
 
-    df = spark.createDataFrame([(1, "hello")], "doc_id long, text string")
+    df = spark.createDataFrame(
+        [(1, "hello"), (2, "hi")], "doc_id long, text string"
+    )
     p = mm.attach_payload(df)
 
-    def my_decoder(payload):
-        return [float(len(payload))] * mm.FEATURE_DIM
+    def my_decoder(payloads):
+        return [[float(len(b))] * mm.FEATURE_DIM for b in payloads]
 
-    rows = mm.extract_features(p, decoder=my_decoder).collect()
-    assert rows[0]["decoder"] == "my_decoder"
-    assert rows[0]["features"] == [5.0] * mm.FEATURE_DIM
-    rows = mm.extract_features(p).collect()
-    assert rows[0]["decoder"] == "fake_decoder"
-    assert rows[0]["features"] == mm.fake_decoder(b"hello")
+    rows = {
+        r["doc_id"]: r
+        for r in mm.extract_features(p, decoder=my_decoder).collect()
+    }
+    assert {r["decoder"] for r in rows.values()} == {"my_decoder"}
+    assert rows[1]["features"] == [5.0] * mm.FEATURE_DIM
+    assert rows[2]["features"] == [2.0] * mm.FEATURE_DIM
+    rows = {r["doc_id"]: r for r in mm.extract_features(p).collect()}
+    assert rows[1]["decoder"] == "fake_decoder"
+    assert rows[1]["features"] == mm.fake_decoder(b"hello")

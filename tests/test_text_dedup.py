@@ -116,20 +116,59 @@ def test_connected_components_transitive_chain(spark):
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    # same answer on the fault-tolerant path: reliable checkpoint files
-    # must land in the cluster-visible dir (survive executor loss)
+    # same answer on the fault-tolerant path: with a session checkpoint
+    # directory, reliable checkpoint files must land in it (survive
+    # executor loss)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
     )
-    ckpt = str(tmp_path / "cc_ckpt")
-    got = {
-        r["id"]: r["cluster"]
-        for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
-    }
+    ckpt = tmp_path / "cc_ckpt"
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        got = {
+            r["id"]: r["cluster"]
+            for r in connected_components(pairs).collect()
+        }
+    finally:
+        # SparkContext has no public unsetter; restore the session default
+        # (no directory) so later tests keep local truncation
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+    assert sc.getCheckpointDir() is None
     assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
-    import pathlib
+    assert any(p.is_file() for p in ckpt.rglob("*")), (
+        "no reliable checkpoint written"
+    )
 
-    assert any(pathlib.Path(ckpt).rglob("*")), "no reliable checkpoint written"
+
+def test_connected_components_local_truncation_writes_no_files(
+    spark, monkeypatch
+):
+    # no session checkpoint directory: every round truncates with an
+    # executor-local checkpoint; no reliable checkpoint file is written
+    # and the operator leaves the session without a directory
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
+    )
+    frame_cls = type(pairs)  # the session's concrete DataFrame class
+    local = []
+    real_local = frame_cls.localCheckpoint
+
+    def count_local(self, eager=True, storageLevel=None):
+        local.append(eager)
+        return real_local(self, eager, storageLevel)
+
+    def no_reliable(self, eager=True):
+        raise AssertionError("reliable checkpoint without a directory")
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", count_local)
+    monkeypatch.setattr(frame_cls, "checkpoint", no_reliable)
+    assert spark.sparkContext.getCheckpointDir() is None
+    got = {r["id"]: r["cluster"] for r in connected_components(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+    assert local and not any(local)  # lazy, one per truncation
+    assert spark.sparkContext.getCheckpointDir() is None
 
 
 def test_simhash_hamming_small_for_neardups(spark):
@@ -354,10 +393,10 @@ def test_connected_components_round_budget(spark):
         connected_components(chain, max_iter=4).collect()
 
 
-def test_ngram_bitset_verify_matches_array_verify(spark):
+def test_ngram_bitset_verify_matches_array_verify(spark, monkeypatch):
     """r12: the window path's fixed-width bitset verify (small numeric
     vocab) must emit exactly the pairs and jaccard doubles of the array
-    verify (forced via bitset_max_vocab=0), including across the 64-bit
+    verify (forced via BITSET_MAX_VOCAB=0), including across the 64-bit
     word boundary (vocab > 64 values -> 2 mask words)."""
     import random
 
@@ -387,16 +426,17 @@ def test_ngram_bitset_verify_matches_array_verify(spark):
         hdf, "id", "t", "blk", threshold=0.3, n=1, tokens_col="__ht",
         block_window=16,
     )
+    monkeypatch.setattr(dedup, "BITSET_MAX_VOCAB", 0)
     slow = dedup.ngram_jaccard_pairs(
         hdf, "id", "t", "blk", threshold=0.3, n=1, tokens_col="__ht",
-        block_window=16, bitset_max_vocab=0,
+        block_window=16,
     )
     got_fast, got_slow = rows(fast), rows(slow)
     assert got_fast, "test must produce pairs"
     assert got_fast == got_slow
 
 
-def test_ngram_window_empty_vocabulary_returns_empty_frame(spark):
+def test_ngram_window_empty_vocabulary_returns_empty_frame(spark, monkeypatch):
     """Numeric token arrays that are all empty probe an empty vocabulary;
     the window path must keep the array verify and return an empty frame
     with its schema, not build a zero-word bitset (whose popcount sum is
@@ -409,9 +449,10 @@ def test_ngram_window_empty_vocabulary_returns_empty_frame(spark):
         df, "id", "t", "blk", threshold=0.3, n=1, tokens_col="toks",
         block_window=4,
     )
+    monkeypatch.setattr(dedup, "BITSET_MAX_VOCAB", 0)
     array_path = dedup.ngram_jaccard_pairs(
         df, "id", "t", "blk", threshold=0.3, n=1, tokens_col="toks",
-        block_window=4, bitset_max_vocab=0,
+        block_window=4,
     )
     assert out.collect() == []
     assert out.schema == array_path.schema
