@@ -12,9 +12,20 @@ Spark-side equivalents:
   path — :func:`assert_unique`, which turns the constraint into a verified
   data-quality invariant *before* the write (at 100 TB you want the check
   distributed, not a post-load index build).
+
+The reference's ``if_exists='replace'`` is a whole-table swap. Here every
+sink that replaces a directory (the quality gate, the streaming CDC
+snapshot, the foreachBatch parquet sink, the streaming sketch states)
+goes through :func:`replace_dir`: write a staging copy, then swap it in
+by rename, so a failed write or a crash never leaves the only copy
+half-written.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
@@ -54,11 +65,55 @@ def assert_not_null(df: DataFrame, cols: list[str]) -> DataFrame:
     return df
 
 
+def recover_dir(path: str) -> None:
+    """Finish an interrupted :func:`replace_dir` swap of ``path``. A crash
+    between rename(path -> .prev) and rename(.staging -> path) leaves
+    ``path`` missing: restore the aside copy. A ``.prev`` next to a live
+    ``path`` is a finished swap's leftover: drop it."""
+    path = path.rstrip("/")
+    prev = path + ".prev"
+    if not os.path.exists(path) and os.path.exists(prev):
+        os.rename(prev, path)
+    if os.path.exists(prev):
+        shutil.rmtree(prev)
+
+
+def replace_dir(path: str, write: Callable[[str], object]) -> None:
+    """Replace directory ``path`` with what ``write(staging)`` writes.
+
+    Heals an interrupted earlier swap (:func:`recover_dir`), clears a
+    stale staging directory, then calls ``write`` with the staging path.
+    If ``write`` raises, staging is removed and the error propagates;
+    ``path`` is untouched. Otherwise the live copy is renamed aside,
+    staging is renamed live, and the aside copy is dropped: at every
+    instant a full copy of the old or new data exists on disk (an
+    in-place overwrite whose job fails leaves ``path`` present but
+    empty, and the next read raises ``UNABLE_TO_INFER_SCHEMA``).
+
+    Driver-local filesystems only: ``os.rename`` is not an object-store
+    operation; on S3/GCS use a transactional table format instead."""
+    path = path.rstrip("/")
+    staging = path + ".staging"
+    prev = path + ".prev"
+    recover_dir(path)
+    if os.path.exists(staging):
+        shutil.rmtree(staging)
+    try:
+        write(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    if os.path.exists(path):
+        os.rename(path, prev)
+    os.rename(staging, path)
+    if os.path.exists(prev):
+        shutil.rmtree(prev)
+
+
 def write_with_quality_gate(
     df: DataFrame,
     path: str,
     expectations: dict,
-    mode: str = "overwrite",
 ) -> dict:
     """Write parquet while collecting data-quality metrics in the SAME
     job (``Observation`` — the metrics ride the write's own pass over the
@@ -71,49 +126,28 @@ def write_with_quality_gate(
     observed metrics dict on success. At 100 TB this is how a load step
     self-certifies without doubling its I/O.
 
-    The write lands in a STAGING directory and is promoted to ``path``
-    only after every predicate passes — a failed gate never leaves
-    rejected data where downstream consumers read.
-
-    Promotion uses the same crash-safe swap as ``streaming.cdc``: rename
-    the live copy aside, rename staging live, then drop the aside — at
-    every instant a full copy of the old or new data exists on disk
-    (plain rmtree-then-rename has a window where a crash destroys the
-    only copy). Driver-local filesystems only: ``os.rename`` is not an
-    object-store operation; on S3/GCS use a transactional table format
-    instead."""
-    import os
-    import shutil
-
+    Observe, write and check all run inside :func:`replace_dir`'s
+    staging step, so ``path`` is replaced only after every predicate
+    passes — a failed gate never leaves rejected data where downstream
+    consumers read."""
     from pyspark.sql import Observation
 
-    staging = path.rstrip("/") + ".staging"
-    prev = path.rstrip("/") + ".prev"
-    # crash recovery from an earlier interrupted promotion: died between
-    # rename(path→prev) and rename(staging→path) → restore the aside;
-    # a stale .prev next to a live path is a finished swap's leftover
-    if not os.path.exists(path) and os.path.exists(prev):
-        os.rename(prev, path)
-    if os.path.exists(prev):
-        shutil.rmtree(prev)
     obs = Observation("quality_gate")
     aggs = [col.alias(name) for name, (col, _) in expectations.items()]
-    df.observe(obs, *aggs).write.mode(mode).parquet(staging)
-    got = obs.get
-    failures = {
-        name: got[name]
-        for name, (_, predicate) in expectations.items()
-        if not predicate(got[name])
-    }
-    if failures:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise ConstraintViolation(f"quality gate failed: {failures}")
-    if os.path.exists(path):
-        os.rename(path, prev)
-    os.rename(staging, path)
-    if os.path.exists(prev):
-        shutil.rmtree(prev)
-    return got
+
+    def write(staging: str) -> None:
+        df.observe(obs, *aggs).write.parquet(staging)
+        got = obs.get
+        failures = {
+            name: got[name]
+            for name, (_, predicate) in expectations.items()
+            if not predicate(got[name])
+        }
+        if failures:
+            raise ConstraintViolation(f"quality gate failed: {failures}")
+
+    replace_dir(path, write)
+    return obs.get
 
 
 def write_parquet(
@@ -243,8 +277,12 @@ def compact_small_files(
     splits; per-file sizes then vary with input skew — acceptable for
     compaction), otherwise a repartition rebalances. Returns the
     planned file count. On table formats (Delta/Iceberg) this is OPTIMIZE;
-    here it is the plain-directory form with an atomic overwrite of
-    ``dst_dir``."""
+    here it is the plain-directory form with a plain overwrite of
+    ``dst_dir`` — NOT atomic: a failed job leaves ``dst_dir`` empty. It
+    does not go through :func:`replace_dir` because it serves any Hadoop
+    scheme and that swap is a driver-local ``os.rename``; write to a
+    fresh ``dst_dir`` and repoint readers when the old copy must
+    survive a failure."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     path = jvm.org.apache.hadoop.fs.Path(src_dir)

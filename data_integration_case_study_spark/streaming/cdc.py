@@ -3,8 +3,9 @@ snapshot, one micro-batch at a time.
 
 This is the lake-format-agnostic MERGE INTO loop: each micro-batch is
 applied with :func:`~data_integration_case_study_spark.operators.merge.
-merge_upsert` (last-wins by version) and the snapshot is atomically
-swapped via write-to-tmp + rename. On a transactional table format
+merge_upsert` (last-wins by version) and the snapshot is replaced with
+the crash-safe staging swap :func:`~data_integration_case_study_spark.
+sources.sinks.replace_dir`. On a transactional table format
 (Delta/Iceberg/Hudi) the swap becomes the format's own MERGE commit and
 this function shrinks to one line — the dataflow (stream → keyed merge →
 snapshot) is identical, which is the point of demonstrating it without
@@ -14,11 +15,11 @@ the format dependency.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import SparkSession
 
 from data_integration_case_study_spark.operators.merge import merge_upsert
+from data_integration_case_study_spark.sources.sinks import replace_dir
 
 
 def run_streaming_merge(
@@ -39,34 +40,19 @@ def run_streaming_merge(
     # un-committed micro-batch. merge_upsert makes the replay a no-op —
     # re-applying the same (key, version) rows cannot change the max-version
     # winner — so the sink is effectively idempotent without a txn log,
-    # PROVIDED the snapshot itself survives every crash point. The swap
-    # below never deletes the only copy: write tmp → rename live aside →
-    # rename tmp live → drop the old copy; a crash between the two renames
-    # is healed by the recovery block (restore the aside copy).
-    tmp = target_dir + ".tmp"
-    prev = target_dir + ".prev"
-
+    # PROVIDED the snapshot itself survives every crash point, which
+    # replace_dir guarantees (it never deletes the only copy).
     def apply_batch(batch_df, batch_id):
-        sess = batch_df.sparkSession
-        # crash recovery: died between rename(target→prev) and
-        # rename(tmp→target) → restore the aside snapshot; a stale .prev
-        # alongside a live target is just the last swap's leftover
-        if not os.path.exists(target_dir) and os.path.exists(prev):
-            os.rename(prev, target_dir)
-        if os.path.exists(prev):
-            shutil.rmtree(prev)
-        if os.path.exists(target_dir):
-            target = sess.read.parquet(target_dir)
-        else:
-            target = batch_df.limit(0)
-        merged = merge_upsert(target, batch_df, keys, version_col)
-        # materialize the merge into tmp BEFORE touching the live snapshot
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(target_dir):
-            os.rename(target_dir, prev)
-        os.rename(tmp, target_dir)
-        if os.path.exists(prev):
-            shutil.rmtree(prev)
+        def write(staging):
+            if os.path.exists(target_dir):
+                target = batch_df.sparkSession.read.parquet(target_dir)
+            else:
+                target = batch_df.limit(0)
+            merge_upsert(target, batch_df, keys, version_col).write.parquet(
+                staging
+            )
+
+        replace_dir(target_dir, write)
 
     return (
         spark.readStream.schema(schema)

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_integration_case_study_spark.functions.numeric import dsum
+from data_integration_case_study_spark.sources.sinks import replace_dir
 
 
 def extract_props(events: DataFrame) -> DataFrame:
@@ -109,9 +110,10 @@ def run_streaming_foreach_batch(
     checkpoint_dir: str,
     gap_watermark: str = "1 day",
 ):
-    """Production-shaped runner: transform each micro-batch and overwrite
+    """Production-shaped runner: transform each micro-batch and replace
     the parquet sink via foreachBatch (the standard pattern for sinks
-    Structured Streaming doesn't support in complete mode). availableNow
+    Structured Streaming doesn't support in complete mode) through the
+    crash-safe staging swap ``sources.sinks.replace_dir``. availableNow
     drains the source then stops."""
     stream = (
         spark.readStream.schema(schema).parquet(source_dir).withWatermark("ts", gap_watermark)
@@ -119,7 +121,7 @@ def run_streaming_foreach_batch(
     out = transform(stream)
 
     def sink(batch_df, batch_id):
-        batch_df.write.mode("overwrite").parquet(sink_dir)
+        replace_dir(sink_dir, batch_df.write.parquet)
 
     return (
         out.writeStream.foreachBatch(sink)

@@ -36,6 +36,8 @@ from data_integration_case_study_spark.operators.merge import (
 )
 
 _VDIR = re.compile(r"^v(\d+)$")
+# a commit drops version directories this many batch ids or more behind it
+_KEEP_VERSIONS = 2
 
 
 def _latest_committed(state_dir: str) -> int | None:
@@ -76,7 +78,6 @@ def run_streaming_ivm(
     checkpoint_dir: str,
     version_col: str = "version",
     op_col: str = "op",
-    keep_versions: int = 2,
 ):
     """Drain ``source_dir`` as a CDC stream and transactionally maintain
     snapshot + (group -> n_rows, value_sum) aggregate under
@@ -165,7 +166,7 @@ def run_streaming_ivm(
             f.write(str(batch_id))
         for name in os.listdir(state_dir):
             m = _VDIR.match(name)
-            if m and int(m.group(1)) <= batch_id - keep_versions:
+            if m and int(m.group(1)) <= batch_id - _KEEP_VERSIONS:
                 shutil.rmtree(os.path.join(state_dir, name))
 
     return (

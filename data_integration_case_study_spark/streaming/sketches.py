@@ -1,37 +1,77 @@
 """Streaming sketch maintenance: bounded profiling state over a stream.
 
 A continuously-ingesting pipeline wants "distinct users per event type,
-so far" without keeping every user id in streaming state. Because the
-KMV sketch MERGES (union -> re-rank -> cut, operators/sketches), the
-maintenance loop is a plain foreachBatch compaction: sketch the incoming
-microbatch, merge it with the persisted sketch table, overwrite. State
-on disk and in memory is <= k rows per group forever; the merged sketch
-equals the sketch of all data seen (the merge property, proven in
-tests/test_warehouse.py and re-proven stream-vs-batch in
-tests/test_streaming.py).
+so far" without keeping every user id in streaming state. Every sketch
+here MERGES (KMV: union -> re-rank -> cut; count-min, AMS and histogram
+counters add; HLL registers take the MAX; the weighted reservoir is a
+top-k re-cut), so all six share one maintenance loop, :func:`_maintain`:
+per microbatch, sketch the batch, merge it with the persisted state, and
+write the merged frame straight into a staging copy that
+``sources.sinks.replace_dir`` swaps in by rename. State on disk is
+bounded by the sketch size forever; the merged sketch equals the sketch
+of all data seen (the merge property, proven in tests/test_warehouse.py
+and re-proven stream-vs-batch in tests/test_streaming.py).
 
-The same foreachBatch-merge shape maintains any mergeable summary here
-(count-min grids add counter-wise; moment profiles add the six sums) —
-KMV is the demonstrated instance because its merge is the least obvious.
+Exactly-once: the additive merges (count-min, AMS, histogram) are not
+idempotent — replaying a batch after checkpoint recovery would
+double-count — so the loop writes the batch id into a ``_BATCH`` marker
+inside the staging copy. The id commits in the same rename as the state
+(Spark's file listing skips ``_``-prefixed files), and any batch id at
+or below the committed one is skipped. The marker ties the state to its
+checkpoint: a new checkpoint restarts batch ids at 0, so it needs a
+fresh ``state_path``.
 """
 
 from __future__ import annotations
 
-from pyspark.errors.exceptions.captured import AnalysisException
+import os
+
 from pyspark.sql import DataFrame
 
 from data_integration_case_study_spark.operators.sketches import (
     kmv_merge_sketches,
     kmv_sketch_rows,
 )
+from data_integration_case_study_spark.sources.sinks import (
+    recover_dir,
+    replace_dir,
+)
 
-def _is_path_not_found(e: AnalysisException) -> bool:
-    """True only for the state-not-yet-written case; any other analysis
-    failure (corrupt footer, transient FS error surfaced as 'unable to
-    infer schema', permissions) must PROPAGATE — silently resetting
-    accumulated sketch state would be data loss."""
-    cls = e.getErrorClass() or ""
-    return "PATH_NOT_FOUND" in cls or "PATH_NOT_FOUND" in str(e)
+_MARKER = "_BATCH"
+
+
+def _maintain(stream: DataFrame, state_path: str, checkpoint_dir: str,
+              sketch, merge):
+    """Start the foreachBatch loop keeping ``state_path`` equal to
+    ``merge(state, sketch(batch))`` over every microbatch (availableNow
+    trigger; the caller awaits/stops the returned query). "No state yet"
+    means ``state_path`` is absent after :func:`recover_dir`; any other
+    read failure propagates — silently resetting accumulated state would
+    be data loss."""
+    spark = stream.sparkSession
+
+    def update(batch_df: DataFrame, batch_id: int) -> None:
+        recover_dir(state_path)
+        merged = sketch(batch_df)
+        if os.path.exists(state_path):
+            with open(os.path.join(state_path, _MARKER)) as f:
+                if int(f.read()) >= batch_id:
+                    return  # replay after checkpoint recovery: applied
+            merged = merge(spark.read.parquet(state_path), merged)
+
+        def write(staging: str) -> None:
+            merged.write.parquet(staging)
+            with open(os.path.join(staging, _MARKER), "w") as f:
+                f.write(str(batch_id))
+
+        replace_dir(state_path, write)
+
+    return (
+        stream.writeStream.foreachBatch(update)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def streaming_kmv_sketch(
@@ -43,38 +83,13 @@ def streaming_kmv_sketch(
     k: int = 64,
 ):
     """Maintain a KMV sketch table at ``state_path`` from a streaming
-    frame. Each microbatch: sketch the batch, merge with the persisted
-    state, atomically overwrite. Returns the started query (caller
-    awaits/stops). Exactly-once note: overwrite-per-batch is idempotent
-    for replayed batches (merging the same rows twice is a no-op by the
-    dedup in the merge), so checkpoint-replay after failure converges to
-    the same state."""
-    spark = stream.sparkSession
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        batch_sketch = kmv_sketch_rows(batch_df, group_cols, value_col, k)
-        try:
-            prev = spark.read.parquet(state_path)
-            merged = kmv_merge_sketches(prev, batch_sketch, group_cols, k)
-        except AnalysisException as e:
-            if not _is_path_not_found(e):
-                raise
-            merged = batch_sketch
-        # Materialize before overwriting the path being read. The
-        # collect is BOUNDED by construction (<= k rows per group — the
-        # whole point of the sketch); a deployment with millions of
-        # groups writes to a versioned path and swaps a pointer instead
-        # (or uses a table format whose commit is the swap).
-        rows = merged.collect()
-        spark.createDataFrame(rows, merged.schema).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    frame: sketch each microbatch and merge it into the persisted state
+    (union -> re-rank -> cut). Returns the started query (caller
+    awaits/stops). State: <= k rows per group forever."""
+    return _maintain(
+        stream, state_path, checkpoint_dir,
+        lambda df: kmv_sketch_rows(df, group_cols, value_col, k),
+        lambda prev, new: kmv_merge_sketches(prev, new, group_cols, k),
     )
 
 
@@ -88,55 +103,19 @@ def streaming_cms_sketch(
     seed: int = 7,
 ):
     """Maintain a count-min frequency grid at ``state_path`` from a
-    streaming frame: sketch each microbatch, ADD it counter-wise into
-    the persisted grid, atomically overwrite. State is <= depth*width
-    counter rows forever.
-
-    Exactly-once: counter addition is NOT idempotent (replaying a batch
-    would double-count), so the state carries the last applied batch id
-    and a replayed microbatch is skipped — the standard transactional
-    foreachBatch guard, needed here precisely because this merge, unlike
-    KMV's, is not a set union."""
-    from pyspark.sql import functions as F
-
+    streaming frame: sketch each microbatch and ADD it counter-wise into
+    the persisted grid. State is <= depth*width counter rows forever.
+    Counter addition is not idempotent; the loop's batch-id marker keeps
+    a replayed microbatch from counting twice."""
     from data_integration_case_study_spark.operators.sketches import (
         cms_build,
         cms_merge,
     )
 
-    spark = stream.sparkSession
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            prev = spark.read.parquet(state_path)
-        except AnalysisException as e:
-            # state not yet written -> first batch; any other failure
-            # propagates (resetting counters on a transient IO error
-            # would both lose counts and wipe the replay guard)
-            if not _is_path_not_found(e):
-                raise
-            prev = None
-        if prev is None:
-            merged = cms_build(batch_df, key_col, depth, width, seed)
-        else:
-            applied = prev.agg(F.max("batch_id")).collect()[0][0]
-            if applied is not None and applied >= batch_id:
-                return  # replay after checkpoint recovery: already applied
-            merged = cms_merge(
-                prev.select("row", "col", "cnt"),
-                cms_build(batch_df, key_col, depth, width, seed),
-            )
-        out = merged.withColumn("batch_id", F.lit(batch_id))
-        rows = out.collect()  # bounded: <= depth*width rows by construction
-        spark.createDataFrame(rows, out.schema).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream, state_path, checkpoint_dir,
+        lambda df: cms_build(df, key_col, depth, width, seed),
+        cms_merge,
     )
 
 
@@ -149,37 +128,18 @@ def streaming_hll_sketch(
     p: int = 8,
 ):
     """Maintain a HyperLogLog register table at ``state_path`` from a
-    streaming frame — the third streaming sketch next to KMV and CMS,
-    and the best-behaved one: the merge is an element-wise MAX, which
-    is idempotent (replayed microbatches are no-ops, like KMV's
-    re-rank and unlike CMS's additive merge, which needs the batch-id
-    guard). State: <= 2^p rows per group forever."""
+    streaming frame — the third streaming sketch next to KMV and CMS:
+    the merge is an element-wise MAX. State: <= 2^p rows per group
+    forever."""
     from data_integration_case_study_spark.operators.sketches import (
         hll_merge_registers,
         hll_register_rows,
     )
 
-    spark = stream.sparkSession
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        batch_regs = hll_register_rows(batch_df, group_cols, value_col, p)
-        try:
-            prev = spark.read.parquet(state_path)
-            merged = hll_merge_registers(prev, batch_regs, group_cols)
-        except AnalysisException as e:
-            if not _is_path_not_found(e):
-                raise
-            merged = batch_regs
-        rows = merged.collect()
-        spark.createDataFrame(rows, merged.schema).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream, state_path, checkpoint_dir,
+        lambda df: hll_register_rows(df, group_cols, value_col, p),
+        lambda prev, new: hll_merge_registers(prev, new, group_cols),
     )
 
 
@@ -194,47 +154,17 @@ def streaming_ams_sketch(
 ):
     """Maintain per-group AMS F2 counters at ``state_path`` from a
     streaming frame — the fourth streaming sketch: like count-min the
-    merge is ADDITIVE (sign sums add across batches), so a replayed
-    microbatch would double-count and the state carries the last
-    applied batch id as the transactional guard. State: one wide row
-    per group (d counters + n_rows) forever."""
-    from pyspark.sql import functions as F
-
+    merge is ADDITIVE (sign sums add across batches). State: one wide
+    row per group (d counters + n_rows) forever."""
     from data_integration_case_study_spark.operators.sketches import (
         ams_counters,
         ams_merge,
     )
 
-    spark = stream.sparkSession
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            prev = spark.read.parquet(state_path)
-        except AnalysisException as e:
-            if not _is_path_not_found(e):
-                raise
-            prev = None
-        batch_sketch = ams_counters(batch_df, group_cols, value_col, d, seed)
-        if prev is None:
-            merged = batch_sketch
-        else:
-            applied = prev.agg(F.max("batch_id")).collect()[0][0]
-            if applied is not None and applied >= batch_id:
-                return  # replay after checkpoint recovery: already applied
-            merged = ams_merge(
-                prev.drop("batch_id"), batch_sketch, group_cols, d
-            )
-        out = merged.withColumn("batch_id", F.lit(batch_id))
-        rows = out.collect()  # bounded: one row per group by construction
-        spark.createDataFrame(rows, out.schema).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream, state_path, checkpoint_dir,
+        lambda df: ams_counters(df, group_cols, value_col, d, seed),
+        lambda prev, new: ams_merge(prev, new, group_cols, d),
     )
 
 
@@ -252,21 +182,13 @@ def streaming_weighted_reservoir(
     hash draw (weighted_reservoir_sample's snapped-key formula, no RNG
     state), and the reservoir is simply the k largest keys seen so far.
     Top-k-by-pure-key MERGES (union -> re-cut), so the maintenance loop
-    is the same foreachBatch compaction as the KMV sketch: key the
-    microbatch, union with the persisted reservoir, keep the k largest.
-
-    Replay-idempotent WITHOUT a batch-id guard: keys are pure functions
-    of row content, so re-merging an already-applied batch re-derives
-    identical keys and the re-cut is a no-op (same argument as the KMV
-    and HLL merges; the additive AMS/CMS grids are the ones that need
-    the guard). State on disk: <= k rows forever. The streamed
-    reservoir equals the batch sample of all data seen — asserted
-    stream-vs-batch in tests."""
+    is the same as the sketches': key the microbatch, union with the
+    persisted reservoir, keep the k largest. State on disk: <= k rows
+    forever. The streamed reservoir equals the batch sample of all data
+    seen — asserted stream-vs-batch in tests."""
     from pyspark.sql import functions as F
 
     from data_integration_case_study_spark.functions.text import hash60
-
-    spark = stream.sparkSession
 
     def keyed(df: DataFrame) -> DataFrame:
         h = hash60(F.col(id_col).cast("string"))
@@ -283,25 +205,10 @@ def streaming_weighted_reservoir(
     def cut(df: DataFrame) -> DataFrame:
         return df.orderBy(F.desc("key_scaled"), F.asc("id")).limit(k)
 
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        batch_keys = cut(keyed(batch_df))
-        try:
-            prev = spark.read.parquet(state_path)
-            merged = cut(prev.unionByName(batch_keys).distinct())
-        except AnalysisException as e:
-            if not _is_path_not_found(e):
-                raise
-            merged = batch_keys
-        rows = merged.collect()  # bounded: <= k rows by construction
-        spark.createDataFrame(rows, merged.schema).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream, state_path, checkpoint_dir,
+        lambda df: cut(keyed(df)),
+        lambda prev, new: cut(prev.unionByName(new).distinct()),
     )
 
 
@@ -320,47 +227,15 @@ def streaming_histogram_sketch(
     streaming sketch: the persisted counters answer p50/p95/p99 at any
     moment via ``operators/sketches.histogram_estimate`` without ever
     sorting or retaining raw values. Like count-min and AMS the merge
-    is ADDITIVE (bin counters sum across batches), so a replayed
-    microbatch would double-count and the state carries the last
-    applied batch id as the transactional guard. State: <= bins rows
+    is ADDITIVE (bin counters sum across batches). State: <= bins rows
     per group forever."""
-    from pyspark.sql import functions as F
-
     from data_integration_case_study_spark.operators.sketches import (
         histogram_bin_counts,
         histogram_merge,
     )
 
-    spark = stream.sparkSession
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            prev = spark.read.parquet(state_path)
-        except AnalysisException as e:
-            if not _is_path_not_found(e):
-                raise
-            prev = None
-        batch_counts = histogram_bin_counts(
-            batch_df, group_cols, value_col, lo, hi, bins
-        )
-        if prev is None:
-            merged = batch_counts
-        else:
-            applied = prev.agg(F.max("batch_id")).collect()[0][0]
-            if applied is not None and applied >= batch_id:
-                return  # replay after checkpoint recovery: already applied
-            merged = histogram_merge(
-                prev.drop("batch_id"), batch_counts, group_cols
-            )
-        out = merged.withColumn("batch_id", F.lit(batch_id))
-        rows = out.collect()  # bounded: <= bins rows per group
-        spark.createDataFrame(rows, out.schema).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream, state_path, checkpoint_dir,
+        lambda df: histogram_bin_counts(df, group_cols, value_col, lo, hi, bins),
+        lambda prev, new: histogram_merge(prev, new, group_cols),
     )

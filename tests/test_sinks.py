@@ -121,3 +121,92 @@ def test_compact_small_files_reduces_count_preserves_rows(spark, tmp_path):
     a = sorted(tuple(r) for r in spark.read.parquet(src).collect())
     b = sorted(tuple(r) for r in spark.read.parquet(dst).collect())
     assert a == b
+
+
+def test_replace_dir_failed_write_keeps_old_rows(spark, tmp_path):
+    """A staging write whose job fails mid-way leaves the live directory's
+    rows readable and no staging directory behind."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "table")
+    old = spark.range(20).withColumn("v", F.col("id") * 2)
+    sinks.replace_dir(path, old.write.parquet)
+    bad = spark.range(20).select(
+        F.when(F.col("id") == 13, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        sinks.replace_dir(path, bad.write.parquet)
+    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == sorted(
+        tuple(r) for r in old.collect()
+    )
+    assert not os.path.exists(path + ".staging")
+    assert not os.path.exists(path + ".prev")
+
+
+def test_quality_gate_heals_interrupted_swap(spark, tmp_path):
+    """A crash between the swap's two renames leaves ``path`` missing and
+    ``path.prev`` holding the last good copy. The next gated write restores
+    it when the gate fails, and replaces it when the gate passes."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "out")
+    old = spark.range(5).toDF("k")
+    old.write.parquet(path + ".prev")  # the planted rename window
+    new = spark.range(100, 108).toDF("k")
+    n_rows = F.count(F.lit(1))
+    with pytest.raises(sinks.ConstraintViolation):
+        sinks.write_with_quality_gate(new, path, {"n": (n_rows, lambda n: n < 0)})
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) == list(range(5))
+    assert not os.path.exists(path + ".prev")
+
+    os.rename(path, path + ".prev")
+    got = sinks.write_with_quality_gate(new, path, {"n": (n_rows, lambda n: n > 0)})
+    assert got == {"n": 8}
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) == list(
+        range(100, 108)
+    )
+    assert not os.path.exists(path + ".prev")
+    assert not os.path.exists(path + ".staging")
+
+
+def test_only_sinks_module_renames():
+    """sources.sinks.replace_dir is the engine's one directory swap: no
+    other module under the package calls ``os.rename``, and nothing under
+    streaming/ overwrites a directory in place with ``mode("overwrite")``."""
+    import ast
+    from pathlib import Path
+
+    import data_integration_case_study_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    files = sorted(root.rglob("*.py"))
+    assert len(files) > 40
+
+    def calls(f):
+        return [n for n in ast.walk(ast.parse(f.read_text()))
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)]
+
+    renames = [
+        f"{f.relative_to(root)}:{n.lineno}"
+        for f in files
+        if f != root / "sources" / "sinks.py"
+        for n in calls(f)
+        if n.func.attr == "rename"
+        and isinstance(n.func.value, ast.Name)
+        and n.func.value.id == "os"
+    ]
+    overwrites = [
+        f"{f.relative_to(root)}:{n.lineno}"
+        for f in sorted((root / "streaming").rglob("*.py"))
+        for n in calls(f)
+        if n.func.attr == "mode"
+        and any(isinstance(a, ast.Constant) and a.value == "overwrite"
+                for a in n.args)
+    ]
+    assert renames == [] and overwrites == []

@@ -777,3 +777,89 @@ def test_streaming_histogram_sketch_matches_batch(spark, normalized_events_dir):
         batch_df, ["event_type"], "value", 0.0, 500.0, 64
     )
     assert _canon(streamed_q) == _canon(batch_q)
+
+
+def test_streaming_sketch_heals_interrupted_swap(spark, normalized_events_dir, tmp_path):
+    """A crash between the state swap's two renames leaves ``state``
+    missing and ``state.prev`` holding the earlier grid. The restarted
+    stream must restore that grid and merge into it, not start over as
+    if it were the first batch."""
+    import os
+
+    from data_integration_case_study_spark.operators.sketches import cms_build
+    from data_integration_case_study_spark.streaming.sketches import (
+        streaming_cms_sketch,
+    )
+
+    events = spark.read.parquet(normalized_events_dir)
+    src = str(tmp_path / "src")
+    state = str(tmp_path / "cms_state")
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        stream = spark.readStream.schema(events.schema).parquet(src)
+        streaming_cms_sketch(
+            stream, "user_id", state, ckpt, depth=4, width=256
+        ).awaitTermination(120)
+
+    events.filter(F.col("event_id") % 2 == 0).write.parquet(src)
+    drain()
+    os.rename(state, state + ".prev")  # the planted rename window
+    events.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
+    drain()
+
+    got = {(r["row"], r["col"]): r["cnt"] for r in spark.read.parquet(state).collect()}
+    want = {
+        (r["row"], r["col"]): r["cnt"]
+        for r in cms_build(events, "user_id", depth=4, width=256).collect()
+    }
+    assert got == want
+    assert not os.path.exists(state + ".prev")
+
+
+def test_streaming_cms_sketch_skips_replayed_batch(spark, normalized_events_dir, tmp_path):
+    """Restart after the last batch's state committed but its checkpoint
+    commit did not: Spark replays that batch, and the additive count-min
+    merge must not count it twice."""
+    import os
+
+    from data_integration_case_study_spark.operators.sketches import cms_build
+    from data_integration_case_study_spark.streaming.sketches import (
+        streaming_cms_sketch,
+    )
+
+    batch = spark.read.parquet(normalized_events_dir)
+    state = str(tmp_path / "cms_state")
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        stream = (
+            spark.readStream.schema(batch.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(normalized_events_dir)
+        )
+        streaming_cms_sketch(
+            stream, "user_id", state, ckpt, depth=4, width=256
+        ).awaitTermination(120)
+
+    def grid():
+        return {
+            (r["row"], r["col"]): r["cnt"]
+            for r in spark.read.parquet(state).collect()
+        }
+
+    drain()
+    first = grid()
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    drain()
+
+    assert os.path.exists(os.path.join(commits, str(last)))  # batch re-ran
+    want = {
+        (r["row"], r["col"]): r["cnt"]
+        for r in cms_build(batch, "user_id", depth=4, width=256).collect()
+    }
+    assert grid() == first == want
