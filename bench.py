@@ -170,12 +170,30 @@ def _merge_timing_sections(sidecar: dict) -> dict:
     return out
 
 
+def _baseline_mismatch(prev: dict, sf_val=None) -> dict | None:
+    """Why a prior sidecar cannot be diffed against this run, or None.
+    Cross-SF ratios are garbage both ways (a smaller current SF masks
+    real regressions, a larger one flags everything), and so are ratios
+    across core counts: a 4-core run against the 8-core baseline flags
+    every parallel query. A sidecar that recorded no ``env.cpus`` is
+    not a mismatch."""
+    if sf_val is not None and prev.get("sf") != sf_val:
+        return {"baseline_sf": prev.get("sf"),
+                "error": f"sf mismatch (current {sf_val}) — no diff"}
+    cpus = prev.get("env", {}).get("cpus")
+    if cpus is not None and cpus != _fingerprint_cpus():
+        return {"baseline_cpus": cpus,
+                "error": f"cpus mismatch (current {_fingerprint_cpus()}) — no diff"}
+    return None
+
+
 def _gate_baseline(here: Path, sf_val=None) -> dict:
     """Prior-round per-query walls for the inline first-pass gate.
     Returns {} when no usable baseline exists (none, unreadable, or
-    recorded at a different SF), which disables the gate; the end-stage
-    ``_regressions`` REPORTS those conditions instead of skipping them,
-    but both resolve the baseline through the same helpers above."""
+    recorded at a different SF or core count), which disables the gate;
+    the end-stage ``_regressions`` REPORTS those conditions instead of
+    skipping them, but both resolve the baseline through the same
+    helpers above."""
     prev_path = _newest_prior_sidecar(here)
     if prev_path is None:
         return {}
@@ -183,7 +201,7 @@ def _gate_baseline(here: Path, sf_val=None) -> dict:
         prev = json.loads(prev_path.read_text())
     except (OSError, json.JSONDecodeError):
         return {}
-    if sf_val is not None and prev.get("sf") != sf_val:
+    if _baseline_mismatch(prev, sf_val):
         return {}
     return _merge_timing_sections(prev)
 
@@ -250,11 +268,9 @@ def _regressions(current: dict, here: Path, sf_val=None,
         prev = json.loads(prev_path.read_text())
     except (OSError, json.JSONDecodeError):
         return {"baseline": prev_path.name, "error": "unreadable"}
-    if sf_val is not None and prev.get("sf") != sf_val:
-        # cross-SF ratios are garbage both ways: a smaller current SF
-        # masks real regressions, a larger one flags everything
-        return {"baseline": prev_path.name, "baseline_sf": prev.get("sf"),
-                "error": f"sf mismatch (current {sf_val}) — no diff"}
+    mismatch = _baseline_mismatch(prev, sf_val)
+    if mismatch:
+        return {"baseline": prev_path.name, **mismatch}
     prev_t = _merge_timing_sections(prev)
     slow = {}
     for name, now in current.items():

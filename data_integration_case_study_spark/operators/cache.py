@@ -72,14 +72,16 @@ def truncate(df: DataFrame) -> DataFrame:
     truncation schedules one full job per round — a driver round-trip
     that dominated the wall of every fixed-round loop with no per-round
     action (profiled r11: markov_attribution 32.1 s of build vs 0.17 s
-    of exec; pagerank/hits/kcore similar). Lazily-marked RDDs are
-    persisted-on-first-compute, so a loop whose rounds ARE forced by
-    per-round actions (connected_components' convergence counts)
-    behaves exactly as before, while pure dataflow loops (pagerank,
-    hits, kmeans, markov, kcore) execute all rounds under the single
-    final action. Results are unchanged in both cases: every loop's
-    per-round math is decimal-snapped/exact by design, so
-    materialization timing cannot alter values.
+    of exec; pagerank/hits/kcore similar). Lazy is not job-free, though:
+    building the RDD calls ``execute()`` on the round's physical plan,
+    and under AQE that runs every shuffle stage of the round (and
+    collects its broadcasts) while the loop is being BUILT. Measured:
+    ``graph.pagerank(rounds=3)`` on a 20k-edge graph starts 26 jobs at
+    build with AQE on and 9 with it off. Only the final,
+    shuffle-free stage of each round waits for the first action, where
+    the marked RDD is persisted-on-first-compute. Results are unchanged
+    either way: every loop's per-round math is decimal-snapped/exact by
+    design, so materialization timing cannot alter values.
 
     With a directory the checkpoint is reliable and EAGER: its point is
     durability of each round, which requires actually writing it out as

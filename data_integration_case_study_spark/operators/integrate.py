@@ -159,6 +159,23 @@ def common_people(contacts: DataFrame, contracts: DataFrame) -> DataFrame:
     )
 
 
+def parse_source_dates(
+    contacts_raw: DataFrame, contracts_raw: DataFrame, relations_raw: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Dual-format date unification of the three renamed sources: the
+    contacts' and contracts' French dd/mm/yyyy dates and the relations'
+    ISO endpoint birthdays become DATE columns. One projection per
+    source."""
+    contract_dates = ["birthday"] + [c for c in ("open_at", "date_price")
+                                     if c in contracts_raw.columns]
+    return (
+        contacts_raw.withColumn("birthday", parse_date_fr("birthday")),
+        contracts_raw.withColumns({c: parse_date_fr(c) for c in contract_dates}),
+        relations_raw.withColumns({c: parse_date_iso(c)
+                                   for c in ("birthday_s", "birthday_d")}),
+    )
+
+
 def integration_pipeline(
     contacts_raw: DataFrame,
     contracts_raw: DataFrame,
@@ -173,16 +190,11 @@ def integration_pipeline(
     """
     from data_integration_case_study_spark.functions.phone import parse_phone_number
 
-    contacts = contacts_raw.withColumn("birthday", parse_date_fr("birthday"))
+    contacts, contracts, relations = parse_source_dates(
+        contacts_raw, contracts_raw, relations_raw
+    )
     if phone_column and phone_column in contacts_raw.columns:
         contacts = contacts.withColumn(phone_column, parse_phone_number(phone_column))
-    contracts = contracts_raw.withColumn("birthday", parse_date_fr("birthday"))
-    for date_col in ("open_at", "date_price"):
-        if date_col in contracts.columns:
-            contracts = contracts.withColumn(date_col, parse_date_fr(date_col))
-    relations = relations_raw.withColumn(
-        "birthday_s", parse_date_iso("birthday_s")
-    ).withColumn("birthday_d", parse_date_iso("birthday_d"))
 
     entities = build_entities(contacts, contracts, relations)
 

@@ -85,11 +85,9 @@ def _sources(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, Da
 def integration_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The unified entities dimension from all three constructed sources
     (EP1 core: D1-D4 + F2 + F4 + dual-format date unification)."""
-    contacts, contracts, relations = _sources(spark, sf_dir)
-    out = integrate.integration_pipeline(
-        contacts, contracts, relations, phone_column=None
+    e = integrate.build_entities(
+        *integrate.parse_source_dates(*_sources(spark, sf_dir))
     )
-    e = out["entities"]
     return e.select(
         "entity_id", "name", "first_name",
         F.col("birthday").cast("string").alias("birthday"), "entity_type",

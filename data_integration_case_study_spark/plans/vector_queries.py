@@ -1756,17 +1756,17 @@ def mmr_diverse_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = e.filter(F.col("vec_id") == 0).select(
         F.col("emb").alias("qemb"),
-        _exact_norm_col(F.col("emb")).alias("qnrm"),
+        _exact_norm_col("emb").alias("qnrm"),
     )
     rel = (
-        e.withColumn("nrm", _exact_norm_col(F.col("emb")))
+        e.withColumn("nrm", _exact_norm_col("emb"))
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
             "emb",
             "nrm",
             (
-                _exact_dot_cols(F.col("emb"), F.col("qemb"))
+                _exact_dot_cols("emb", "qemb")
                 / (F.col("qnrm") * F.col("nrm"))
             ).alias("relevance"),
         )
@@ -1798,7 +1798,7 @@ def mmr_diverse_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "vec_id",
                     "relevance",
                     (
-                        _exact_dot_cols(F.col("emb"), F.col("semb"))
+                        _exact_dot_cols("emb", "semb")
                         / (F.col("nrm") * F.col("snrm"))
                     ).alias("sim"),
                 )

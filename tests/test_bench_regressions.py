@@ -218,6 +218,27 @@ def test_gate_baseline_same_rules_as_regressions(tmp_path):
     assert bench._gate_baseline(tmp_path / "no_sidecars_here", 0.1) == {}
 
 
+def test_gate_baseline_disabled_by_cpus_mismatch(tmp_path, monkeypatch):
+    # an 8-core baseline must not gate (or be diffed against) a 4-core
+    # run: a core-count mismatch is handled like an SF mismatch
+    (tmp_path / "BENCH_r06_local.json").write_text(json.dumps({
+        "queries": {"a": 1.0}, "extra": {}, "sf": 0.1,
+        "env": {"cpus": 8, "load_avg_1m": 1.0},
+    }))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert bench._gate_baseline(tmp_path, 0.1) == {}
+    out = bench._regressions({"a": 3.0}, tmp_path, sf_val=0.1)
+    assert "all" not in out
+    assert out["baseline"] == "BENCH_r06_local.json"
+    assert out["baseline_cpus"] == 8
+    assert "cpus mismatch (current 4)" in out["error"]
+    assert bench._regressions_compact(out) is out
+    # the same core count gates and diffs normally
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    assert bench._gate_baseline(tmp_path, 0.1) == {"a": 1.0}
+    assert set(bench._regressions({"a": 3.0}, tmp_path, sf_val=0.1)["all"]) == {"a"}
+
+
 def test_variance_summary_attributes_uniform_shift():
     """Round-10 verdict ask #5: a near-uniform ratio shift across many
     queries reads as box contention (median well above 1, tight IQR);

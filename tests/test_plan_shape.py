@@ -334,3 +334,33 @@ def test_blocked_rank_matches_window_rank(spark, sf_dir):
         # release it so later plan-shape tests see no InMemoryRelation
         cache.release_tracked()
         spark.catalog.clearCache()
+
+
+def _node_counts(df, *names):
+    # operator names at the head of each line of the executed plan's tree
+    # string ("Exchange" is a shuffle; BroadcastExchange is its own name)
+    import re
+
+    heads = [
+        re.match(r"[\s:|+\-*]*(\w*)", line).group(1)
+        for line in df._jdf.queryExecution().executedPlan().toString().splitlines()
+    ]
+    return {n: heads.count(n) for n in names}
+
+
+def test_exact_cosine_scores_pairs_without_exploding(spark, sf_dir):
+    # brute-force cosine scores every (query, candidate) pair with one
+    # O(d) fold in a broadcast nested-loop join: no posexplode of either
+    # side, and the per-query top-k window is the only shuffle
+    from data_integration_case_study_spark.plans import vector_queries as vq
+
+    got = _node_counts(
+        vq.cosine_topk(spark, sf_dir),
+        "Generate", "Exchange", "BroadcastNestedLoopJoin", "HashAggregate",
+    )
+    assert got == {"Generate": 0, "Exchange": 1,
+                   "BroadcastNestedLoopJoin": 1, "HashAggregate": 0}, got
+    # IVF explodes only for cell assignment (corpus, queries, and the
+    # centroids under each assignment and its norms); the candidate
+    # re-rank folds whole vectors — the exploded re-rank had 10
+    assert _node_counts(vq.ivf_topk(spark, sf_dir), "Generate") == {"Generate": 6}

@@ -563,3 +563,105 @@ def test_extract_features_batch_decoder(spark):
     rows = {r["doc_id"]: r for r in mm.extract_features(p).collect()}
     assert rows[1]["decoder"] == "fake_decoder"
     assert rows[1]["features"] == mm.fake_decoder(b"hello")
+
+
+_VEC_SCHEMA = "vec_id long, embedding array<double>"
+
+
+def _both_exact_paths(corpus, queries, k):
+    # brute force, and IVF probing every cell (so its candidate set is
+    # the whole corpus and its answer must equal brute force)
+    return {
+        "brute": similarity.cosine_topk_bruteforce(corpus, queries, k=k),
+        "ivf": similarity.ivf_topk(corpus, queries, k=k, n_cells=2, nprobe=2),
+    }
+
+
+@pytest.mark.parametrize("bad, why", [
+    pytest.param([1.0, None, 2.0], "null component", id="null_component"),
+    pytest.param([0.0, 0.0, 0.0], "zero norm", id="zero_norm"),
+    pytest.param([1.0, 2.0], "has width 3, c_id 3 has width 2", id="ragged"),
+])
+def test_exact_rerank_raises_on_degenerate_vectors(spark, bad, why):
+    rows = [(0, [1.0, 0.0, 0.5]), (1, [0.0, 1.0, 0.5]), (2, [1.0, 1.0, 1.0]),
+            (3, bad)]
+    df = spark.createDataFrame(rows, _VEC_SCHEMA)
+    for out in _both_exact_paths(df, df.filter("vec_id = 0"), 3).values():
+        with pytest.raises(Exception, match=f"{similarity.DEGENERATE_VECTOR}.*{why}"):
+            out.collect()
+
+
+def test_exact_rerank_drops_null_vectors(spark):
+    rows = [(0, [1.0, 0.0]), (1, [1.0, 0.1]), (2, [0.0, 1.0]), (3, None)]
+    df = spark.createDataFrame(rows, _VEC_SCHEMA)
+    for name, out in _both_exact_paths(df, df.filter("vec_id < 2"), 5).items():
+        got = sorted((r["q_id"], r["c_id"], r["rank"]) for r in out.collect())
+        assert got == [(0, 1, 1), (0, 2, 2), (1, 0, 1), (1, 2, 2)], name
+
+
+def test_exact_rerank_small_and_empty_corpora(spark):
+    cols = ["q_id", "c_id", "cosine", "rank"]
+    empty = spark.createDataFrame([], _VEC_SCHEMA)
+    q = spark.createDataFrame([(0, [1.0, 0.0])], _VEC_SCHEMA)
+    out = similarity.cosine_topk_bruteforce(empty, q, k=3)
+    assert out.columns == cols and out.collect() == []
+    # one-row corpus: the query itself (excluded) or one other vector
+    assert similarity.cosine_topk_bruteforce(q, q, k=3).collect() == []
+    one = spark.createDataFrame([(7, [2.0, 0.0])], _VEC_SCHEMA)
+    got = similarity.cosine_topk_bruteforce(one, q, k=3).collect()
+    assert [tuple(r) for r in got] == [(0, 7, 1.0, 1)]
+    # k larger than the corpus: every other vector, densely ranked
+    rows = [(0, [1.0, 0.0]), (1, [1.0, 1.0]), (2, [0.0, 1.0])]
+    df = spark.createDataFrame(rows, _VEC_SCHEMA)
+    for name, out in _both_exact_paths(df, df, 10).items():
+        assert out.columns == cols
+        by_q = {}
+        for r in out.collect():
+            by_q.setdefault(r["q_id"], []).append((r["rank"], r["c_id"]))
+        assert {q_: sorted(v) for q_, v in by_q.items()} == {
+            0: [(1, 1), (2, 2)], 1: [(1, 0), (2, 2)], 2: [(1, 1), (2, 0)],
+        }, name
+
+
+def test_exact_rerank_ties_break_by_candidate_id(spark):
+    # three copies of one vector score the same cosine against the query;
+    # ranks follow c_id
+    rows = [(0, [1.0, 2.0]), (5, [3.0, 1.0]), (3, [3.0, 1.0]), (4, [3.0, 1.0]),
+            (1, [-1.0, 0.5])]
+    df = spark.createDataFrame(rows, _VEC_SCHEMA)
+    for name, out in _both_exact_paths(df, df.filter("vec_id = 0"), 4).items():
+        got = [(r["c_id"], r["rank"]) for r in out.orderBy("rank").collect()]
+        assert got == [(3, 1), (4, 2), (5, 3), (1, 4)], name
+
+
+def _grid_cosine_reference(a, b):
+    # the engine's arithmetic in pure Python: each double product snapped
+    # with floor(x*y*2^40 + 0.5) in IEEE doubles, the integers summed
+    # exactly, dot = sum / 2^40, norm = sqrt(sum of snapped squares / 2^40)
+    from fractions import Fraction
+
+    def dot(x, y):
+        total = sum(Fraction(math.floor(u * v * 2.0**40 + 0.5)) for u, v in zip(x, y))
+        return float(total / 2**40)
+
+    return dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+
+
+def test_exact_rerank_matches_grid_snapped_reference(spark):
+    import random
+
+    for seed in range(3):
+        rng = random.Random(seed)
+        d = rng.choice([3, 8, 17])
+        vecs = {i: [rng.uniform(-2, 2) for _ in range(d)] for i in range(12)}
+        df = spark.createDataFrame(list(vecs.items()), _VEC_SCHEMA)
+        qids = [0, 1, 2]
+        want = {}
+        for q_ in qids:
+            scored = sorted(
+                ((-_grid_cosine_reference(vecs[q_], v), c) for c, v in vecs.items() if c != q_)
+            )[:5]
+            want.update({(q_, c): (-s, r) for r, (s, c) in enumerate(scored, 1)})
+        for name, out in _both_exact_paths(df, df.filter("vec_id < 3"), 5).items():
+            got = {(r["q_id"], r["c_id"]): (r["cosine"], r["rank"]) for r in out.collect()}
+            assert got == want, (seed, name)
