@@ -1,40 +1,15 @@
-"""Vector/embedding functions (SURVEY.md §2.9).
-
-Two evaluation shapes, used deliberately:
-
-- ``cosine_similarity`` / ``dot`` — per-pair zip_with+aggregate Column
-  expressions: O(d) per candidate pair with no row explosion. Right for
-  re-ranking a bounded candidate set (LSH buckets).
-- the explode+decimal-agg dataflow in operators/similarity.py — right for
-  exhaustive scoring, stays in whole-stage codegen, and its decimal
-  accumulation is order-independent (bit-identical across engines and
-  partitionings; same rationale as functions/numeric.dsum).
+"""Vector/embedding functions (SURVEY.md §2.9): the random-hyperplane
+projection and signature that the LSH paths bucket by, the adaptive
+plane count, and their DuckDB twins. Every product is snapped to the
+2^-40 grid and folded as integers, so values are order-independent and
+replay bit-for-bit in the oracle. Exact cosine scoring lives in
+operators/similarity.py (``_rerank_side`` / ``_pair_cosine``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two numeric array columns (sequential double fold)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    """L2 norm."""
-    return F.sqrt(dot(a, a))
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity; null when either vector has zero norm."""
-    na, nb = norm(a), norm(b)
-    return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb))
 
 
 # Snap grid for the signature's exact dot products (2^40; see

@@ -7,6 +7,11 @@ values are order-independent and oracle-checkable bit-for-bit). Scale
 path: random-hyperplane LSH bucketing that prunes the candidate set
 before the same exact re-rank; at 1B+ vectors the bucket join replaces
 the full cross score, same as MinHash replaces all-pairs Jaccard.
+
+Every exact cosine in the engine (top-k, IVF, LSH, near-dup, the kNN
+graph, plans/vector_queries.mmr_diverse_selection) builds its sides with
+_rerank_side and scores pairs with _pair_cosine, so all share one
+degenerate-input contract (DEGENERATE_VECTOR).
 """
 
 from __future__ import annotations
@@ -41,12 +46,15 @@ def _exact_dot_cols(x: str, y: str) -> Column:
     ``y``, as a single O(d) zip_with + aggregate fold — identical values
     (each product snaps to the same 2^-40 grid and integers add exactly,
     so fold order is irrelevant), but evaluated per PAIR ROW instead of
-    per exploded component row. Every exact cosine in this module (brute
-    force, the LSH, IVF and near-dup re-ranks, the kNN graph) scores its
-    pairs this way: a pair is 1 row of 2 vectors instead of d component
-    rows, with no groupBy at all. The fold is interpreted (lambda
-    evaluation), so the decimal accumulator is not its cost — a double
-    accumulator measured slower, not faster.
+    per exploded component row. A pair is 1 row of 2 vectors instead of
+    d component rows, with no groupBy at all. The fold is interpreted
+    (lambda evaluation), so the decimal accumulator is not its cost — a
+    double accumulator measured slower, not faster.
+
+    Only :func:`_exact_norm_col` and :func:`_pair_cosine` call it, so
+    every exact cosine in the engine reads sides checked by
+    :func:`_rerank_side` (an AST guard in tests/test_similarity.py pins
+    this).
 
     The fold is written as one SQL expression: built through the Column
     API it takes ~30 ms of py4j round trips per call, parsed ~0.3 ms (on
@@ -58,14 +66,15 @@ def _exact_dot_cols(x: str, y: str) -> Column:
     )
 
 
-def _exact_norm_col(v: str) -> Column:
-    """Map-only L2 norm of the array column named ``v`` on the exact
+def _exact_norm_col(prefix: str) -> Column:
+    """Map-only L2 norm of the side column ``<prefix>_v`` on the exact
     grid (no explode, no groupBy). Null when any component is null."""
+    v = f"{prefix}_v"
     return F.sqrt(_exact_dot_cols(v, v))
 
 
-# Message prefix of the one error the exact re-rank paths raise on
-# degenerate input (see _rerank_side and _pair_cosine).
+# Message prefix of the one error every exact cosine raises on degenerate
+# input (see _rerank_side and _pair_cosine).
 DEGENERATE_VECTOR = "DEGENERATE_VECTOR"
 
 
@@ -77,39 +86,71 @@ def _degenerate(*parts: str) -> str:
 
 
 def _rerank_side(df: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame:
-    """One side of an exact cosine re-rank: (<prefix>_id, <prefix>_v,
-    <prefix>_norm), the norm computed once per vector.
+    """One side of an exact cosine: ``df`` with ``id_col``/``vec_col``
+    renamed to <prefix>_id/<prefix>_v and <prefix>_norm added, the norm
+    computed once per vector. Other columns ride along.
 
     Null vectors are dropped. A null component (it makes the norm fold
     null) or a zero norm fails the job with :data:`DEGENERATE_VECTOR`,
     checked once per vector inside the plan. The check reads the norm
     from a second projection so the fold is evaluated once, not once per
     CASE branch."""
-    i, v, n = f"{prefix}_id", f"{prefix}_v", f"{prefix}_norm"
-    side = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias(i),
-        F.col(vec_col).alias(v),
-        _exact_norm_col(vec_col).alias(n),
+    i, n = f"{prefix}_id", f"{prefix}_norm"
+    side = (
+        df.filter(F.col(vec_col).isNotNull())
+        .withColumnsRenamed({id_col: i, vec_col: f"{prefix}_v"})
+        .withColumn(n, _exact_norm_col(prefix))
     )
     who = f"'{id_col} ', CAST({i} AS STRING)"
     null_part = _degenerate(who, "' has a null component'")
     zero_norm = _degenerate(who, "' has a zero norm'")
-    return side.select(i, v, F.expr(
+    return side.withColumn(n, F.expr(
         f"CASE WHEN {n} IS NULL THEN {null_part} "
         f"WHEN {n} = 0 THEN {zero_norm} ELSE {n} END"
-    ).alias(n))
+    ))
 
 
-def _pair_cosine() -> Column:
-    """Exact cosine of a joined pair row carrying (q_id, q_v, q_norm) and
-    (c_id, c_v, c_norm). A width mismatch fails the job with
-    :data:`DEGENERATE_VECTOR` (zip_with would pad with nulls)."""
-    width = _degenerate(
-        "'q_id ', CAST(q_id AS STRING), ' has width ', CAST(size(q_v) AS STRING)",
-        "', c_id ', CAST(c_id AS STRING), ' has width ', CAST(size(c_v) AS STRING)",
+def _renamed(side: DataFrame, src: str, dst: str, *keep: str) -> DataFrame:
+    """A checked side's (id, v, norm) columns under prefix ``dst``, plus
+    the ``keep`` columns."""
+    return side.select(
+        *[F.col(f"{src}_{c}").alias(f"{dst}_{c}") for c in ("id", "v", "norm")],
+        *keep,
     )
-    return F.when(F.expr("size(q_v) != size(c_v)"), F.expr(width)).otherwise(
-        _exact_dot_cols("q_v", "c_v") / (F.col("q_norm") * F.col("c_norm"))
+
+
+def _pair_cosine(a: str, b: str) -> Column:
+    """Exact cosine of a joined pair row carrying two checked sides,
+    (<a>_id, <a>_v, <a>_norm) and (<b>_id, <b>_v, <b>_norm). A width
+    mismatch fails the job with :data:`DEGENERATE_VECTOR` (zip_with would
+    pad with nulls)."""
+    width = _degenerate(
+        f"'{a}_id ', CAST({a}_id AS STRING), ' has width ', CAST(size({a}_v) AS STRING)",
+        f"', {b}_id ', CAST({b}_id AS STRING), ' has width ', CAST(size({b}_v) AS STRING)",
+    )
+    return F.when(F.expr(f"size({a}_v) != size({b}_v)"), F.expr(width)).otherwise(
+        _exact_dot_cols(f"{a}_v", f"{b}_v") / (F.col(f"{a}_norm") * F.col(f"{b}_norm"))
+    )
+
+
+def _scored_pairs(pairs: DataFrame) -> DataFrame:
+    """(id_a, id_b, block, cosine) from pair rows joining an "a" and a
+    "b" side that share a ``block``."""
+    return pairs.select(
+        F.col("a_id").alias("id_a"), F.col("b_id").alias("id_b"), "block",
+        _pair_cosine("a", "b").alias("cosine"),
+    )
+
+
+def _block_pairs(side: DataFrame) -> DataFrame:
+    """Every unordered pair of an "a" side's vectors that share a
+    ``block``, scored once: one self-join on the block key carrying whole
+    vectors (a factor-of-d less shuffle than an exploded per-component
+    join), norms riding along map-only."""
+    return _scored_pairs(
+        _renamed(side, "a", "a", "block")
+        .join(_renamed(side, "a", "b", "block"), "block")
+        .filter(F.col("a_id") < F.col("b_id"))
     )
 
 
@@ -131,20 +172,25 @@ def _exploded(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
 
 
 def _fixed_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Vector width from the first row (None on an empty frame) — the
-    cheap probe that unlocks the literal-hyperplane signature path
-    (functions/vector._plane_dot: hyperplanes precomputed driver-side,
-    no per-row sha256). Embedding corpora are fixed-width by contract;
-    a row with a different width fails loudly in the signature guard."""
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    """Vector width from the first non-null vector (None when there is
+    none) — the cheap probe that unlocks the literal-hyperplane signature
+    path (functions/vector._plane_dot: hyperplanes precomputed
+    driver-side, no per-row sha256). It reads the rows the signature
+    sees: :func:`_rerank_side` drops null vectors. Embedding corpora are
+    fixed-width by contract; a row with a different width fails loudly
+    in the signature guard."""
+    row = df.filter(F.col(vec_col).isNotNull()).select(
+        F.size(F.col(vec_col)).alias("d")
+    ).first()
     return None if row is None else row["d"]
 
 
 def _count_and_dim(df: DataFrame, vec_col: str) -> tuple[int, int | None]:
-    """Corpus row count AND vector width in ONE action (one aggregation
-    job instead of the count + first pair — on a large un-cached source
-    each of those is a full scan queued before the real query runs)."""
-    row = df.agg(
+    """Non-null vector count AND width (as :func:`_fixed_dim`) in ONE
+    action (one aggregation job instead of the count + first pair — on a
+    large un-cached source each of those is a full scan queued before the
+    real query runs)."""
+    row = df.filter(F.col(vec_col).isNotNull()).agg(
         F.count(F.lit(1)).alias("n"),
         F.first(F.size(F.col(vec_col))).alias("d"),
     ).first()
@@ -163,7 +209,7 @@ def cosine_topk_bruteforce(
     Dataflow: each side becomes (id, vector, norm) rows, the norm folded
     once per vector → one broadcast nested-loop join (the query side is
     tiny) scores every (query, candidate) pair with one O(d) exact fold
-    (:func:`_exact_dot_cols`) → per-query top-k window. No explode and
+    (:func:`_pair_cosine`) → per-query top-k window. No explode and
     no aggregation: the only shuffle is the k-row-per-query window.
 
     Input contract: null vectors are dropped; a null component, a zero
@@ -172,7 +218,7 @@ def cosine_topk_bruteforce(
     q = _rerank_side(queries, id_col, vec_col, "q")
     c = _rerank_side(corpus, id_col, vec_col, "c")
     scored = c.join(F.broadcast(q), F.col("q_id") != F.col("c_id")).select(
-        "q_id", "c_id", _pair_cosine().alias("cosine")
+        "q_id", "c_id", _pair_cosine("q", "c").alias("cosine")
     )
     return _topk_per_query(scored, k)
 
@@ -199,26 +245,23 @@ def ann_lsh_topk(
     instead of forcing fewer planes / bigger buckets. Scale: signatures
     are map-only; probing explodes only the tiny query side; the bucket
     join stays an equi-join. sha256-derived signatures plus the exact
-    decimal re-rank keep every variant oracle-checkable."""
+    decimal re-rank keep every variant oracle-checkable. Input contract
+    as :func:`knn_graph`."""
+    # One signature Column serves both sides (building it is ~0.25 s of
+    # py4j calls), so the query side is checked under the corpus prefix
+    # and renamed after it is signed.
     sig = random_hyperplane_signature(
-        F.col(vec_col), n_planes, seed, dim=_fixed_dim(corpus, vec_col)
+        F.col("c_v"), n_planes, seed, dim=_fixed_dim(corpus, vec_col)
     )
     # The corpus side stays put (bucket + vector + map-only norm); the
     # tiny query side carries its vector through the probe explosion and
     # broadcasts, so the whole operator is ONE broadcast-hash join with
-    # the exact O(d) dot folded per candidate row (_exact_dot_cols) —
+    # the exact O(d) cosine folded per candidate row (_pair_cosine) —
     # no exploded per-component join, no norm shuffle.
-    c_sig = corpus.select(
-        F.col(id_col).alias("c_id"),
-        sig.alias("bucket"),
-        F.col(vec_col).alias("c_v"),
-        _exact_norm_col(vec_col).alias("c_norm"),
-    )
-    q_base = queries.select(
-        F.col(id_col).alias("q_id"),
-        sig.alias("__sig"),
-        F.col(vec_col).alias("q_v"),
-        _exact_norm_col(vec_col).alias("q_norm"),
+    c_sig = _rerank_side(corpus, id_col, vec_col, "c").withColumn("bucket", sig)
+    q_base = _renamed(
+        _rerank_side(queries, id_col, vec_col, "c").withColumn("__sig", sig),
+        "c", "q", "__sig",
     )
     masks = [0] + [1 << i for i in range(min(probe_bits, n_planes))]
     q_sig = q_base.select(
@@ -230,7 +273,7 @@ def ann_lsh_topk(
     scored = (
         c_sig.join(F.broadcast(q_sig), "bucket")
         .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", _pair_cosine().alias("cosine"))
+        .select("q_id", "c_id", _pair_cosine("q", "c").alias("cosine"))
     )
     return _topk_per_query(scored, k)
 
@@ -416,7 +459,7 @@ def ivf_topk(
     scored = (
         cand.join(_rerank_side(corpus, id_col, vec_col, "c"), "c_id")
         .join(F.broadcast(_rerank_side(queries, id_col, vec_col, "q")), "q_id")
-        .select("q_id", "c_id", _pair_cosine().alias("cosine"))
+        .select("q_id", "c_id", _pair_cosine("q", "c").alias("cosine"))
     )
     return _topk_per_query(scored, k)
 
@@ -588,8 +631,8 @@ def embedding_neardup_pairs(
     hyperplane buckets keep block size ~N/2^b regardless of N.
 
     Plan (round 8 — the round-7 sf1 audit timed out the old exploded
-    per-component join): each candidate pair scores its dot in a single
-    O(d) fold (:func:`_exact_dot_cols`, bit-identical grid-snapped
+    per-component join): each candidate pair scores its cosine in a
+    single O(d) fold (:func:`_pair_cosine`, bit-identical grid-snapped
     decimal sum), so the pair join shuffles 1 row of 2 vectors instead
     of d component rows — a factor-of-d shuffle cut, same values.
     ``block_window=W`` additionally bounds a linearly-growing block the
@@ -599,64 +642,70 @@ def embedding_neardup_pairs(
     b²/2; duplicate clusters survive via successor chaining). The rank
     comes from :func:`dedup.blocked_rank` — bounded-cardinality blocks
     must not become one whole-block window sort. ``None`` keeps the
-    exhaustive in-block semantics."""
+    exhaustive in-block semantics. Input contract as :func:`knn_graph`."""
     from data_integration_case_study_spark.operators.dedup import blocked_rank
 
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(block_col).alias("block"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        _exact_norm_col(vec_col).alias("nrm"),
+    side = _rerank_side(
+        df.select(id_col, vec_col, F.col(block_col).alias("block")), id_col, vec_col, "a"
     )
     if block_window is None:
-        a = base.select(
-            F.col("id").alias("id_a"), "block",
-            F.col("v").alias("va"), F.col("nrm").alias("norm_a"),
-        )
-        b = base.select(
-            F.col("id").alias("id_b"), "block",
-            F.col("v").alias("vb"), F.col("nrm").alias("norm_b"),
-        )
-        scored = a.join(b, "block").filter(F.col("id_a") < F.col("id_b"))
+        scored = _block_pairs(side)
     else:
-        base = cache.track(base)
-        ranked = blocked_rank(base.select("id", "block"), "block", "id")
+        side = cache.track(side)
+        ranked = blocked_rank(side.select(F.col("a_id").alias("id"), "block"), "block", "id")
         # repartition after the W-way explode — see dedup.ngram_jaccard_
         # pairs: AQE coalesces the tiny ranked shuffle to ~1 partition
         # and the broadcast-only downstream would single-task the verify
         probes = ranked.select(
-            F.col("id").alias("id_a"),
+            F.col("id").alias("a_id"),
             "block",
             F.explode(
                 F.sequence(F.col("__r") + 1, F.col("__r") + block_window)
             ).alias("__r"),
         ).repartition(F.col("block"), F.col("__r"))
         cand = probes.join(
-            ranked.select(F.col("id").alias("id_b"), "block", "__r"),
+            ranked.select(F.col("id").alias("b_id"), "block", "__r"),
             ["block", "__r"],
-        ).select("id_a", "id_b", "block")
-        scored = cand.join(
-            base.select(
-                F.col("id").alias("id_a"),
-                F.col("v").alias("va"), F.col("nrm").alias("norm_a"),
-            ),
-            "id_a",
-        ).join(
-            base.select(
-                F.col("id").alias("id_b"),
-                F.col("v").alias("vb"), F.col("nrm").alias("norm_b"),
-            ),
-            "id_b",
+        ).select("a_id", "b_id", "block")
+        scored = _scored_pairs(
+            cand.join(_renamed(side, "a", "a"), "a_id")
+            .join(_renamed(side, "a", "b"), "b_id")
         )
-    return (
-        scored.withColumn(
-            "cosine",
-            _exact_dot_cols("va", "vb")
-            / (F.col("norm_a") * F.col("norm_b")),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "block", "cosine")
+    return scored.filter(F.col("cosine") >= threshold)
+
+
+def _bucket_pairs(
+    df: DataFrame, id_col: str, vec_col: str, n_planes: int | None,
+    seed: int, target_bucket_size: int,
+) -> DataFrame:
+    """The LSH blocking shared by :func:`embedding_neardup_pairs_lsh` and
+    :func:`knn_graph`: :func:`_block_pairs` over random-hyperplane
+    buckets. ``n_planes=None`` derives the plane count from the non-null
+    vector count (:func:`functions.vector.adaptive_n_planes`, one
+    metadata-cheap count), holding expected bucket population at
+    ``target_bucket_size``.
+
+    The checked side is spread to the cluster parallelism BEFORE the
+    norm and signature map (a small parquet scans as 1-2 partitions, and
+    the folds are the CPU-heavy step) and persisted, because it feeds
+    both pair sides. Cache lifecycle is caller-owned
+    (spark.catalog.clearCache between pipeline stages, or
+    operators.cache.release_tracked() for library sessions)."""
+    from data_integration_case_study_spark.sources.readers import (
+        spread_to_parallelism,
     )
+
+    if n_planes is None:
+        n, dim = _count_and_dim(df, vec_col)
+        n_planes = adaptive_n_planes(n, target_bucket_size)
+    else:
+        dim = _fixed_dim(df, vec_col)
+    side = _rerank_side(
+        spread_to_parallelism(df.select(id_col, vec_col)), id_col, vec_col, "a"
+    )
+    return _block_pairs(cache.track(side.withColumn(
+        "block", random_hyperplane_signature(F.col("a_v"), n_planes, seed, dim=dim)
+    )))
 
 
 def embedding_neardup_pairs_lsh(
@@ -681,47 +730,12 @@ def embedding_neardup_pairs_lsh(
     Cost: high-cosine pairs land in the same bucket with probability
     (1 - θ/π)^n_planes (θ = angle), so a single-probe blocking trades a
     small recall loss for the bounded join — exactly the LSH contract.
-    Same exact decimal scoring; sha256-derived buckets keep it
-    oracle-checkable. Output block = the shared bucket id."""
-    if n_planes is None:
-        n, dim = _count_and_dim(df, vec_col)
-        n_planes = adaptive_n_planes(n, target_bucket_size)
-    else:
-        dim = _fixed_dim(df, vec_col)
-    sig = random_hyperplane_signature(F.col(vec_col), n_planes, seed, dim=dim)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        sig.alias("block"),
-        F.col(vec_col).alias("v"),
-        _exact_norm_col(vec_col).alias("nrm"),
-    )
-    # base feeds both pair sides; tracked persist
-    # (operators.cache.release_tracked) — same contract as knn_graph
-    base = cache.track(base)
-    # One bucket-keyed self-join carrying whole vectors; each pair row
-    # scores its dot in a single O(d) fold (see _exact_dot_cols — a
-    # factor-of-d less shuffle than the exploded per-component join) and
-    # norms ride along map-only from base, so the whole operator is one
-    # Exchange on the bucket key.
-    a = base.select(
-        F.col("id").alias("id_a"), "block",
-        F.col("v").alias("va"), F.col("nrm").alias("norm_a"),
-    )
-    b = base.select(
-        F.col("id").alias("id_b"), "block",
-        F.col("v").alias("vb"), F.col("nrm").alias("norm_b"),
-    )
-    return (
-        a.join(b, "block")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            _exact_dot_cols("va", "vb")
-            / (F.col("norm_a") * F.col("norm_b")),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "block", "cosine")
-    )
+    Same exact decimal scoring and input contract as
+    :func:`knn_graph`; sha256-derived buckets keep it oracle-checkable.
+    Output block = the shared bucket id."""
+    return _bucket_pairs(
+        df, id_col, vec_col, n_planes, seed, target_bucket_size
+    ).filter(F.col("cosine") >= threshold)
 
 
 def knn_graph(
@@ -750,68 +764,23 @@ def knn_graph(
     neighbor emit no edges — the documented recall trade; multi-probe or
     fewer planes raise recall exactly as in :func:`ann_lsh_topk`.
 
-    Computes each unordered pair's exact decimal cosine ONCE, then
-    mirrors the edge list before ranking (graph edges are directed:
-    a→b and b→a rank independently in their source's top-k).
+    Computes each unordered pair's exact decimal cosine ONCE
+    (:func:`_bucket_pairs`, shared with
+    :func:`embedding_neardup_pairs_lsh`), then mirrors the edge list
+    before ranking (graph edges are directed: a→b and b→a rank
+    independently in their source's top-k).
 
-    The (id, block, vector) base is spread to the cluster parallelism
-    BEFORE the signature map (a small parquet scans as 1-2 partitions,
-    and the sha256-derived signature is the CPU-heavy step) and persisted
-    (it feeds both pair sides and the norm agg — unpersisted, Spark
-    recomputes the signatures for each read; cache lifecycle is
-    caller-owned, same contract as the MinHash summaries)."""
-    from data_integration_case_study_spark.sources.readers import (
-        spread_to_parallelism,
-    )
-
-    if n_planes is None:
-        n, dim = _count_and_dim(df, vec_col)
-        n_planes = adaptive_n_planes(n, target_bucket_size)
-    else:
-        dim = _fixed_dim(df, vec_col)
-    sig = random_hyperplane_signature(F.col(vec_col), n_planes, seed, dim=dim)
-    base = spread_to_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        sig.alias("block"),
-        F.col(vec_col).alias("v"),
-        _exact_norm_col(vec_col).alias("nrm"),
-    )
-    # cache lifecycle is caller-owned (spark.catalog.clearCache between
-    # pipeline stages, or operators.cache.release_tracked() for library
-    # sessions)
-    base = cache.track(base)
-    # Bucket-keyed self-join over whole vectors; each unordered pair is
-    # scored once by a single O(d) fold (_exact_dot_cols) with both
-    # norms riding along map-only — one Exchange on the bucket key,
-    # a factor-of-d less shuffle than the exploded per-component join.
-    a = base.select(
-        F.col("id").alias("id_a"), "block",
-        F.col("v").alias("va"), F.col("nrm").alias("norm_a"),
-    )
-    b = base.select(
-        F.col("id").alias("id_b"), "block",
-        F.col("v").alias("vb"), F.col("nrm").alias("norm_b"),
-    )
-    scored = (
-        a.join(b, "block")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            _exact_dot_cols("va", "vb")
-            / (F.col("norm_a") * F.col("norm_b")),
-        )
-        .select("id_a", "id_b", "cosine")
-    )
-    edges = scored.select(
-        F.col("id_a").alias("src_id"), F.col("id_b").alias("nbr_id"), "cosine"
+    Input contract (every exact cosine in this module): null vectors are
+    dropped; a null component, a zero norm or two vectors of different
+    widths fail the job with :data:`DEGENERATE_VECTOR`. On the LSH paths
+    a width mismatch may fail first in the signature guard
+    (``hyperplane signature: expected d-dim vector``)."""
+    pairs = _bucket_pairs(df, id_col, vec_col, n_planes, seed, target_bucket_size)
+    edges = pairs.select(
+        F.col("id_a").alias("q_id"), F.col("id_b").alias("c_id"), "cosine"
     ).unionByName(
-        scored.select(
-            F.col("id_b").alias("src_id"), F.col("id_a").alias("nbr_id"), "cosine"
-        )
+        pairs.select(F.col("id_b").alias("q_id"), F.col("id_a").alias("c_id"), "cosine")
     )
-    w = Window.partitionBy("src_id").orderBy(F.col("cosine").desc(), F.col("nbr_id"))
-    return (
-        edges.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("src_id", "nbr_id", "cosine", "rank")
+    return _topk_per_query(edges, k).select(
+        F.col("q_id").alias("src_id"), F.col("c_id").alias("nbr_id"), "cosine", "rank"
     )

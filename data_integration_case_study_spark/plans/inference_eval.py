@@ -907,7 +907,8 @@ def adjusted_rand_kmeans_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     casts."""
     from data_integration_case_study_spark.operators.similarity import (
         _assign_cells,
-        _exact_sum_of_products,
+        _cell_norms,
+        _exploded,
         kmeans_centroids,
     )
 
@@ -915,17 +916,11 @@ def adjusted_rand_kmeans_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = kmeans_centroids(e, k=8, n_iter=2).select(
         "cell", "pos", F.col("val").alias("c_val")
     )
-    cn = cents.groupBy("cell").agg(
-        F.sqrt(
-            _exact_sum_of_products(F.col("c_val"), F.col("c_val"))
-        ).alias("cell_norm")
+    assign = _assign_cells(
+        _exploded(e, "vec_id", "embedding"), cents, _cell_norms(cents), "id", 1
     )
-    ex = e.select(
-        F.col("vec_id"), F.posexplode("embedding").alias("pos", "val")
-    ).withColumn("val", F.col("val").cast("double"))
-    assign = _assign_cells(ex, cents, cn, "vec_id", 1)
     cont = (
-        assign.join(e.select("vec_id", "label"), "vec_id")
+        assign.join(e.select(F.col("vec_id").alias("id"), "label"), "id")
         .groupBy("cell", "label")
         .agg(F.count(F.lit(1)).alias("n_ij"))
     )

@@ -1747,67 +1747,47 @@ def mmr_diverse_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB twin unrolls the identical k rounds."""
     from data_integration_case_study_spark.operators import cache
     from data_integration_case_study_spark.operators.similarity import (
-        _exact_dot_cols,
-        _exact_norm_col,
+        _pair_cosine,
+        _renamed,
+        _rerank_side,
     )
 
     e = read_parquet_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double_vec(F.col("embedding")).alias("emb")
     )
-    q = e.filter(F.col("vec_id") == 0).select(
-        F.col("emb").alias("qemb"),
-        _exact_norm_col("emb").alias("qnrm"),
-    )
-    rel = (
-        e.withColumn("nrm", _exact_norm_col("emb"))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "emb",
-            "nrm",
-            (
-                _exact_dot_cols("emb", "qemb")
-                / (F.col("qnrm") * F.col("nrm"))
-            ).alias("relevance"),
-        )
+    c = _rerank_side(e, "vec_id", "emb", "c")
+    q = _rerank_side(e.filter(F.col("vec_id") == 0), "vec_id", "emb", "q")
+    rel = c.crossJoin(F.broadcast(q)).select(
+        "c_id", "c_v", "c_norm", _pair_cosine("q", "c").alias("relevance")
     )
     # top-|pool| via orderBy+limit = TakeOrderedAndProject (per-partition
     # partial top-k then a bounded driver merge), NOT a global rank
     # window (which would single-partition the whole corpus)
     pool = cache.track(
-        rel.orderBy(F.desc("relevance"), "vec_id").limit(_MMR_POOL)
+        rel.orderBy(F.desc("relevance"), "c_id").limit(_MMR_POOL)
     )
     lam, mu = F.lit(_MMR_LAM), F.lit(_MMR_MU)
     out, sel_ids = [], []
     for r in range(1, _MMR_K + 1):
         if not sel_ids:
             scored = pool.select(
-                "vec_id",
+                "c_id",
                 "relevance",
                 F.lit(0.0).alias("max_sim_prev"),
                 (lam * F.col("relevance") - mu * F.lit(0.0)).alias("score"),
             )
         else:
-            sel = pool.filter(F.col("vec_id").isin(sel_ids)).select(
-                F.col("emb").alias("semb"), F.col("nrm").alias("snrm")
-            )
+            sel = _renamed(pool.filter(F.col("c_id").isin(sel_ids)), "c", "q")
             sims = (
-                pool.filter(~F.col("vec_id").isin(sel_ids))
+                pool.filter(~F.col("c_id").isin(sel_ids))
                 .crossJoin(F.broadcast(sel))
-                .select(
-                    "vec_id",
-                    "relevance",
-                    (
-                        _exact_dot_cols("emb", "semb")
-                        / (F.col("nrm") * F.col("snrm"))
-                    ).alias("sim"),
-                )
+                .select("c_id", "relevance", _pair_cosine("q", "c").alias("sim"))
             )
             scored = (
-                sims.groupBy("vec_id", "relevance")
+                sims.groupBy("c_id", "relevance")
                 .agg(F.max("sim").alias("max_sim_prev"))
                 .select(
-                    "vec_id",
+                    "c_id",
                     "relevance",
                     "max_sim_prev",
                     (
@@ -1815,17 +1795,17 @@ def mmr_diverse_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).alias("score"),
                 )
             )
-        top = scored.orderBy(F.desc("score"), "vec_id").limit(1).collect()[0]
+        top = scored.orderBy(F.desc("score"), "c_id").limit(1).collect()[0]
         out.append(
             (
                 r,
-                top["vec_id"],
+                top["c_id"],
                 top["relevance"],
                 top["max_sim_prev"],
                 top["score"],
             )
         )
-        sel_ids.append(top["vec_id"])
+        sel_ids.append(top["c_id"])
     return spark.createDataFrame(
         out,
         "sel_rank int, vec_id bigint, relevance double, "

@@ -211,92 +211,6 @@ def test_orc_round_trip_with_pushdown(spark, sf_dir, tmp_path):
     assert "PushedFilters: [" in plan and "o_totalprice" in plan.split("PushedFilters")[1][:200]
 
 
-# --- custom Python DataSource ----------------------------------------------
-
-
-def test_python_datasource_rows_match_generator(spark):
-    from data_integration_case_study_spark.sources import pysource
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(pysource.SyntheticEventsDataSource)
-    df = (
-        spark.read.format("synthetic_events")
-        .option("n_rows", "500")
-        .option("n_shards", "8")
-        .load()
-    )
-    rows = sorted(tuple(r) for r in df.collect())
-    want = sorted(pysource.synth_row(7, i, 8) for i in range(500))
-    assert rows == want
-    assert df.rdd.getNumPartitions() == 8
-
-
-def test_python_datasource_filter_pushdown_prunes_partitions(spark):
-    from data_integration_case_study_spark.sources import pysource
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(pysource.SyntheticEventsDataSource)
-    base = (
-        spark.read.format("synthetic_events")
-        .option("n_rows", "500")
-        .option("n_shards", "8")
-        .load()
-    )
-    want = [pysource.synth_row(7, i, 8) for i in range(500)]
-    one = base.filter("shard = 3")
-    assert sorted(tuple(r) for r in one.collect()) == sorted(
-        r for r in want if r[1] == 3
-    )
-    # the accepted EqualTo prunes partition planning to the one shard
-    assert one.rdd.getNumPartitions() == 1
-    several = base.filter("shard in (1, 4)")
-    assert sorted(tuple(r) for r in several.collect()) == sorted(
-        r for r in want if r[1] in (1, 4)
-    )
-    # residual (non-shard) predicates still evaluate post-scan
-    mixed = base.filter("shard = 3 and value > 100.0")
-    assert sorted(tuple(r) for r in mixed.collect()) == sorted(
-        r for r in want if r[1] == 3 and r[4] > 100.0
-    )
-
-
-def test_python_datasource_streaming_matches_batch(spark):
-    from data_integration_case_study_spark.sources import pysource
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(pysource.SyntheticEventsDataSource)
-    q = (
-        spark.readStream.format("synthetic_events")
-        .option("n_rows", "350")
-        .option("rows_per_batch", "100")
-        .load()
-        .writeStream.format("memory")
-        .queryName("t_pysource")
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(tuple(r) for r in spark.table("t_pysource").collect())
-    want = sorted(pysource.synth_row(7, i, 8) for i in range(350))
-    assert got == want
-
-
-def test_python_datasource_empty_prune_returns_zero_rows(spark):
-    from data_integration_case_study_spark.sources import pysource
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(pysource.SyntheticEventsDataSource)
-    df = (
-        spark.read.format("synthetic_events")
-        .option("n_rows", "100")
-        .option("n_shards", "8")
-        .load()
-        .filter("shard = 9")
-    )
-    assert df.count() == 0
-
-
 # -- catalog parquet reads: schema from the footer, on the driver ----------
 
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"

@@ -568,35 +568,135 @@ def test_extract_features_batch_decoder(spark):
 _VEC_SCHEMA = "vec_id long, embedding array<double>"
 
 
-def _both_exact_paths(corpus, queries, k):
-    # brute force, and IVF probing every cell (so its candidate set is
-    # the whole corpus and its answer must equal brute force)
+def _pairs_as_topk(pairs, ids, k):
+    # unordered (id_a, id_b, cosine) pairs -> top-k per query id in the
+    # (q_id, c_id, cosine, rank) schema
+    edges = pairs.select(
+        F.col("id_a").alias("q_id"), F.col("id_b").alias("c_id"), "cosine"
+    ).unionByName(
+        pairs.select(F.col("id_b").alias("q_id"), F.col("id_a").alias("c_id"), "cosine")
+    )
+    return similarity._topk_per_query(edges.join(ids, "q_id", "left_semi"), k)
+
+
+def _exact_paths(corpus, queries, k):
+    # every exact-cosine operator, each configured so its candidate set is
+    # the whole corpus (so its answer must equal brute force): IVF probes
+    # every cell, LSH uses one plane and probes the flipped bucket, the
+    # bucket self-joins use zero planes (one bucket), and near-dup blocks
+    # on one constant label with a threshold every cosine passes. Queries
+    # are a subset of the corpus.
+    blocked = corpus.withColumn("label", F.lit(0))
+    ids = queries.select(F.col("vec_id").alias("q_id"))
+    knn = similarity.knn_graph(corpus, k=k, n_planes=0).select(
+        F.col("src_id").alias("q_id"), F.col("nbr_id").alias("c_id"), "cosine", "rank"
+    )
     return {
         "brute": similarity.cosine_topk_bruteforce(corpus, queries, k=k),
         "ivf": similarity.ivf_topk(corpus, queries, k=k, n_cells=2, nprobe=2),
+        "ann_lsh": similarity.ann_lsh_topk(
+            corpus, queries, k=k, n_planes=1, probe_bits=1
+        ),
+        "neardup": _pairs_as_topk(
+            similarity.embedding_neardup_pairs(blocked, threshold=-2.0), ids, k
+        ),
+        "neardup_window": _pairs_as_topk(
+            similarity.embedding_neardup_pairs(
+                blocked, threshold=-2.0, block_window=100
+            ),
+            ids, k,
+        ),
+        "neardup_lsh": _pairs_as_topk(
+            similarity.embedding_neardup_pairs_lsh(corpus, threshold=-2.0, n_planes=0),
+            ids, k,
+        ),
+        "knn_graph": knn.join(ids, "q_id", "left_semi"),
     }
 
 
-@pytest.mark.parametrize("bad, why", [
-    pytest.param([1.0, None, 2.0], "null component", id="null_component"),
-    pytest.param([0.0, 0.0, 0.0], "zero norm", id="zero_norm"),
-    pytest.param([1.0, 2.0], "has width 3, c_id 3 has width 2", id="ragged"),
+_DV = similarity.DEGENERATE_VECTOR
+
+
+@pytest.mark.parametrize("bad, match", [
+    pytest.param([1.0, None, 2.0], f"{_DV}: vec_id 3 has a null component",
+                 id="null_component"),
+    pytest.param([0.0, 0.0, 0.0], f"{_DV}: vec_id 3 has a zero norm", id="zero_norm"),
+    # the pair check, or on the LSH paths the signature's width guard
+    pytest.param([1.0, 2.0], rf"{_DV}: \w+ 0 has width 3, \w+ 3 has width 2"
+                 r"|hyperplane signature: expected \d-dim vector", id="ragged"),
 ])
-def test_exact_rerank_raises_on_degenerate_vectors(spark, bad, why):
+def test_exact_rerank_raises_on_degenerate_vectors(spark, bad, match):
     rows = [(0, [1.0, 0.0, 0.5]), (1, [0.0, 1.0, 0.5]), (2, [1.0, 1.0, 1.0]),
             (3, bad)]
     df = spark.createDataFrame(rows, _VEC_SCHEMA)
-    for out in _both_exact_paths(df, df.filter("vec_id = 0"), 3).values():
-        with pytest.raises(Exception, match=f"{similarity.DEGENERATE_VECTOR}.*{why}"):
+    for name, out in _exact_paths(df, df.filter("vec_id = 0"), 3).items():
+        with pytest.raises(Exception, match=match):
             out.collect()
+            # pytest.fail raises outside Exception, so it is not swallowed
+            pytest.fail(f"{name} did not raise")
 
 
 def test_exact_rerank_drops_null_vectors(spark):
     rows = [(0, [1.0, 0.0]), (1, [1.0, 0.1]), (2, [0.0, 1.0]), (3, None)]
     df = spark.createDataFrame(rows, _VEC_SCHEMA)
-    for name, out in _both_exact_paths(df, df.filter("vec_id < 2"), 5).items():
+    for name, out in _exact_paths(df, df.filter("vec_id < 2"), 5).items():
         got = sorted((r["q_id"], r["c_id"], r["rank"]) for r in out.collect())
         assert got == [(0, 1, 1), (0, 2, 2), (1, 0, 1), (1, 2, 2)], name
+
+
+def test_lsh_dim_probe_reads_non_null_vectors(spark, monkeypatch):
+    # a leading null vector must neither hide the width (dim=None sends
+    # the signature down the per-row sha256 path) nor count toward the
+    # adaptive plane count
+    rows = [(9, None), (1, [1.0, 0.0, 0.0]), (2, [0.9, 0.1, 0.0])]
+    df = spark.createDataFrame(rows, _VEC_SCHEMA)
+    assert similarity._count_and_dim(df, "embedding") == (2, 3)
+    assert similarity._fixed_dim(df, "embedding") == 3
+    dims = []
+    real = similarity.random_hyperplane_signature
+
+    def spy(*args, dim=None):
+        dims.append(dim)
+        return real(*args, dim=dim)
+
+    monkeypatch.setattr(similarity, "random_hyperplane_signature", spy)
+    edges = similarity.knn_graph(df, k=1).collect()
+    assert dims == [3]
+    assert sorted((r["src_id"], r["nbr_id"]) for r in edges) == [(1, 2), (2, 1)]
+
+
+def test_exact_dot_reached_only_through_checked_sides():
+    """Every exact cosine reads sides checked by ``_rerank_side``: no
+    module under the package calls ``_exact_dot_cols`` except
+    ``similarity._exact_norm_col`` and ``similarity._pair_cosine``."""
+    import ast
+    from pathlib import Path
+
+    import data_integration_case_study_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    files = sorted(root.rglob("*.py"))
+    assert len(files) > 40
+    offenders = []
+    for f in files:
+        tree = ast.parse(f.read_text())
+        allowed = {
+            id(n)
+            for fn in ast.walk(tree)
+            if f == root / "operators" / "similarity.py"
+            and isinstance(fn, ast.FunctionDef)
+            and fn.name in ("_exact_norm_col", "_pair_cosine")
+            for n in ast.walk(fn)
+        }
+        offenders += [
+            f"{f.relative_to(root)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "id", getattr(node.func, "attr", None))
+            == "_exact_dot_cols"
+            and id(node) not in allowed
+        ]
+    assert offenders == []
 
 
 def test_exact_rerank_small_and_empty_corpora(spark):
@@ -613,7 +713,7 @@ def test_exact_rerank_small_and_empty_corpora(spark):
     # k larger than the corpus: every other vector, densely ranked
     rows = [(0, [1.0, 0.0]), (1, [1.0, 1.0]), (2, [0.0, 1.0])]
     df = spark.createDataFrame(rows, _VEC_SCHEMA)
-    for name, out in _both_exact_paths(df, df, 10).items():
+    for name, out in _exact_paths(df, df, 10).items():
         assert out.columns == cols
         by_q = {}
         for r in out.collect():
@@ -629,7 +729,7 @@ def test_exact_rerank_ties_break_by_candidate_id(spark):
     rows = [(0, [1.0, 2.0]), (5, [3.0, 1.0]), (3, [3.0, 1.0]), (4, [3.0, 1.0]),
             (1, [-1.0, 0.5])]
     df = spark.createDataFrame(rows, _VEC_SCHEMA)
-    for name, out in _both_exact_paths(df, df.filter("vec_id = 0"), 4).items():
+    for name, out in _exact_paths(df, df.filter("vec_id = 0"), 4).items():
         got = [(r["c_id"], r["rank"]) for r in out.orderBy("rank").collect()]
         assert got == [(3, 1), (4, 2), (5, 3), (1, 4)], name
 
@@ -662,6 +762,6 @@ def test_exact_rerank_matches_grid_snapped_reference(spark):
                 ((-_grid_cosine_reference(vecs[q_], v), c) for c, v in vecs.items() if c != q_)
             )[:5]
             want.update({(q_, c): (-s, r) for r, (s, c) in enumerate(scored, 1)})
-        for name, out in _both_exact_paths(df, df.filter("vec_id < 3"), 5).items():
+        for name, out in _exact_paths(df, df.filter("vec_id < 3"), 5).items():
             got = {(r["q_id"], r["c_id"]): (r["cosine"], r["rank"]) for r in out.collect()}
             assert got == want, (seed, name)
