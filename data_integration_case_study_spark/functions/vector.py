@@ -1,9 +1,15 @@
 """Vector/embedding functions (SURVEY.md §2.9): the random-hyperplane
 projection and signature that the LSH paths bucket by, the adaptive
-plane count, and their DuckDB twins. Every product is snapped to the
-2^-40 grid and folded as integers, so values are order-independent and
-replay bit-for-bit in the oracle. Exact cosine scoring lives in
-operators/similarity.py (``_rerank_side`` / ``_pair_cosine``).
+plane count, and their DuckDB twins.
+
+The ±1 hyperplanes are derived once on the driver
+(:func:`plane_components`) and written into one SQL fold per plane
+(:func:`_plane_dots`), which the projection and the signature share.
+Every product is snapped to the 2^-40 grid and folded as integers, so
+values are order-independent and replay bit-for-bit in the oracle,
+whose twins (:func:`projection_sql`, :func:`hyperplane_signature_sql`)
+re-derive the same planes with DuckDB's sha256. Exact cosine scoring
+lives in operators/similarity.py (``_rerank_side`` / ``_pair_cosine``).
 """
 
 from __future__ import annotations
@@ -18,11 +24,10 @@ _SIG_GRID = float(1 << 40)
 
 
 def plane_components(i: int, seed: int, dim: int) -> list[float]:
-    """Driver-side replay of the hyperplane derivation: component p of
-    plane i is ±1 from the parity of the first sha256 hex digit of
-    "seed:plane:pos" — hashlib.sha256 over the identical UTF-8 bytes
-    Spark's sha2(concat_ws(':', ...)) hashes, so the matrix is the same
-    whether an executor, the driver, or DuckDB derives it."""
+    """The ``dim`` components of hyperplane ``i``: component p is ±1
+    from the parity of the first sha256 hex digit of "seed:i:p". No
+    hyperplane matrix is stored; DuckDB's sha256 over the same UTF-8
+    bytes re-derives it in the oracle twins."""
     import hashlib
 
     return [
@@ -33,110 +38,75 @@ def plane_components(i: int, seed: int, dim: int) -> list[float]:
     ]
 
 
-def _plane_dot(vec: Column, i: int, seed: int, dim: int | None = None) -> Column:
-    """Exact snapped <v, h_i> (as a 2^40-scaled long): h_i has ±1
-    components derived from the parity of the first sha256 hex digit of
-    "seed:plane:pos" — no stored hyperplane matrix; any executor (or any
-    engine: DuckDB replays the same sha256) regenerates it. Each ±val
-    product is snapped to the 2^-40 grid and folded as longs (dims ×
-    2^40-scaled values stay far below 2^63), so the value is identical
-    under any fold order and in the DuckDB oracle.
+def _plane_dots(vec_col: str, n_planes: int, seed: int, dim: int) -> list[str]:
+    """SQL for the exact snapped <v, h_i>, i < ``n_planes``, of the array
+    column named ``vec_col``, each a 2^40-scaled long. The planes come
+    from :func:`plane_components` as literal arrays. Each ±val product
+    is snapped to the 2^-40 grid and folded as longs (dims × 2^40-scaled
+    values stay far below 2^63), so the value is identical under any
+    fold order and in the DuckDB oracle.
 
-    ``dim``: when the (fixed) vector width is known, the ±1 components
-    are precomputed ONCE driver-side (:func:`plane_components`) and baked
-    into the plan as a literal array — identical values, but the per-row
-    per-component sha256 expression tree disappears, which is the hot
-    path of every signature scan (dims × planes hashes per row
-    otherwise). Rows must then have exactly ``dim`` elements (zip_with
-    null-pads a mismatch into a null dot)."""
-    if dim is not None:
-        lits = F.array(*[F.lit(c) for c in plane_components(i, seed, dim)])
-        prods = F.zip_with(
-            vec,
-            lits,
-            lambda x, h: F.floor(
-                x.cast("double") * h * F.lit(_SIG_GRID) + F.lit(0.5)
-            ).cast("long"),
+    The fold is SQL text for the reason given in
+    similarity._exact_dot_cols: built through the Column API (one
+    ``F.lit`` per component) an 8-plane signature over 64 dims took
+    0.4–0.6 s of py4j calls on a 4-vCPU VM; as SQL text it builds in
+    about 1 ms and analyzes to the same fold."""
+    dots = []
+    for i in range(n_planes):
+        h = ", ".join(f"{c!r}D" for c in plane_components(i, seed, dim))
+        dots.append(
+            f"aggregate(zip_with(`{vec_col}`, CAST(array({h}) AS ARRAY<DOUBLE>), "
+            f"(x, h) -> CAST(floor(CAST(x AS DOUBLE) * h * {_SIG_GRID!r}D + 0.5D) "
+            f"AS BIGINT)), 0L, (acc, y) -> acc + y)"
         )
-        return F.aggregate(prods, F.lit(0).cast("long"), lambda acc, x: acc + x)
+    return dots
 
-    def component(p: Column) -> Column:
-        digit = F.conv(
-            F.substring(
-                F.sha2(F.concat_ws(":", F.lit(seed), F.lit(i), p.cast("string")), 256),
-                1, 1,
-            ),
-            16, 10,
-        ).cast("int")
-        return F.when(digit % 2 == 1, F.lit(1.0)).otherwise(F.lit(-1.0))
 
-    prods = F.zip_with(
-        vec,
-        F.sequence(F.lit(0), F.size(vec) - 1),
-        lambda x, p: F.floor(
-            x.cast("double") * component(p) * F.lit(_SIG_GRID) + F.lit(0.5)
-        ).cast("long"),
+def _width_checked(vec_col: str, dim: int, what: str, sql: str) -> Column:
+    """``sql`` for rows whose vector has exactly ``dim`` elements, null
+    for a null vector, and a failed job otherwise: zip_with would
+    null-pad a width mismatch silently. One check per row, not per
+    component."""
+    v = f"`{vec_col}`"
+    return F.expr(
+        f"CASE WHEN {v} IS NULL THEN NULL WHEN size({v}) = {dim} THEN {sql} "
+        f"ELSE raise_error(concat('{what}: expected {dim}-dim vector, got ', "
+        f"CAST(size({v}) AS STRING))) END"
     )
-    return F.aggregate(prods, F.lit(0).cast("long"), lambda acc, x: acc + x)
 
 
 def projection_dots(
-    vec: Column, n_planes: int, seed: int = 42, dim: int | None = None
+    vec_col: str, n_planes: int, seed: int = 42, *, dim: int
 ) -> Column:
-    """Random ±1 projection of a vector onto ``n_planes`` hash-derived
-    hyperplanes, as an array<double> of the exact grid-snapped dot
-    products — the Johnson-Lindenstrauss dimensionality-reduction step
-    (d dims → n_planes dims) that ANN indexes, clustering, and
-    visualization consume. Same hyperplanes as
+    """Random ±1 projection of the ``dim``-wide vectors in column
+    ``vec_col`` onto ``n_planes`` hyperplanes, as an array<double> of the
+    exact grid-snapped dot products: the Johnson-Lindenstrauss
+    dimensionality-reduction step (d dims → n_planes dims) that ANN
+    indexes, clustering, and visualization consume. Same hyperplanes as
     :func:`random_hyperplane_signature`, which is exactly the SIGNS of
-    this projection. ``dim`` (when the fixed vector width is known)
-    switches to driver-precomputed literal hyperplanes — same values,
-    no per-row sha256 (see :func:`_plane_dot`)."""
-    arr = F.array(
-        *[(_plane_dot(vec, i, seed, dim) / F.lit(_SIG_GRID)) for i in range(n_planes)]
+    this projection."""
+    dots = ", ".join(
+        f"{d} / {_SIG_GRID!r}D" for d in _plane_dots(vec_col, n_planes, seed, dim)
     )
-    if dim is not None:
-        arr = F.when(F.size(vec) == dim, arr).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(f"projection: expected {dim}-dim vector, got "),
-                    F.size(vec).cast("string"),
-                )
-            )
-        )
-    return arr
+    return _width_checked(
+        vec_col, dim, "projection", f"CAST(array({dots}) AS ARRAY<DOUBLE>)"
+    )
 
 
 def random_hyperplane_signature(
-    vec: Column, n_planes: int = 16, seed: int = 42, dim: int | None = None
+    vec_col: str, n_planes: int = 16, seed: int = 42, *, dim: int
 ) -> Column:
-    """Sign-random-projection (SimHash-for-cosine) signature: bit i is the
-    sign of <v, h_i> (see :func:`_plane_dot` for the exact hash-derived
-    hyperplanes and grid-snapped accumulation). Returns a compact integer
-    bucket key in [0, 2^n_planes). ``dim`` (when the fixed vector width
-    is known) switches to driver-precomputed literal hyperplanes — same
-    values, no per-row sha256."""
-    sig = F.lit(0).cast("long")
-    for i in range(n_planes):
-        sig = sig.bitwiseOR(
-            F.shiftleft(
-                F.when(_plane_dot(vec, i, seed, dim) > 0, F.lit(1))
-                .otherwise(F.lit(0)).cast("long"),
-                i,
-            )
-        )
-    if dim is not None:
-        # the literal-hyperplane path silently null-pads a width mismatch;
-        # fail loudly instead (one check per row, not per component)
-        sig = F.when(F.size(vec) == dim, sig).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(f"hyperplane signature: expected {dim}-dim vector, got "),
-                    F.size(vec).cast("string"),
-                )
-            )
-        )
-    return sig
+    """Sign-random-projection (SimHash-for-cosine) signature of the
+    ``dim``-wide vectors in column ``vec_col``: bit i is the sign of
+    <v, h_i> (:func:`_plane_dots`). Returns a compact integer bucket key
+    in [0, 2^n_planes); ``n_planes=0`` puts every vector in bucket 0."""
+    bits = [
+        f"IF({d} > 0, {1 << i}L, 0L)"
+        for i, d in enumerate(_plane_dots(vec_col, n_planes, seed, dim))
+    ]
+    return _width_checked(
+        vec_col, dim, "hyperplane signature", " | ".join(bits) or "0L"
+    )
 
 
 def adaptive_n_planes(

@@ -229,6 +229,32 @@ def blocked_rank(df: DataFrame, block_col: str, order_col: str) -> DataFrame:
     )
 
 
+def _successor_pairs(keys: DataFrame, window: int) -> DataFrame:
+    """(id_a, id_b, block): every ``id`` of ``keys`` (id, block) paired
+    with its ``window`` id-ordered successors inside its block, ranked
+    by :func:`blocked_rank`. The successor-window candidates of
+    :func:`ngram_jaccard_pairs` and
+    :func:`operators.similarity.embedding_neardup_pairs`."""
+    ranked = blocked_rank(keys, "block", "id")
+    # REPARTITION after the W-way explode: the slim ranked frame is tiny,
+    # so AQE coalesces its shuffle to ~1 partition, and with only
+    # broadcast joins downstream the entire exploded-probe + verify
+    # pipeline would then run as ONE task (observed: a single core
+    # pinned for >13 min at sf1). The explicit shuffle on the join key
+    # both restores parallelism and co-partitions the candidate join.
+    probes = ranked.select(
+        F.col("id").alias("id_a"),
+        "block",
+        F.explode(
+            F.sequence(F.col("__r") + 1, F.col("__r") + window)
+        ).alias("__r"),
+    ).repartition(F.col("block"), F.col("__r"))
+    return probes.join(
+        ranked.select(F.col("id").alias("id_b"), "block", "__r"),
+        ["block", "__r"],
+    ).select("id_a", "id_b", "block")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -352,18 +378,7 @@ def ngram_jaccard_pairs(
         # the compact mask summary (8*nw+4 bytes/doc) is what the two
         # verify sides re-read — cache IT, not the token arrays
         summary = cache.track(summary)
-        ranked = blocked_rank(summary.select("id", "block"), "block", "id")
-        probes = ranked.select(
-            F.col("id").alias("id_a"),
-            "block",
-            F.explode(
-                F.sequence(F.col("__r") + 1, F.col("__r") + block_window)
-            ).alias("__r"),
-        ).repartition(F.col("block"), F.col("__r"))
-        cand = probes.join(
-            ranked.select(F.col("id").alias("id_b"), "block", "__r"),
-            ["block", "__r"],
-        ).select("id_a", "id_b", "block")
+        cand = _successor_pairs(summary.select("id", "block"), block_window)
         sa = summary.select(
             F.col("id").alias("id_a"), F.col("__sz").alias("__sza"),
             *[F.col(f"__m{w}").alias(f"__ma{w}") for w in range(nw)],
@@ -391,24 +406,7 @@ def ngram_jaccard_pairs(
 
     # token arrays are read twice (both verify sides)
     base = cache.track(base)
-    ranked = blocked_rank(base.select("id", "block"), "block", "id")
-    # REPARTITION after the W-way explode: the slim ranked frame is tiny,
-    # so AQE coalesces its shuffle to ~1 partition, and with only
-    # broadcast joins downstream the entire exploded-probe + verify
-    # pipeline would then run as ONE task (observed: a single core
-    # pinned for >13 min at sf1). The explicit shuffle on the join key
-    # both restores parallelism and co-partitions the candidate join.
-    probes = ranked.select(
-        F.col("id").alias("id_a"),
-        "block",
-        F.explode(
-            F.sequence(F.col("__r") + 1, F.col("__r") + block_window)
-        ).alias("__r"),
-    ).repartition(F.col("block"), F.col("__r"))
-    cand = probes.join(
-        ranked.select(F.col("id").alias("id_b"), "block", "__r"),
-        ["block", "__r"],
-    ).select("id_a", "id_b", "block")
+    cand = _successor_pairs(base.select("id", "block"), block_window)
     return (
         cand.join(
             base.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a")),

@@ -171,21 +171,22 @@ def _exploded(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     ).withColumn("val", F.col("val").cast("double"))
 
 
-def _fixed_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Vector width from the first non-null vector (None when there is
-    none) — the cheap probe that unlocks the literal-hyperplane signature
-    path (functions/vector._plane_dot: hyperplanes precomputed
-    driver-side, no per-row sha256). It reads the rows the signature
-    sees: :func:`_rerank_side` drops null vectors. Embedding corpora are
-    fixed-width by contract; a row with a different width fails loudly
-    in the signature guard."""
+def _fixed_dim(df: DataFrame, vec_col: str) -> int:
+    """Vector width from the first non-null vector, 0 when there is
+    none: the width every hyperplane signature requires
+    (functions/vector.random_hyperplane_signature derives its planes on
+    the driver at that width). It reads the rows the signature sees:
+    :func:`_rerank_side` drops null vectors, so with no vector left the
+    width is never checked. Embedding corpora are fixed-width by
+    contract; a row with a different width fails loudly in the
+    signature guard."""
     row = df.filter(F.col(vec_col).isNotNull()).select(
         F.size(F.col(vec_col)).alias("d")
     ).first()
-    return None if row is None else row["d"]
+    return 0 if row is None else row["d"]
 
 
-def _count_and_dim(df: DataFrame, vec_col: str) -> tuple[int, int | None]:
+def _count_and_dim(df: DataFrame, vec_col: str) -> tuple[int, int]:
     """Non-null vector count AND width (as :func:`_fixed_dim`) in ONE
     action (one aggregation job instead of the count + first pair — on a
     large un-cached source each of those is a full scan queued before the
@@ -194,7 +195,7 @@ def _count_and_dim(df: DataFrame, vec_col: str) -> tuple[int, int | None]:
         F.count(F.lit(1)).alias("n"),
         F.first(F.size(F.col(vec_col))).alias("d"),
     ).first()
-    return (row["n"], row["d"]) if row["n"] else (0, None)
+    return (row["n"], row["d"]) if row["n"] else (0, 0)
 
 
 def cosine_topk_bruteforce(
@@ -247,21 +248,22 @@ def ann_lsh_topk(
     join stays an equi-join. sha256-derived signatures plus the exact
     decimal re-rank keep every variant oracle-checkable. Input contract
     as :func:`knn_graph`."""
-    # One signature Column serves both sides (building it is ~0.25 s of
-    # py4j calls), so the query side is checked under the corpus prefix
-    # and renamed after it is signed.
-    sig = random_hyperplane_signature(
-        F.col("c_v"), n_planes, seed, dim=_fixed_dim(corpus, vec_col)
+    # One width signs both sides: the corpus's, or the queries' when the
+    # corpus has no vector (the union's first partitions are the
+    # corpus's). A vector of another width fails the signature guard.
+    dim = _fixed_dim(
+        corpus.select(vec_col).unionByName(queries.select(vec_col)), vec_col
     )
     # The corpus side stays put (bucket + vector + map-only norm); the
     # tiny query side carries its vector through the probe explosion and
     # broadcasts, so the whole operator is ONE broadcast-hash join with
     # the exact O(d) cosine folded per candidate row (_pair_cosine) —
     # no exploded per-component join, no norm shuffle.
-    c_sig = _rerank_side(corpus, id_col, vec_col, "c").withColumn("bucket", sig)
-    q_base = _renamed(
-        _rerank_side(queries, id_col, vec_col, "c").withColumn("__sig", sig),
-        "c", "q", "__sig",
+    c_sig = _rerank_side(corpus, id_col, vec_col, "c").withColumn(
+        "bucket", random_hyperplane_signature("c_v", n_planes, seed, dim=dim)
+    )
+    q_base = _rerank_side(queries, id_col, vec_col, "q").withColumn(
+        "__sig", random_hyperplane_signature("q_v", n_planes, seed, dim=dim)
     )
     masks = [0] + [1 << i for i in range(min(probe_bits, n_planes))]
     q_sig = q_base.select(
@@ -639,11 +641,13 @@ def embedding_neardup_pairs(
     same way ``bucket_window`` bounds degenerate LSH buckets in
     :func:`dedup.minhash_candidate_pairs`: each vector is compared only
     with its W id-ordered successors inside its block (b·W pairs, not
-    b²/2; duplicate clusters survive via successor chaining). The rank
-    comes from :func:`dedup.blocked_rank` — bounded-cardinality blocks
-    must not become one whole-block window sort. ``None`` keeps the
+    b²/2; duplicate clusters survive via successor chaining). The pairs
+    come from :func:`dedup._successor_pairs`, shared with the n-gram
+    Jaccard verify, which ranks with :func:`dedup.blocked_rank` —
+    bounded-cardinality blocks must not become one whole-block window
+    sort. ``None`` keeps the
     exhaustive in-block semantics. Input contract as :func:`knn_graph`."""
-    from data_integration_case_study_spark.operators.dedup import blocked_rank
+    from data_integration_case_study_spark.operators.dedup import _successor_pairs
 
     side = _rerank_side(
         df.select(id_col, vec_col, F.col(block_col).alias("block")), id_col, vec_col, "a"
@@ -652,21 +656,9 @@ def embedding_neardup_pairs(
         scored = _block_pairs(side)
     else:
         side = cache.track(side)
-        ranked = blocked_rank(side.select(F.col("a_id").alias("id"), "block"), "block", "id")
-        # repartition after the W-way explode — see dedup.ngram_jaccard_
-        # pairs: AQE coalesces the tiny ranked shuffle to ~1 partition
-        # and the broadcast-only downstream would single-task the verify
-        probes = ranked.select(
-            F.col("id").alias("a_id"),
-            "block",
-            F.explode(
-                F.sequence(F.col("__r") + 1, F.col("__r") + block_window)
-            ).alias("__r"),
-        ).repartition(F.col("block"), F.col("__r"))
-        cand = probes.join(
-            ranked.select(F.col("id").alias("b_id"), "block", "__r"),
-            ["block", "__r"],
-        ).select("a_id", "b_id", "block")
+        cand = _successor_pairs(
+            side.select(F.col("a_id").alias("id"), "block"), block_window
+        ).withColumnsRenamed({"id_a": "a_id", "id_b": "b_id"})
         scored = _scored_pairs(
             cand.join(_renamed(side, "a", "a"), "a_id")
             .join(_renamed(side, "a", "b"), "b_id")
@@ -704,7 +696,7 @@ def _bucket_pairs(
         spread_to_parallelism(df.select(id_col, vec_col)), id_col, vec_col, "a"
     )
     return _block_pairs(cache.track(side.withColumn(
-        "block", random_hyperplane_signature(F.col("a_v"), n_planes, seed, dim=dim)
+        "block", random_hyperplane_signature("a_v", n_planes, seed, dim=dim)
     )))
 
 

@@ -1155,14 +1155,14 @@ def random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the projection is the array-fold-heavy step and the table scans as
     # one split — spread first so all cores project (still zero shuffles
-    # at real scale, where the scan already has enough splits); the fixed
-    # vector width unlocks the literal-hyperplane path (no per-row sha256)
+    # at real scale, where the scan already has enough splits); the
+    # planes are derived on the driver at the probed vector width
     e = spread_to_parallelism(read_parquet_table(spark, sf_dir, "embeddings"))
     width = similarity._fixed_dim(e, "embedding")
     return e.select(
         "vec_id",
         F.posexplode(
-            vector.projection_dots(_as_double_vec(F.col("embedding")), 8, dim=width)
+            vector.projection_dots("embedding", 8, dim=width)
         ).alias("dim", "val"),
     )
 

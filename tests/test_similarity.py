@@ -250,14 +250,25 @@ def test_projection_signs_match_signature(spark):
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(50)
     rows = e.select(
-        projection_dots(F.transform("embedding", lambda x: x.cast("double")), 6).alias("proj"),
-        random_hyperplane_signature(
-            F.transform("embedding", lambda x: x.cast("double")), 6
-        ).alias("sig"),
+        projection_dots("embedding", 6, dim=64).alias("proj"),
+        random_hyperplane_signature("embedding", 6, dim=64).alias("sig"),
     ).collect()
     for r in rows:
         expect = sum(1 << i for i, v in enumerate(r["proj"]) if v > 0)
         assert r["sig"] == expect
+    # zero planes: one constant bucket and an empty projection
+    zero = e.select(
+        projection_dots("embedding", 0, dim=64).alias("proj"),
+        random_hyperplane_signature("embedding", 0, dim=64).alias("sig"),
+    ).collect()
+    assert {(tuple(r["proj"]), r["sig"]) for r in zero} == {((), 0)}
+    # an empty frame (width 0: no vector to probe) still plans and types
+    out = e.limit(0).select(
+        projection_dots("embedding", 6, dim=0).alias("proj"),
+        random_hyperplane_signature("embedding", 6, dim=0).alias("sig"),
+    )
+    assert out.dtypes == [("proj", "array<double>"), ("sig", "bigint")]
+    assert out.collect() == []
 
 
 def test_knn_graph_edge_properties(spark):
@@ -370,47 +381,80 @@ def test_adaptive_n_planes_grows_with_corpus():
             assert got == adaptive_n_planes(n, target_bucket=bucket), (n, bucket)
 
 
-def test_literal_hyperplanes_match_hash_expression_path(spark):
-    """The dim-aware literal-hyperplane path must produce bit-identical
-    signatures and projections to the per-row sha256 expression path —
-    it is a pure evaluation-strategy swap. Also: the width guard fails
-    loudly on a ragged vector instead of null-padding silently."""
+def test_hyperplanes_match_duckdb_twins(spark, sf_dir):
+    """The Spark signature and projection (planes derived on the driver)
+    equal their DuckDB twins (planes re-derived per component with
+    DuckDB's sha256) on every sf0.001 embedding, for two plane counts
+    and two seeds. Also: the width guard fails loudly on a ragged vector
+    instead of null-padding silently."""
+    import duckdb
+
     from data_integration_case_study_spark.functions.vector import (
+        hyperplane_signature_sql,
         projection_dots,
+        projection_sql,
         random_hyperplane_signature,
     )
 
-    e = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .limit(64)
-        .select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    )
-    for planes in (4, 6):
-        slow = {
-            r["vec_id"]: r["s"]
-            for r in e.select(
-                "vec_id", random_hyperplane_signature(F.col("v"), planes).alias("s")
-            ).collect()
-        }
-        fast = {
-            r["vec_id"]: r["s"]
-            for r in e.select(
-                "vec_id",
-                random_hyperplane_signature(F.col("v"), planes, dim=64).alias("s"),
-            ).collect()
-        }
-        assert slow == fast
-    pslow = e.select(projection_dots(F.col("v"), 8).alias("p")).collect()
-    pfast = e.select(projection_dots(F.col("v"), 8, dim=64).alias("p")).collect()
-    assert [r["p"] for r in pslow] == [r["p"] for r in pfast]
+    path = f"{sf_dir}/embeddings.parquet"
+    e = spark.read.parquet(path)
+    con = duckdb.connect()
+    src = f"SELECT vec_id, embedding FROM read_parquet('{path}')"
+    for planes in (4, 8):
+        for seed in (42, 7):
+            got = {
+                r["vec_id"]: (r["s"], r["p"])
+                for r in e.select(
+                    "vec_id",
+                    random_hyperplane_signature("embedding", planes, seed, dim=64).alias("s"),
+                    projection_dots("embedding", planes, seed, dim=64).alias("p"),
+                ).collect()
+            }
+            sig = dict(con.execute(hyperplane_signature_sql(src, planes, seed)).fetchall())
+            proj = {}
+            for vid, plane, d in con.execute(projection_sql(src, planes, seed)).fetchall():
+                proj.setdefault(vid, [0.0] * planes)[plane] = d / 2.0**40
+            assert len(got) == len(sig) > 0
+            assert got == {v: (sig[v], proj[v]) for v in sig}, (planes, seed)
     # ragged vector -> loud failure, not a silent null-padded signature
     ragged = spark.createDataFrame(
         [(1, [1.0, 2.0])], "vec_id long, v array<double>"
     )
     with pytest.raises(Exception, match="expected 64-dim"):
         ragged.select(
-            random_hyperplane_signature(F.col("v"), 4, dim=64).alias("s")
+            random_hyperplane_signature("v", 4, dim=64).alias("s")
         ).collect()
+
+
+def test_one_hyperplane_derivation():
+    """The hyperplanes are derived in one place: nothing in
+    functions/vector.py calls Spark's ``sha2`` (the planes come from
+    ``plane_components`` on the driver; the DuckDB twins hash in SQL
+    text), and no other package module calls ``plane_components``."""
+    import ast
+    from pathlib import Path
+
+    import data_integration_case_study_spark as pkg
+
+    def calls(tree, name):
+        return [
+            node.lineno
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "id", getattr(node.func, "attr", None)) == name
+        ]
+
+    root = Path(pkg.__file__).parent
+    vector = root / "functions" / "vector.py"
+    assert calls(ast.parse(vector.read_text()), "sha2") == []
+    files = sorted(root.rglob("*.py"))
+    assert len(files) > 40
+    callers = [
+        str(f.relative_to(root))
+        for f in files
+        if calls(ast.parse(f.read_text()), "plane_components")
+    ]
+    assert callers == ["functions/vector.py"]
 
 
 def test_mmr_selection_matches_greedy_replay(spark):
@@ -645,17 +689,19 @@ def test_exact_rerank_drops_null_vectors(spark):
 
 
 def test_lsh_dim_probe_reads_non_null_vectors(spark, monkeypatch):
-    # a leading null vector must neither hide the width (dim=None sends
-    # the signature down the per-row sha256 path) nor count toward the
-    # adaptive plane count
+    # a leading null vector must neither hide the width the signature
+    # needs nor count toward the adaptive plane count
     rows = [(9, None), (1, [1.0, 0.0, 0.0]), (2, [0.9, 0.1, 0.0])]
     df = spark.createDataFrame(rows, _VEC_SCHEMA)
     assert similarity._count_and_dim(df, "embedding") == (2, 3)
     assert similarity._fixed_dim(df, "embedding") == 3
+    nulls = spark.createDataFrame([(9, None)], _VEC_SCHEMA)
+    assert similarity._count_and_dim(nulls, "embedding") == (0, 0)
+    assert similarity._fixed_dim(nulls, "embedding") == 0
     dims = []
     real = similarity.random_hyperplane_signature
 
-    def spy(*args, dim=None):
+    def spy(*args, dim):
         dims.append(dim)
         return real(*args, dim=dim)
 
@@ -707,6 +753,17 @@ def test_exact_rerank_small_and_empty_corpora(spark):
     assert out.columns == cols and out.collect() == []
     # one-row corpus: the query itself (excluded) or one other vector
     assert similarity.cosine_topk_bruteforce(q, q, k=3).collect() == []
+    # an empty and an all-null corpus: every path returns its columns and
+    # no rows (the width probe finds no vector; ann_lsh signs its
+    # non-empty query side at the query width)
+    nulls = spark.createDataFrame([(5, None), (6, None)], _VEC_SCHEMA)
+    for corpus in (empty, nulls):
+        for name, out in _exact_paths(corpus, q, 3).items():
+            assert out.columns == cols and out.collect() == [], name
+        # the adaptive plane count signs at width 0 when no vector exists
+        for out in (similarity.knn_graph(corpus),
+                    similarity.embedding_neardup_pairs_lsh(corpus)):
+            assert out.collect() == []
     one = spark.createDataFrame([(7, [2.0, 0.0])], _VEC_SCHEMA)
     got = similarity.cosine_topk_bruteforce(one, q, k=3).collect()
     assert [tuple(r) for r in got] == [(0, 7, 1.0, 1)]
