@@ -19,10 +19,17 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
+import traceback
+import uuid
+from collections import Counter
+from contextlib import contextmanager
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+from data_integration_case_study_spark.session import local_cores  # noqa: E402
 
 # Bumped once per driver round so the full-detail sidecar file name matches
 # the round's BENCH_r{N}.json record. NOTE for round-over-round diffs: since
@@ -66,18 +73,6 @@ class UnknownHeadlineQueryError(LookupError):
     silently cover fewer queries."""
 
 
-def _fingerprint_cpus() -> int:
-    """The core count Spark runs with: ``$SPARK_GRAFT_CPUS`` with
-    session.py's default of 32; a malformed value falls back to the
-    host's CPU count instead of failing the bench."""
-    import multiprocessing
-
-    try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:
-        return multiprocessing.cpu_count()
-
-
 def _env_fingerprint() -> dict:
     """One-line box fingerprint carried in the bench JSON.
 
@@ -92,7 +87,7 @@ def _env_fingerprint() -> dict:
         # (session.py), so the fingerprint must report the SAME number or
         # a low-core driver run is unreadable from the record (the r11
         # scaling block flagged suspect_cpus_ignored on exactly this).
-        "cpus": _fingerprint_cpus(),
+        "cpus": local_cores(),
         "platform": platform.platform(),
         "python": platform.python_version(),
     }
@@ -125,8 +120,9 @@ def _env_fingerprint() -> dict:
 
 
 def reset_session_state(spark) -> None:
-    """Inter-query isolation, OUTSIDE any timed region. One definition —
-    bench and both sf1-probe modes (scripts/sf1_probe.py) share it.
+    """Inter-query isolation, OUTSIDE any timed region. Called by
+    ``measure_query`` (the one timing path of bench, the profiler and
+    both sf1-probe modes) and by perfbench's runner.
 
     - clearCache: queries that persist() intermediates (minhash, tf_idf)
       must not donate cached blocks to — or steal memory from — the next
@@ -142,6 +138,99 @@ def reset_session_state(spark) -> None:
     for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
         rdd.unpersist()
     spark.sparkContext._jvm.System.gc()
+
+
+@contextmanager
+def _watchdog(sc, cap: float | None):
+    """Cancel the block's Spark jobs every 2 s once ``cap`` seconds have
+    passed, until the block ends (a one-shot cancel can land between the
+    sequential jobs of one action and miss the next). Yields an Event set
+    BEFORE the first cancel, so timeouts are classified from the
+    watchdog's own record. ``cap=None`` starts no thread."""
+    fired = threading.Event()
+    if cap is None:
+        yield fired
+        return
+    done = threading.Event()
+    tag = f"watchdog-{uuid.uuid4().hex}"
+
+    def watch():
+        if done.wait(cap):
+            return
+        fired.set()
+        while not done.is_set():
+            sc.cancelJobsWithTag(tag)
+            done.wait(2.0)
+
+    sc.addJobTag(tag)
+    thread = threading.Thread(target=watch, name="query-watchdog",
+                              daemon=True)
+    thread.start()
+    try:
+        yield fired
+    finally:
+        done.set()
+        thread.join()
+        sc.removeJobTag(tag)
+
+
+def measure_query(spark, fn, name: str, sf_dir: str,
+                  cap: float | None = None) -> dict:
+    """Build and run one query: the ONE query-timing path of bench.py,
+    scripts/profile_queries.py and both scripts/sf1_probe.py modes.
+
+    After ``reset_session_state``, ``build_s`` times ``fn(spark, sf_dir)``
+    and ``exec_s`` a noop write of its result; ``wall_s`` is their sum.
+    Each phase runs under its own job group, counted by
+    ``getJobIdsForGroup`` (the jobs ``cache.truncate`` starts at build run
+    outside any SQL execution). Shuffle-write and spill bytes and operator
+    counts are the exec phase's SQL executions. All capture sits outside
+    the timed spans. ``status`` is ok, timeout (``cap`` seconds passed)
+    or error (traceback on stderr, message in ``error``)."""
+    from perfbench.statusstore import StatusStore
+
+    sc = spark.sparkContext
+    reset_session_state(spark)
+    store = StatusStore(spark)
+    key = uuid.uuid4().hex
+    groups = (f"build-{key}", f"exec-{key}")
+    rec, spans, mark = {"status": "ok"}, [], None
+    with _watchdog(sc, cap) as fired:
+        sc.setJobGroup(groups[0], name, interruptOnCancel=True)
+        t0 = time.perf_counter()
+        try:
+            df = fn(spark, sf_dir)
+            spans.append(time.perf_counter() - t0)
+            store.drain()
+            mark = store.marker()
+            sc.setJobGroup(groups[1], name, interruptOnCancel=True)
+            t0 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            spans.append(time.perf_counter() - t0)
+        except Exception as e:
+            spans.append(time.perf_counter() - t0)
+            msg = f"{type(e).__name__}: {e}"
+            if fired.is_set() or "cancel" in msg.lower():
+                rec = {"status": "timeout"}
+            else:
+                traceback.print_exc()
+                rec = {"status": "error", "error": msg[:300]}
+        finally:
+            sc.setJobGroup("", "")
+    build_s, exec_s = (spans + [0.0])[:2]
+    store.drain()
+    execs = [] if mark is None else store.executions_after(mark)
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+    ops, sums = Counter(), Counter()
+    for e in execs:
+        ops.update(e["operators"])
+        sums.update({k: int(e.get(k, 0))
+                     for k in ("shuffle_write_bytes", "spill_bytes")})
+    return {**rec, "wall_s": round(build_s + exec_s, 3),
+            "build_s": round(build_s, 3), "exec_s": round(exec_s, 3),
+            "build_jobs": jobs[0], "exec_jobs": jobs[1],
+            "shuffle_write_bytes": sums["shuffle_write_bytes"],
+            "spill_bytes": sums["spill_bytes"], "operators": dict(ops)}
 
 
 def _newest_prior_sidecar(here: Path) -> Path | None:
@@ -181,9 +270,9 @@ def _baseline_mismatch(prev: dict, sf_val=None) -> dict | None:
         return {"baseline_sf": prev.get("sf"),
                 "error": f"sf mismatch (current {sf_val}) — no diff"}
     cpus = prev.get("env", {}).get("cpus")
-    if cpus is not None and cpus != _fingerprint_cpus():
+    if cpus is not None and cpus != local_cores():
         return {"baseline_cpus": cpus,
-                "error": f"cpus mismatch (current {_fingerprint_cpus()}) — no diff"}
+                "error": f"cpus mismatch (current {local_cores()}) — no diff"}
     return None
 
 
@@ -425,17 +514,19 @@ def main() -> None:
     # per-query 1m load samples, one per timed run (gate/remeasure reruns
     # append to the same list) — feeds the variance summary (ask #5)
     load_samples: dict[str, list] = {}
+    # the measure_query record behind each timing-section wall
+    layers: dict[str, dict] = {}
 
-    def run(name: str) -> float:
-        reset_session_state(spark)  # rationale at the definition
+    def run(name: str) -> dict:
         try:
             load_samples.setdefault(name, []).append(
                 round(os.getloadavg()[0], 2))
         except OSError:
             pass
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
+        rec = measure_query(spark, qs[name], name, sf_dir)
+        if rec["status"] != "ok":
+            raise RuntimeError(f"{name}: {rec.get('error', rec['status'])}")
+        return rec
 
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # inline noise gate (round-9 verdict ask #4): would-be flags get an
@@ -443,8 +534,15 @@ def main() -> None:
     gate_was = _gate_baseline(Path(__file__).resolve().parent, sf_val)
 
     def grun(name: str) -> float:
-        return gate_first_pass(run(name), gate_was.get(name),
-                               lambda: run(name))
+        layers[name] = run(name)
+
+        def rerun() -> float:
+            layers[name] = min(layers[name], run(name),
+                               key=lambda r: r["wall_s"])
+            return layers[name]["wall_s"]
+
+        return gate_first_pass(layers[name]["wall_s"], gate_was.get(name),
+                               rerun)
 
     timings = {name: grun(name) for name in HEADLINE}
     # every other catalog query, in queries() order
@@ -454,7 +552,8 @@ def main() -> None:
     env = _env_fingerprint()  # one snapshot, shared by both outputs
     regress = _regressions({**timings, **extras},
                            Path(__file__).resolve().parent, sf_val,
-                           remeasure=run, loads=load_samples)
+                           remeasure=lambda name: run(name)["wall_s"],
+                           loads=load_samples)
     variance = _variance_summary({**timings, **extras}, gate_was,
                                  HEADLINE, load_samples)
 
@@ -473,6 +572,7 @@ def main() -> None:
         "regressions": regress,
         "variance": variance,
         "load_avg_per_query": load_samples,
+        "layers": layers,
     }, indent=1))
 
     # The COMPACT summary is the final stdout line (<1 KB): headline

@@ -10,11 +10,27 @@ executor-core total, or left to AQE's coalescing).
 
 from __future__ import annotations
 
+import multiprocessing
 import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def local_cores() -> int:
+    """The core count of the ``local[N]`` master: ``$SPARK_GRAFT_CPUS``;
+    unset, the CPUs this process may run on (what ``nproc`` prints); a
+    malformed value falls back to the host's CPU count. bench.py's
+    environment fingerprint reads the same number."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return len(os.sched_getaffinity(0))
+    try:
+        return int(raw)
+    except ValueError:
+        return multiprocessing.cpu_count()
+
+
+DEFAULT_SHUFFLE_PARTITIONS = local_cores()
 
 
 def get_spark(
@@ -40,10 +56,9 @@ def get_spark(
       but pinned here so the scan contract (PushedFilters in .explain) is
       explicit and survives config drift.
     """
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cores}]")
+        .master(master or f"local[{local_cores()}]")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

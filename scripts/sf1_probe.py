@@ -3,16 +3,19 @@
 
 Round-6 verdict ask #6: the 2x perf target is only measured at sf0.1;
 a super-linear plan hides there. Default mode times the 15 headline
-queries at both SFs in ONE session (same JVM warmup, same GC discipline
-as bench.py) and prints the wall-clock ratio per query. Data growth is
-10x, so after scan growth a healthy ratio sits near ~10 or below (fixed
+queries at both SFs in ONE session through ``bench.measure_query`` (the
+timing path of bench.py: same session reset, same build + noop-write
+span) and prints the wall-clock ratio per query; ``--cap`` bounds the
+big side with measure_query's cancel watchdog. Data growth is 10x, so
+after scan growth a healthy ratio sits near ~10 or below (fixed
 per-query overhead — session, planning, small-dim scans — deflates it);
 anything well beyond 10x flags a super-linear plan for audit.
 
 ``--all`` extends the audit to the ENTIRE catalog: every query runs
-once at sf1 (cheapest-at-sf0.1 first), each under a cancel-based wall
-cap so one quadratic plan cannot stall the sweep, and the ratio is
-taken against the sf0.1 solo baselines already recorded in
+once at sf1 (cheapest-at-sf0.1 first) through measure_query under a
+cancel-based wall cap, so one quadratic plan cannot stall the sweep (a
+query that raises is an ERROR, its traceback on stderr), and the ratio
+is taken against the sf0.1 solo baselines already recorded in
 BENCH_r{ROUND}_local.json. Queries ending in TIMEOUT or with ratio
 beyond the audit threshold are listed for adjudication (some are
 expected: documented exhaustive verification twins, and pair-emitting
@@ -26,8 +29,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import threading
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -43,82 +44,6 @@ AUDIT_RATIO = 8.0  # flag anything not clearly sub-linear vs 10x data
 # itself exceeds this floor; high-ratio sub-floor rows are reported
 # separately as "overhead" so they stop reading as scale problems.
 AUDIT_FLOOR_SECONDS = 2.0
-
-
-def capped_run(spark, qs, name: str, sf_dir: str,
-               cap: int = CAP_SECONDS) -> tuple[float, str]:
-    """Run one query to completion under a cancel-based wall cap.
-
-    Returns (wall_seconds, status) with status in {"ok", "timeout",
-    "error"} — shared by the whole-catalog audit and the --names probe
-    (round-10: the sf10 iterative/graph probe runs through --names, and
-    an unbounded 100x run could stall the whole sweep)."""
-    import bench
-
-    sc = spark.sparkContext
-    bench.reset_session_state(spark)
-    group = f"sf-probe-{name}"
-    sc.setJobGroup(group, name, interruptOnCancel=True)
-    # a one-shot Timer can fire in the gap BETWEEN the sequential jobs
-    # AQE runs for one action (nothing active -> nothing cancelled ->
-    # the next job runs unbounded); keep re-cancelling every 2s past
-    # the deadline until the action ends. ``cancelled`` is set BEFORE
-    # the first cancel call so classification keys on the watchdog's
-    # own record, not on exception-message substrings.
-    done = threading.Event()
-    cancelled = threading.Event()
-
-    def watchdog():
-        if done.wait(cap):
-            return
-        cancelled.set()
-        while not done.is_set():
-            sc.cancelJobGroup(group)
-            done.wait(2.0)
-
-    wd = threading.Thread(target=watchdog, daemon=True)
-    wd.start()
-    t0 = time.time()
-    try:
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 2), "ok"
-    except Exception as e:
-        wall = round(time.time() - t0, 2)
-        msg = str(e)
-        if cancelled.is_set() or "cancel" in msg.lower() or group in msg:
-            return wall, "timeout"
-        print(f"    {name} ERROR after {wall:.2f}s: "
-              f"{type(e).__name__}: {msg[:160]}", flush=True)
-        return wall, "error"
-    finally:
-        done.set()
-        sc.setJobGroup("", "")
-
-
-def _capped_limit1(spark, df, cap: int) -> None:
-    """limit(1).collect() under the same re-cancelling job-group
-    watchdog as capped_run — warm-up only, result and errors discarded
-    (a warm-up timeout just means the first timed run starts cold)."""
-    sc = spark.sparkContext
-    group = "sf-probe-warmup"
-    sc.setJobGroup(group, "warmup", interruptOnCancel=True)
-    done = threading.Event()
-
-    def watchdog():
-        if done.wait(cap):
-            return
-        while not done.is_set():
-            sc.cancelJobGroup(group)
-            done.wait(2.0)
-
-    threading.Thread(target=watchdog, daemon=True).start()
-    try:
-        df.limit(1).collect()
-    except Exception:
-        pass
-    finally:
-        done.set()
-        sc.setJobGroup("", "")
 
 
 def run_all(spark, qs, big: str = SF1, growth: int = 10) -> int:
@@ -144,6 +69,10 @@ def run_all(spark, qs, big: str = SF1, growth: int = 10) -> int:
         print(f"[note] {len(missing)} queries lack an sf0.1 baseline "
               f"row and are skipped: {missing}")
 
+    def capped(name: str) -> tuple[float, str]:
+        rec = bench.measure_query(spark, qs[name], name, big, cap=CAP_SECONDS)
+        return rec["wall_s"], rec["status"]
+
     # warm the JVM/parquet footers on the BIG side before timing — the
     # round-10 audit's only two >=floor audit rows were queries [1] and
     # [12], absorbing session warmup the --names mode already excluded
@@ -152,25 +81,20 @@ def run_all(spark, qs, big: str = SF1, growth: int = 10) -> int:
     # warm-up hang would stall the whole audit before the per-query
     # watchdog ever engaged); the wall is discarded, a timeout/error
     # here just means query [1] times itself cold.
-    capped_run(spark, qs, names[0], big)
+    capped(names[0])
 
     results, timeouts, errors, audit, overhead = {}, [], [], [], []
     for i, name in enumerate(names):
-        wall, status = capped_run(spark, qs, name, big)
-        if status == "timeout":
-            # classification keys on the watchdog's own flag — a genuine
-            # failure at wall=172s is an ERROR, not a TIMEOUT
-            timeouts.append(name)
-            print(f"[{i + 1}/{len(names)}] {name:32s} TIMEOUT "
-                  f">{CAP_SECONDS}s (sf0.1={baseline[name]:.2f}s)",
+        wall, status = capped(name)
+        if status != "ok":
+            # a TIMEOUT keys on the watchdog's own flag (a genuine failure
+            # at wall=172s is an ERROR); a genuine sf1 failure is itself
+            # an audit finding — keep sweeping (correctness at harness
+            # SFs is the sweeps' job)
+            (timeouts if status == "timeout" else errors).append(name)
+            print(f"[{i + 1}/{len(names)}] {name:32s} {status.upper()} "
+                  f"after {wall:.2f}s (sf0.1={baseline[name]:.2f}s)",
                   flush=True)
-            continue
-        if status == "error":
-            # a genuine sf1 failure is itself an audit finding; keep
-            # sweeping (correctness at harness SFs is the sweeps' job)
-            errors.append(name)
-            print(f"[{i + 1}/{len(names)}] {name:32s} ERROR after "
-                  f"{wall:.2f}s", flush=True)
             continue
         ratio = round(wall / max(baseline[name], 0.01), 1)
         flag = ""
@@ -179,7 +103,7 @@ def run_all(spark, qs, big: str = SF1, growth: int = 10) -> int:
             # round-10 lesson applied here: single-pass ratios near the
             # 8x line flag disjoint box-noise sets run to run; a real
             # super-linear plan reproduces, contention does not)
-            wall2, status2 = capped_run(spark, qs, name, big)
+            wall2, status2 = capped(name)
             if status2 == "ok":
                 wall = min(wall, wall2)
                 ratio = round(wall / max(baseline[name], 0.01), 1)
@@ -238,65 +162,58 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from data_integration_case_study_spark.session import get_spark
 
-    spark = get_spark("sf1-probe")
-    spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-
-    if args.all:
-        rc = run_all(spark, qs, big=args.big, growth=args.growth)
-        spark.stop()
-        return rc
-
     big = args.big
     probe_names = bench.HEADLINE
     if args.names:
         probe_names = [n.strip() for n in args.names.split(",") if n.strip()]
         if not probe_names:
             print("no query names given (--names was empty)")
-            spark.stop()
             return 1
         unknown = [n for n in probe_names if n not in qs]
         if unknown:
             print(f"unknown query names: {unknown}")
-            spark.stop()
             return 1
 
-    def run(name: str, sf_dir: str) -> float:
-        bench.reset_session_state(spark)
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 2)
+    spark = get_spark("sf1-probe")
+    spark.sparkContext.setLogLevel("ERROR")
+    if args.all:
+        rc = run_all(spark, qs, big=args.big, growth=args.growth)
+        spark.stop()
+        return rc
 
     # warm the JVM once per SF dir so footer/codegen warmup is not
     # attributed to the first query. The BIG-side warm-up stays a
     # limit(1) — probe_names[0] is whatever the user typed first, and
     # running its FULL plan as warm-up pays up to a whole extra cap
     # (round-11 review: the er_clusters sf10 probe ran ~190 s twice) —
-    # but rides the same job-group watchdog when --cap was given
-    # (advice #2: a quadratic plan can hang before emitting one row).
+    # but its build and run ride the query watchdog under --cap (advice
+    # #2: a quadratic plan can hang before emitting one row); a warm-up
+    # timeout or error only means the first timed run starts cold.
     qs[probe_names[0]](spark, SF01).limit(1).collect()
-    if args.cap:
-        _capped_limit1(spark, qs[probe_names[0]](spark, big), args.cap)
-    else:
-        qs[probe_names[0]](spark, big).limit(1).collect()
+    with bench._watchdog(spark.sparkContext, args.cap):
+        try:
+            qs[probe_names[0]](spark, big).limit(1).collect()
+        except Exception:
+            pass
 
     rows, timeouts, errors = [], [], []
     for name in probe_names:
+        small = bench.measure_query(spark, qs[name], name, SF01)
+        rec = bench.measure_query(spark, qs[name], name, big, cap=args.cap)
+        if small["status"] != "ok" or rec["status"] != "ok":
+            # the uncapped sf0.1 side can only error, never time out
+            timed_out = rec["status"] == "timeout"
+            (timeouts if timed_out else errors).append(name)
+            label = f"TIMEOUT >{args.cap}s" if timed_out else "ERROR"
+            print(f"{name:32s} sf0.1={small['wall_s']:7.2f}s big={label}",
+                  flush=True)
+            continue
         # floor at 10ms: a sub-5ms noop write rounds to 0.00 and would
         # otherwise divide by zero
-        t_small = max(run(name, SF01), 0.01)
-        if args.cap:
-            t_big, status = capped_run(spark, qs, name, big, cap=args.cap)
-            if status != "ok":
-                (timeouts if status == "timeout" else errors).append(name)
-                label = (f"TIMEOUT >{args.cap}s" if status == "timeout"
-                         else "ERROR")
-                print(f"{name:32s} sf0.1={t_small:7.2f}s big={label}",
-                      flush=True)
-                continue
-        else:
-            t_big = run(name, big)
-        rows.append((name, t_small, t_big, round(t_big / t_small, 1)))
+        t_small, t_big = max(small["wall_s"], 0.01), rec["wall_s"]
+        rows.append({"query": name, "sf0.1": t_small, "big": t_big,
+                     "ratio": round(t_big / t_small, 1)})
         print(f"{name:32s} sf0.1={t_small:7.2f}s big={t_big:7.2f}s "
               f"ratio={t_big / t_small:5.1f}x", flush=True)
     print(json.dumps({
@@ -305,10 +222,7 @@ def main() -> int:
         "cap_seconds": args.cap,
         "timeouts": timeouts,
         "errors": errors,
-        "rows": [
-            {"query": n, "sf0.1": a, "big": b, "ratio": r}
-            for n, a, b, r in rows
-        ],
+        "rows": rows,
     }))
     spark.stop()
     return 0

@@ -1,11 +1,17 @@
 """Unit tests for bench.py's per-query regression gate (round-6 verdict
-ask #5) and scripts/float_census.py's cell scanner — pure Python, no
-Spark session."""
+ask #5) and scripts/float_census.py's cell scanner — pure Python — plus
+sf0.001 tests of ``bench.measure_query``, the one query-timing path."""
 
 from __future__ import annotations
 
+import ast
 import json
 import math
+import multiprocessing
+import os
+import threading
+import time
+from pathlib import Path
 
 import pytest
 
@@ -317,18 +323,20 @@ def test_regressions_compact_surfaces_confirm_load_context(tmp_path):
 
 
 def test_fingerprint_cpus_defaults_like_session(monkeypatch):
-    # unset: the same "32" session.py gives local[...]
+    # the fingerprint reads session.py's own helper, so the two cannot
+    # disagree; unset means the CPUs this process may run on (nproc)
+    from data_integration_case_study_spark import session
+
+    assert bench.local_cores is session.local_cores
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
-    assert bench._fingerprint_cpus() == 32
+    assert bench.local_cores() == len(os.sched_getaffinity(0))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
-    assert bench._fingerprint_cpus() == 6
+    assert bench.local_cores() == 6
 
 
 def test_fingerprint_cpus_malformed_falls_back_to_cpu_count(monkeypatch):
-    import multiprocessing
-
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "four")
-    assert bench._fingerprint_cpus() == multiprocessing.cpu_count()
+    assert bench.local_cores() == multiprocessing.cpu_count()
 
 
 def test_main_raises_on_headline_name_missing_from_catalog(monkeypatch):
@@ -341,3 +349,99 @@ def test_main_raises_on_headline_name_missing_from_catalog(monkeypatch):
         "Spark started before the headline check"))
     with pytest.raises(bench.UnknownHeadlineQueryError, match="no_such_query"):
         bench.main()
+
+
+MEASURE_FIELDS = {"status", "wall_s", "build_s", "exec_s", "build_jobs",
+                  "exec_jobs", "shuffle_write_bytes", "spill_bytes",
+                  "operators"}
+
+
+def test_measure_query_splits_build_jobs_from_exec(spark, sf_dir):
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    lazy = bench.measure_query(spark, qs["p1_positional_rename"],
+                               "p1_positional_rename", sf_dir)
+    assert set(lazy) == MEASURE_FIELDS
+    assert lazy["status"] == "ok"
+    assert lazy["wall_s"] == pytest.approx(
+        lazy["build_s"] + lazy["exec_s"], abs=0.002)
+    assert lazy["build_jobs"] == 0 and lazy["exec_jobs"] > 0
+    assert lazy["operators"] and lazy["spill_bytes"] >= 0
+    # cache.truncate runs Spark jobs while the query is built; they run
+    # outside any SQL execution, so only the job group sees them
+    eager = bench.measure_query(spark, qs["kcore_copurchase"],
+                                "kcore_copurchase", sf_dir)
+    assert eager["status"] == "ok"
+    assert eager["build_jobs"] > 0 and eager["exec_jobs"] > 0
+
+
+def test_measure_query_timeout_and_error_under_one_watchdog(
+        spark, sf_dir, monkeypatch):
+    started = []
+
+    class CountingThread(threading.Thread):
+        def start(self):
+            if self.name == "query-watchdog":
+                started.append(self)
+            super().start()
+
+    monkeypatch.setattr(threading, "Thread", CountingThread)
+
+    def slow(spark, _sf_dir):  # ~50 s uncapped on 4 cores
+        return spark.range(10**10).selectExpr("id % 7 AS k").groupBy("k").count()
+
+    rec = bench.measure_query(spark, slow, "slow", sf_dir, cap=1)
+    assert rec["status"] == "timeout", rec
+    assert 1 <= rec["wall_s"] < 30
+    assert len(started) == 1 and not started[0].is_alive()
+    # the cancel reaches the tasks: no orphaned stage keeps the cores busy
+    # (a cross join's tasks ignore the kill and would starve later tests)
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + 30
+    while tracker.getActiveStageIds() and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert not tracker.getActiveStageIds()
+
+    def broken(spark, _sf_dir):
+        raise ValueError("no such table")
+
+    rec = bench.measure_query(spark, broken, "broken", sf_dir, cap=1)
+    assert rec["status"] == "error"
+    assert rec["error"] == "ValueError: no such table"
+    assert rec["build_jobs"] == 0 and rec["exec_jobs"] == 0
+    assert len(started) == 2 and not started[1].is_alive()
+    # the watchdog's job tag does not outlive its block
+    assert not spark.sparkContext.getJobTags()
+
+
+def _noop_writes(tree: ast.AST) -> list[ast.Call]:
+    """Every ``<df>.write.format("noop")`` call under ``tree`` (a
+    streaming ``writeStream`` sink is not a query timing)."""
+    return [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "format"
+        and isinstance(n.func.value, ast.Attribute)
+        and n.func.value.attr == "write"
+        and [getattr(a, "value", None) for a in n.args] == ["noop"]
+    ]
+
+
+def test_measure_query_is_the_only_noop_write():
+    """bench.py and every script time queries through bench.measure_query:
+    no second build + noop-write timing path."""
+    root = Path(bench.__file__).resolve().parent
+    stray = []
+    for path in [root / "bench.py", *sorted((root / "scripts").glob("*.py"))]:
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path.name == "bench.py":
+            (measure,) = [n for n in tree.body
+                          if isinstance(n, ast.FunctionDef)
+                          and n.name == "measure_query"]
+            allowed = {id(c) for c in _noop_writes(measure)}
+            assert len(allowed) == 1
+        stray += [f"{path.name}:{c.lineno}" for c in _noop_writes(tree)
+                  if id(c) not in allowed]
+    assert stray == []
