@@ -47,6 +47,10 @@ ROUND = "12"
 REG_RATIO = 1.5
 REG_ABS_SECONDS = 0.5
 
+# How long measure_query waits, after its watchdog cancelled a query, for
+# the cancelled stages to end before it records them as orphaned.
+ORPHAN_WAIT_S = 30.0
+
 # Headline set: exercises scan+join+agg, windows, sessionization, temporal
 # joins, integration, dedup (exact/LSH), text, and vector paths.
 HEADLINE = [
@@ -174,6 +178,19 @@ def _watchdog(sc, cap: float | None):
         sc.removeJobTag(tag)
 
 
+def _active_stages_after(sc, wait_s: float) -> int:
+    """How many Spark stages are still active once they have had up to
+    ``wait_s`` seconds to end (polled every 0.2 s). The tasks of some
+    plans ignore a cancel (a ``BroadcastNestedLoopJoin`` kept all four
+    cores busy 930 s after its job was cancelled)."""
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + wait_s
+    while (active := tracker.getActiveStageIds()) \
+            and time.monotonic() < deadline:
+        time.sleep(0.2)
+    return len(active)
+
+
 def measure_query(spark, fn, name: str, sf_dir: str,
                   cap: float | None = None) -> dict:
     """Build and run one query: the ONE query-timing path of bench.py,
@@ -184,9 +201,14 @@ def measure_query(spark, fn, name: str, sf_dir: str,
     Each phase runs under its own job group, counted by
     ``getJobIdsForGroup`` (the jobs ``cache.truncate`` starts at build run
     outside any SQL execution). Shuffle-write and spill bytes and operator
-    counts are the exec phase's SQL executions. All capture sits outside
-    the timed spans. ``status`` is ok, timeout (``cap`` seconds passed)
-    or error (traceback on stderr, message in ``error``)."""
+    counts are the exec phase's SQL executions, and so is
+    ``peak_exec_memory_bytes``, the largest node's peak memory. All capture
+    sits outside the timed spans. ``status`` is ok, timeout (``cap``
+    seconds passed) or error (traceback on stderr, message in ``error``).
+    Once the watchdog has fired, it waits up to ``ORPHAN_WAIT_S`` for the
+    cancelled stages to end and records how many are still active as
+    ``orphaned_stages`` (absent when none are): a later query would run
+    on the cores their tasks hold."""
     from perfbench.statusstore import StatusStore
 
     sc = spark.sparkContext
@@ -217,6 +239,10 @@ def measure_query(spark, fn, name: str, sf_dir: str,
                 rec = {"status": "error", "error": msg[:300]}
         finally:
             sc.setJobGroup("", "")
+    if fired.is_set():
+        orphaned = _active_stages_after(sc, ORPHAN_WAIT_S)
+        if orphaned:
+            rec["orphaned_stages"] = orphaned
     build_s, exec_s = (spans + [0.0])[:2]
     store.drain()
     execs = [] if mark is None else store.executions_after(mark)
@@ -226,11 +252,14 @@ def measure_query(spark, fn, name: str, sf_dir: str,
         ops.update(e["operators"])
         sums.update({k: int(e.get(k, 0))
                      for k in ("shuffle_write_bytes", "spill_bytes")})
+    peak = max((int(e.get("peak_exec_memory_bytes", 0)) for e in execs),
+               default=0)
     return {**rec, "wall_s": round(build_s + exec_s, 3),
             "build_s": round(build_s, 3), "exec_s": round(exec_s, 3),
             "build_jobs": jobs[0], "exec_jobs": jobs[1],
             "shuffle_write_bytes": sums["shuffle_write_bytes"],
-            "spill_bytes": sums["spill_bytes"], "operators": dict(ops)}
+            "spill_bytes": sums["spill_bytes"],
+            "peak_exec_memory_bytes": peak, "operators": dict(ops)}
 
 
 def _newest_prior_sidecar(here: Path) -> Path | None:

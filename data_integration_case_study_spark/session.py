@@ -55,6 +55,15 @@ def get_spark(
     - ``spark.sql.parquet.*`` pushdown flags are on by default in Spark 4
       but pinned here so the scan contract (PushedFilters in .explain) is
       explicit and survives config drift.
+    - ``spark.buffer.pageSize`` = 4m: every sort, hash-aggregate and
+      shuffle-sorter consumer in a task takes a whole Tungsten page before
+      it holds a byte. Left unset, Spark sizes the page as
+      nextPowerOf2(execution memory / cores / 16) capped at 64 MB, and
+      the 8g driver hits the cap, so a 9-task sort of a few thousand rows
+      zero-fills ~577 MB. A record larger than a page still gets its own
+      page (``allocatePage`` takes max(pageSize, required)); the one new
+      ceiling is the per-task page table, 8192 pages x 4 MiB = 32 GiB per
+      task, far above any task's execution-memory share.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -88,6 +97,7 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.buffer.pageSize", "4m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -52,9 +52,12 @@ def assert_unique(df: DataFrame, keys: list[str]) -> DataFrame:
 
 
 def assert_not_null(df: DataFrame, cols: list[str]) -> DataFrame:
-    """NOT NULL constraint as a distributed assertion."""
+    """NOT NULL constraint as a distributed assertion. No columns: no
+    column can hold a null, so ``df`` is returned without a job."""
     from pyspark.sql import functions as F
 
+    if not cols:
+        return df
     pred = None
     for c in cols:
         p = F.col(c).isNull()
@@ -129,8 +132,13 @@ def write_with_quality_gate(
     Observe, write and check all run inside :func:`replace_dir`'s
     staging step, so ``path`` is replaced only after every predicate
     passes — a failed gate never leaves rejected data where downstream
-    consumers read."""
+    consumers read. Empty ``expectations`` raise ``ValueError`` before
+    anything is written: a gate that checks nothing certifies nothing."""
     from pyspark.sql import Observation
+
+    if not expectations:
+        raise ValueError(
+            f"write_with_quality_gate({path!r}): expectations is empty")
 
     obs = Observation("quality_gate")
     aggs = [col.alias(name) for name, (col, _) in expectations.items()]

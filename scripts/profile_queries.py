@@ -5,8 +5,9 @@ Prints, per requested query, the best-of-``--reps`` record by ``wall_s``:
 ``build_s`` (the Python plan construction, including any Spark jobs the
 query starts while building — ``build_jobs``), ``exec_s`` (the noop-sink
 run of the whole plan — ``exec_jobs``) and the exec phase's shuffle-write
-and spill bytes. ``--explain TAG`` also writes ``.explain("formatted")``
-to .perfbench/plans/<name>_<TAG>.txt (gitignored) so plan claims are
+and spill bytes and peak execution memory (the largest plan node's).
+``--explain TAG`` also writes ``.explain("formatted")`` to
+.perfbench/plans/<name>_<TAG>.txt (gitignored) so plan claims are
 checkable without running Spark; ``--json-out`` keeps the full records,
 operator counts included.
 
@@ -84,7 +85,9 @@ def main() -> None:
         print(f"{best['wall_s']:8.2f}  (build {best['build_s']:6.2f} "
               f"[{best['build_jobs']} jobs] + exec {best['exec_s']:6.2f})  "
               f"shuffle {best['shuffle_write_bytes']}B spill "
-              f"{best['spill_bytes']}B {best['status']}  {name}", flush=True)
+              f"{best['spill_bytes']}B peak "
+              f"{best['peak_exec_memory_bytes'] / 2**20:.1f}MiB "
+              f"{best['status']}  {name}", flush=True)
 
     if args.json_out:
         Path(args.json_out).write_text(json.dumps(

@@ -21,6 +21,12 @@ beyond the audit threshold are listed for adjudication (some are
 expected: documented exhaustive verification twins, and pair-emitting
 queries whose ANSWER grows super-linearly by semantics).
 
+Every row also prints the exec phase's peak execution memory (the largest
+plan node's ``peak memory``). A timed-out query whose cancelled stages do
+not end prints how many it left running, and every row that starts while
+stages are still active is flagged STARVED: it was measured on cores
+those tasks held.
+
 Usage: python scripts/make_sf1.py && python scripts/sf1_probe.py [--all]
 """
 
@@ -44,6 +50,30 @@ AUDIT_RATIO = 8.0  # flag anything not clearly sub-linear vs 10x data
 # itself exceeds this floor; high-ratio sub-floor rows are reported
 # separately as "overhead" so they stop reading as scale problems.
 AUDIT_FLOOR_SECONDS = 2.0
+STARVED = "  (STARVED: an earlier query's cancelled stages still ran)"
+
+
+def _mib(n: int) -> str:
+    return f"{n / 2**20:.1f}MiB"
+
+
+def _measure(spark, fn, name: str, sf_dir: str, cap: int | None,
+             starved: list[str]) -> dict:
+    """``bench.measure_query``, appending ``name`` to ``starved`` when it
+    starts while stages are still active: the tasks of an earlier
+    timed-out query that ignored the cancel, which hold cores this
+    measurement needs. Prints how many stages a timeout orphaned."""
+    import bench
+
+    if spark.sparkContext.statusTracker().getActiveStageIds() \
+            and name not in starved:
+        starved.append(name)
+    rec = bench.measure_query(spark, fn, name, sf_dir, cap=cap)
+    if rec.get("orphaned_stages"):
+        print(f"[orphaned] {rec['orphaned_stages']} stage(s) of {name} still "
+              f"active after the cancel; rows measured while they run are "
+              f"flagged STARVED", flush=True)
+    return rec
 
 
 def run_all(spark, qs, big: str = SF1, growth: int = 10) -> int:
@@ -70,7 +100,8 @@ def run_all(spark, qs, big: str = SF1, growth: int = 10) -> int:
               f"row and are skipped: {missing}")
 
     def capped(name: str) -> tuple[float, str]:
-        rec = bench.measure_query(spark, qs[name], name, big, cap=CAP_SECONDS)
+        rec = _measure(spark, qs[name], name, big, CAP_SECONDS, starved)
+        peaks[name] = rec["peak_exec_memory_bytes"]
         return rec["wall_s"], rec["status"]
 
     # warm the JVM/parquet footers on the BIG side before timing — the
@@ -81,6 +112,8 @@ def run_all(spark, qs, big: str = SF1, growth: int = 10) -> int:
     # warm-up hang would stall the whole audit before the per-query
     # watchdog ever engaged); the wall is discarded, a timeout/error
     # here just means query [1] times itself cold.
+    starved: list[str] = []
+    peaks: dict[str, int] = {}
     capped(names[0])
 
     results, timeouts, errors, audit, overhead = {}, [], [], [], []
@@ -116,10 +149,13 @@ def run_all(spark, qs, big: str = SF1, growth: int = 10) -> int:
                 # amplified by a tiny baseline, not a plan (ask #5)
                 flag = "  (overhead: under floor)"
                 overhead.append(name)
+        if name in starved:
+            flag += STARVED
         results[name] = {"sf0.1": baseline[name], "sf1": wall,
-                         "ratio": ratio}
+                         "ratio": ratio, "peak_exec_memory_bytes": peaks[name]}
         print(f"[{i + 1}/{len(names)}] {name:32s} sf0.1={baseline[name]:7.2f}s "
-              f"sf1={wall:7.2f}s ratio={ratio:5.1f}x{flag}", flush=True)
+              f"sf1={wall:7.2f}s ratio={ratio:5.1f}x "
+              f"peak={_mib(peaks[name])}{flag}", flush=True)
     print(json.dumps({
         "probe": f"catalog_scaling_vs_{Path(big).name}",
         "data_growth": growth,
@@ -129,6 +165,7 @@ def run_all(spark, qs, big: str = SF1, growth: int = 10) -> int:
         "n_run": len(results),
         "timeouts": timeouts,
         "errors": errors,
+        "starved": starved,
         "audit": {n: results[n] for n in audit},
         "overhead": {n: results[n] for n in overhead},
     }))
@@ -197,10 +234,10 @@ def main() -> int:
         except Exception:
             pass
 
-    rows, timeouts, errors = [], [], []
+    rows, timeouts, errors, starved = [], [], [], []
     for name in probe_names:
-        small = bench.measure_query(spark, qs[name], name, SF01)
-        rec = bench.measure_query(spark, qs[name], name, big, cap=args.cap)
+        small = _measure(spark, qs[name], name, SF01, None, starved)
+        rec = _measure(spark, qs[name], name, big, args.cap, starved)
         if small["status"] != "ok" or rec["status"] != "ok":
             # the uncapped sf0.1 side can only error, never time out
             timed_out = rec["status"] == "timeout"
@@ -212,16 +249,23 @@ def main() -> int:
         # floor at 10ms: a sub-5ms noop write rounds to 0.00 and would
         # otherwise divide by zero
         t_small, t_big = max(small["wall_s"], 0.01), rec["wall_s"]
+        peak_small, peak_big = (r["peak_exec_memory_bytes"]
+                                for r in (small, rec))
         rows.append({"query": name, "sf0.1": t_small, "big": t_big,
-                     "ratio": round(t_big / t_small, 1)})
+                     "ratio": round(t_big / t_small, 1),
+                     "peak_exec_memory_bytes": {"sf0.1": peak_small,
+                                                "big": peak_big}})
         print(f"{name:32s} sf0.1={t_small:7.2f}s big={t_big:7.2f}s "
-              f"ratio={t_big / t_small:5.1f}x", flush=True)
+              f"ratio={t_big / t_small:5.1f}x peak sf0.1={_mib(peak_small)} "
+              f"big={_mib(peak_big)}"
+              f"{STARVED if name in starved else ''}", flush=True)
     print(json.dumps({
         "probe": f"headline_scaling_vs_{Path(big).name}",
         "data_growth": args.growth,
         "cap_seconds": args.cap,
         "timeouts": timeouts,
         "errors": errors,
+        "starved": starved,
         "rows": rows,
     }))
     spark.stop()

@@ -353,7 +353,27 @@ def test_main_raises_on_headline_name_missing_from_catalog(monkeypatch):
 
 MEASURE_FIELDS = {"status", "wall_s", "build_s", "exec_s", "build_jobs",
                   "exec_jobs", "shuffle_write_bytes", "spill_bytes",
-                  "operators"}
+                  "peak_exec_memory_bytes", "operators"}
+PAGE = 4 * 2**20  # spark.buffer.pageSize pinned by session.get_spark
+
+
+def test_get_spark_pins_tungsten_page_size(spark):
+    env = spark.sparkContext._jsc.sc().env()
+    assert env.memoryManager().pageSizeBytes() == PAGE
+
+
+def test_measure_query_peak_memory_is_a_few_pages(spark, sf_dir):
+    """A tiny group-by's peak is its final aggregate's page: AQE coalesces
+    the shuffle to one task, which takes one page on its first row (64 MB
+    at Spark's default page size, 4 MiB pinned). The bound allows a page
+    for each of the 4 map tasks plus one."""
+    def tiny(spark, _sf_dir):
+        return spark.range(0, 1000, 1, 4).selectExpr("id % 7 AS k") \
+            .groupBy("k").count()
+
+    rec = bench.measure_query(spark, tiny, "tiny", sf_dir)
+    assert rec["status"] == "ok"
+    assert 0 < rec["peak_exec_memory_bytes"] <= 4 * PAGE + PAGE
 
 
 def test_measure_query_splits_build_jobs_from_exec(spark, sf_dir):
@@ -397,11 +417,8 @@ def test_measure_query_timeout_and_error_under_one_watchdog(
     assert len(started) == 1 and not started[0].is_alive()
     # the cancel reaches the tasks: no orphaned stage keeps the cores busy
     # (a cross join's tasks ignore the kill and would starve later tests)
-    tracker = spark.sparkContext.statusTracker()
-    deadline = time.monotonic() + 30
-    while tracker.getActiveStageIds() and time.monotonic() < deadline:
-        time.sleep(0.2)
-    assert not tracker.getActiveStageIds()
+    assert "orphaned_stages" not in rec
+    assert not spark.sparkContext.statusTracker().getActiveStageIds()
 
     def broken(spark, _sf_dir):
         raise ValueError("no such table")
@@ -413,6 +430,59 @@ def test_measure_query_timeout_and_error_under_one_watchdog(
     assert len(started) == 2 and not started[1].is_alive()
     # the watchdog's job tag does not outlive its block
     assert not spark.sparkContext.getJobTags()
+
+
+class _StubTracker:
+    """The session's status tracker, except that ``getActiveStageIds``
+    replays ``active`` (its last entry repeats once the list runs out)."""
+
+    def __init__(self, real, active: list[list[int]]):
+        self._real, self._active, self.polls = real, active, 0
+
+    def getActiveStageIds(self):
+        self.polls += 1
+        return self._active[min(self.polls, len(self._active)) - 1]
+
+    def __getattr__(self, name):
+        return getattr(self._real, name)
+
+
+def _timed_out(spark, sf_dir, active):
+    """measure_query on a build that outlasts a 0.2 s cap, with a stub
+    reporting ``active`` stage ids after the cancel."""
+    sc = spark.sparkContext
+    stub = _StubTracker(sc.statusTracker(), active)
+
+    def stuck(_spark, _sf_dir):
+        time.sleep(0.6)
+        raise RuntimeError("job cancelled")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(bench, "ORPHAN_WAIT_S", 0.5)
+        mp.setattr(sc, "statusTracker", lambda: stub)
+        return bench.measure_query(spark, stuck, "stuck", sf_dir, cap=0.2), stub
+
+
+def test_measure_query_counts_stages_orphaned_by_a_timeout(spark, sf_dir):
+    rec, stub = _timed_out(spark, sf_dir, [[7, 9]])
+    assert rec["status"] == "timeout"
+    assert rec["orphaned_stages"] == 2
+    assert stub.polls >= 2  # it waited before giving up
+    # stages that end within the wait are not orphans
+    rec, stub = _timed_out(spark, sf_dir, [[7, 9], [9], []])
+    assert rec["status"] == "timeout" and "orphaned_stages" not in rec
+    assert stub.polls == 3
+
+
+def test_measure_query_without_timeout_does_not_wait_for_stages(
+        spark, sf_dir, monkeypatch):
+    sc = spark.sparkContext
+    stub = _StubTracker(sc.statusTracker(), [[3]])
+    monkeypatch.setattr(sc, "statusTracker", lambda: stub)
+    rec = bench.measure_query(spark, lambda s, _d: s.range(3), "ok", sf_dir,
+                              cap=30)
+    assert rec["status"] == "ok" and "orphaned_stages" not in rec
+    assert stub.polls == 0
 
 
 def _noop_writes(tree: ast.AST) -> list[ast.Call]:

@@ -22,6 +22,19 @@ def test_assert_not_null(spark):
         sinks.assert_not_null(bad, ["v"])
 
 
+def test_assert_not_null_without_columns_is_a_no_op(spark):
+    df = spark.createDataFrame([(None,)], "v string")
+    assert sinks.assert_not_null(df, []) is df
+
+
+def test_quality_gate_rejects_empty_expectations(spark, tmp_path):
+    df = spark.createDataFrame([(1,)], "id long")
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="expectations is empty"):
+        sinks.write_with_quality_gate(df, str(out), {})
+    assert not any(tmp_path.iterdir())  # nothing written, not even staging
+
+
 def test_parquet_roundtrip_partitioned(spark, sf_dir):
     df = read_parquet_table(spark, sf_dir, "customer")
     d = tempfile.mkdtemp(prefix="sink_")
