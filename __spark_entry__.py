@@ -23,7 +23,10 @@ from data_integration_case_study_spark.plans import (
     corpus_queries,
     diagnostics_queries,
     events_queries,
-    inference_queries,
+    inference_eval,
+    inference_rec,
+    inference_stats,
+    inference_ts,
     integration_queries,
     mining_queries,
     pipeline_queries,
@@ -85,7 +88,10 @@ def _catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         **relational.QUERIES,
         **tpch_extra.QUERIES,
         **events_queries.QUERIES,
-        **inference_queries.QUERIES,
+        **inference_stats.QUERIES,
+        **inference_ts.QUERIES,
+        **inference_eval.QUERIES,
+        **inference_rec.QUERIES,
         **text_queries.QUERIES,
         **vector_queries.QUERIES,
         **advanced.QUERIES,
@@ -186,7 +192,10 @@ def oracle_sql() -> dict[str, str]:
         **relational.ORACLES,
         **tpch_extra.ORACLES,
         **events_queries.ORACLES,
-        **inference_queries.ORACLES,
+        **inference_stats.ORACLES,
+        **inference_ts.ORACLES,
+        **inference_eval.ORACLES,
+        **inference_rec.ORACLES,
         **text_queries.ORACLES,
         **vector_queries.ORACLES,
         **advanced.ORACLES,

@@ -47,12 +47,12 @@ def dsum_sql(expr: str, scale: int = 8) -> str:
     )
 
 
-def davg(col: Column | str, scale: int = 8) -> Column:
+def davg(col: Column | str) -> Column:
     """Exact-sum average: decimal sum / count, divided in double space."""
     c = F.col(col) if isinstance(col, str) else col
-    return dsum(c, scale) / F.count(c)
+    return dsum(c) / F.count(c)
 
 
-def davg_sql(expr: str, scale: int = 8) -> str:
+def davg_sql(expr: str) -> str:
     """The DuckDB twin of :func:`davg`."""
-    return f"({dsum_sql(expr, scale)} / COUNT({expr}))"
+    return f"({dsum_sql(expr)} / COUNT({expr}))"

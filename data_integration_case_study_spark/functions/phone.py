@@ -17,16 +17,15 @@ the subtleties:
   (plain re-assignments, not elif): 9-char beats 10-char beats the
   dash-group branches.
 - validation: the reference calls ``phonenumbers.is_possible_number``
-  (insert.py:60-67), returning null on invalid/unparseable. The engine
-  default (:func:`validate_phone_possible`) VENDORS that check's
+  (insert.py:60-67), returning null on invalid/unparseable. The engine's
+  validator (:func:`validate_phone_possible`) VENDORS that check's
   semantics natively from public libphonenumber metadata: strip an
   end-anchored x-extension, keypad-map letters when the number is a
   vanity number (≥3 letters), then count digits against the region's
   possible-length set (US/+1: {10}; FR/+33: {9} — the only two regions
-  the normalizer can emit). Fully JVM-side and oracle-checkable, and —
-  unlike the earlier strict-shape regex (:func:`validate_phone_native`,
-  kept as the canonical-format variant) — it accepts the odd-grouped
-  dash-branch outputs (``+1 1-234567-890``) exactly as the library does.
+  the normalizer can emit). Fully JVM-side and oracle-checkable, and it
+  accepts the odd-grouped dash-branch outputs (``+1 1-234567-890``)
+  exactly as the library does.
   When the real ``phonenumbers`` library is installed,
   :func:`validate_phone_udf` runs it via an Arrow-batched pandas_udf
   (the engine's only sanctioned UDF class, SURVEY §2.8); without it the
@@ -41,9 +40,6 @@ import re
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-US_POSSIBLE = r"^\+1 \d{3}-\d{3}-\d{4}(x\d+)?$"
-FR_POSSIBLE = r"^\+33 \d \d{2} \d{2} \d{2} \d{2}(x\d+)?$"
 
 # Vendored libphonenumber metadata for the two regions the normalizer
 # emits: generalDesc possible lengths (national significant number).
@@ -115,16 +111,6 @@ def normalize_phone(c: Column | str) -> Column:
     return F.when(
         ext.isNotNull(), F.concat(picked, F.lit("x"), ext)
     ).otherwise(picked)
-
-
-def validate_phone_native(c: Column) -> Column:
-    """Strict canonical-shape validation: null unless the string is one
-    of the two shapes the len-9/len-10 branches emit. Narrower than
-    ``is_possible_number`` (rejects odd-grouped dash-branch outputs the
-    library would accept) — kept for callers that want format
-    enforcement; :func:`validate_phone_possible` is the reference-parity
-    default."""
-    return F.when(c.rlike(US_POSSIBLE) | c.rlike(FR_POSSIBLE), c)
 
 
 def validate_phone_possible(c: Column) -> Column:

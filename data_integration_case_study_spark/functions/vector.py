@@ -22,23 +22,31 @@ from pyspark.sql import functions as F
 # operators/similarity._GRID for the rationale).
 _SIG_GRID = float(1 << 40)
 
+# The hyperplane family's seed: every LSH bucket key and projection, and
+# their DuckDB twins, hash under it, so it is part of the answer.
+PLANE_SEED = 42
 
-def plane_components(i: int, seed: int, dim: int) -> list[float]:
+# Clamp of the corpus-size-derived plane count, read by both
+# :func:`adaptive_n_planes` and its DuckDB twin.
+MIN_PLANES, MAX_PLANES = 4, 16
+
+
+def plane_components(i: int, dim: int) -> list[float]:
     """The ``dim`` components of hyperplane ``i``: component p is ±1
-    from the parity of the first sha256 hex digit of "seed:i:p". No
+    from the parity of the first sha256 hex digit of "PLANE_SEED:i:p". No
     hyperplane matrix is stored; DuckDB's sha256 over the same UTF-8
     bytes re-derives it in the oracle twins."""
     import hashlib
 
     return [
         1.0
-        if int(hashlib.sha256(f"{seed}:{i}:{p}".encode()).hexdigest()[0], 16) % 2
+        if int(hashlib.sha256(f"{PLANE_SEED}:{i}:{p}".encode()).hexdigest()[0], 16) % 2
         else -1.0
         for p in range(dim)
     ]
 
 
-def _plane_dots(vec_col: str, n_planes: int, seed: int, dim: int) -> list[str]:
+def _plane_dots(vec_col: str, n_planes: int, dim: int) -> list[str]:
     """SQL for the exact snapped <v, h_i>, i < ``n_planes``, of the array
     column named ``vec_col``, each a 2^40-scaled long. The planes come
     from :func:`plane_components` as literal arrays. Each ±val product
@@ -53,7 +61,7 @@ def _plane_dots(vec_col: str, n_planes: int, seed: int, dim: int) -> list[str]:
     about 1 ms and analyzes to the same fold."""
     dots = []
     for i in range(n_planes):
-        h = ", ".join(f"{c!r}D" for c in plane_components(i, seed, dim))
+        h = ", ".join(f"{c!r}D" for c in plane_components(i, dim))
         dots.append(
             f"aggregate(zip_with(`{vec_col}`, CAST(array({h}) AS ARRAY<DOUBLE>), "
             f"(x, h) -> CAST(floor(CAST(x AS DOUBLE) * h * {_SIG_GRID!r}D + 0.5D) "
@@ -75,9 +83,7 @@ def _width_checked(vec_col: str, dim: int, what: str, sql: str) -> Column:
     )
 
 
-def projection_dots(
-    vec_col: str, n_planes: int, seed: int = 42, *, dim: int
-) -> Column:
+def projection_dots(vec_col: str, n_planes: int, *, dim: int) -> Column:
     """Random ±1 projection of the ``dim``-wide vectors in column
     ``vec_col`` onto ``n_planes`` hyperplanes, as an array<double> of the
     exact grid-snapped dot products: the Johnson-Lindenstrauss
@@ -86,7 +92,7 @@ def projection_dots(
     :func:`random_hyperplane_signature`, which is exactly the SIGNS of
     this projection."""
     dots = ", ".join(
-        f"{d} / {_SIG_GRID!r}D" for d in _plane_dots(vec_col, n_planes, seed, dim)
+        f"{d} / {_SIG_GRID!r}D" for d in _plane_dots(vec_col, n_planes, dim)
     )
     return _width_checked(
         vec_col, dim, "projection", f"CAST(array({dots}) AS ARRAY<DOUBLE>)"
@@ -94,7 +100,7 @@ def projection_dots(
 
 
 def random_hyperplane_signature(
-    vec_col: str, n_planes: int = 16, seed: int = 42, *, dim: int
+    vec_col: str, n_planes: int = 16, *, dim: int
 ) -> Column:
     """Sign-random-projection (SimHash-for-cosine) signature of the
     ``dim``-wide vectors in column ``vec_col``: bit i is the sign of
@@ -102,21 +108,18 @@ def random_hyperplane_signature(
     in [0, 2^n_planes); ``n_planes=0`` puts every vector in bucket 0."""
     bits = [
         f"IF({d} > 0, {1 << i}L, 0L)"
-        for i, d in enumerate(_plane_dots(vec_col, n_planes, seed, dim))
+        for i, d in enumerate(_plane_dots(vec_col, n_planes, dim))
     ]
     return _width_checked(
         vec_col, dim, "hyperplane signature", " | ".join(bits) or "0L"
     )
 
 
-def adaptive_n_planes(
-    n_rows: int, target_bucket: int = 32, min_planes: int = 4,
-    max_planes: int = 16,
-) -> int:
+def adaptive_n_planes(n_rows: int, target_bucket: int = 32) -> int:
     """Corpus-size-derived LSH plane count: the smallest ``p`` with
     ``2^p * target_bucket >= n_rows`` — i.e. the expected bucket
     population under a uniform split stays <= ``target_bucket`` — clamped
-    to [min_planes, max_planes]. This is the size dispatcher
+    to [MIN_PLANES, MAX_PLANES]. This is the size dispatcher
     (:func:`operators.similarity.topk`'s pattern) applied to the
     bucket-join family: planes grow with log(N), so per-bucket pair work
     stays ~constant instead of quadratic at a fixed plane count.
@@ -126,27 +129,24 @@ def adaptive_n_planes(
     float-log2 boundary risk."""
     need = -(-max(int(n_rows), 1) // target_bucket)
     p = (need - 1).bit_length()
-    return max(min_planes, min(max_planes, p))
+    return max(MIN_PLANES, min(MAX_PLANES, p))
 
 
-def adaptive_n_planes_sql(
-    count_from_sql: str, target_bucket: int = 32, min_planes: int = 4,
-    max_planes: int = 16,
-) -> str:
+def adaptive_n_planes_sql(count_from_sql: str, target_bucket: int = 32) -> str:
     """Scalar DuckDB expression computing exactly
     :func:`adaptive_n_planes` over ``COUNT(*)`` of ``count_from_sql``
     (a relation name or subquery). Usable anywhere a scalar fits —
     including as a ``generate_series`` bound."""
     return (
-        f"(SELECT GREATEST({min_planes}, MIN(p)) "
-        f"FROM (SELECT unnest(generate_series(0, {max_planes})) AS p), "
+        f"(SELECT GREATEST({MIN_PLANES}, MIN(p)) "
+        f"FROM (SELECT unnest(generate_series(0, {MAX_PLANES})) AS p), "
         f"(SELECT COUNT(*) AS n FROM ({count_from_sql})) "
-        f"WHERE (1::BIGINT << p) * {target_bucket} >= n OR p = {max_planes})"
+        f"WHERE (1::BIGINT << p) * {target_bucket} >= n OR p = {MAX_PLANES})"
     )
 
 
 def projection_sql(
-    source_sql: str, n_planes: int | str, seed: int = 42,
+    source_sql: str, n_planes: int | str,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> str:
     """DuckDB subquery replaying the exact snapped plane dots of
@@ -157,7 +157,7 @@ def projection_sql(
     (e.g. :func:`adaptive_n_planes_sql`) evaluated by DuckDB."""
     grid = "1099511627776.0"
     comp = (
-        f"CASE WHEN ('0x' || substr(sha256(CAST({seed} AS VARCHAR) || ':' || "
+        f"CASE WHEN ('0x' || substr(sha256(CAST({PLANE_SEED} AS VARCHAR) || ':' || "
         f"CAST(plane AS VARCHAR) || ':' || CAST(pos - 1 AS VARCHAR)), 1, 1))::BIGINT % 2 = 1 "
         f"THEN 1.0 ELSE -1.0 END"
     )
@@ -178,7 +178,7 @@ def projection_sql(
 
 
 def hyperplane_signature_sql(
-    source_sql: str, n_planes: int | str, seed: int = 42,
+    source_sql: str, n_planes: int | str,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> str:
     """DuckDB CTE body replaying :func:`random_hyperplane_signature` over
@@ -188,6 +188,6 @@ def hyperplane_signature_sql(
   SELECT {id_col}, CAST(SUM(CASE WHEN d > 0 THEN (1::BIGINT << plane)
                                ELSE 0::BIGINT END) AS BIGINT) AS bucket
   FROM (
-{projection_sql(source_sql, n_planes, seed, id_col, vec_col)}
+{projection_sql(source_sql, n_planes, id_col, vec_col)}
   ) GROUP BY 1
 """

@@ -35,6 +35,10 @@ from data_integration_case_study_spark.functions.text import (
 # A large 32-bit prime for the affine MinHash permutations.
 _MERSENNE = (1 << 31) - 1
 
+# The MinHash family's seed: signatures, band keys and their DuckDB
+# replays all derive their affine permutations from it.
+MINHASH_SEED = 42
+
 # Largest distinct token vocabulary ngram_jaccard_pairs' window path
 # verifies as fixed-width bitsets (see its docstring); 0 disables the probe.
 BITSET_MAX_VOCAB = 256
@@ -445,7 +449,7 @@ def _shingle_hashes(
     ).select("id", (hash60("__shingle") % F.lit(_MERSENNE)).alias("h"))
 
 
-def _minima_aggs(num_hashes: int, seed: int) -> list:
+def _minima_aggs(num_hashes: int) -> list:
     """The ``num_hashes`` affine-minima agg expressions
     ``min((a_i*h + b_i) mod p)`` — codegen'd, map-side combinable.
     Built as SQL text (one JVM parse per agg) rather than Column
@@ -453,7 +457,7 @@ def _minima_aggs(num_hashes: int, seed: int) -> list:
     :func:`simhash_fingerprints`; identical parsed trees."""
     return [
         F.expr(f"min((CAST({a} AS BIGINT) * h + {b}) % {_MERSENNE}) AS m{i}")
-        for i, (a, b) in enumerate(_affine_params(num_hashes, seed))
+        for i, (a, b) in enumerate(_affine_params(num_hashes, MINHASH_SEED))
     ]
 
 
@@ -463,7 +467,7 @@ def _signature_array(num_hashes: int):
 
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str,
-    n: int = 3, num_hashes: int = 32, seed: int = 42,
+    n: int = 3, num_hashes: int = 32,
 ) -> DataFrame:
     """Per-document MinHash signature over word n-gram shingles.
 
@@ -478,14 +482,14 @@ def minhash_signatures(
     return (
         _shingle_hashes(df, id_col, text_col, n)
         .groupBy("id")
-        .agg(*_minima_aggs(num_hashes, seed))
+        .agg(*_minima_aggs(num_hashes))
         .select("id", _signature_array(num_hashes))
     )
 
 
 def _minhash_per_doc(
     df: DataFrame, id_col: str, text_col: str,
-    n: int, num_hashes: int, seed: int,
+    n: int, num_hashes: int,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Shared single-pass (id, signature, shingles) summary used by both
@@ -510,7 +514,7 @@ def _minhash_per_doc(
     out = (
         _shingle_hashes(df, id_col, text_col, n, tokens_col)
         .groupBy("id")
-        .agg(*_minima_aggs(num_hashes, seed), F.collect_set("h").alias("shingles"))
+        .agg(*_minima_aggs(num_hashes), F.collect_set("h").alias("shingles"))
         .select("id", _signature_array(num_hashes), "shingles")
     )
     return cache.track(out)
@@ -542,7 +546,7 @@ def _band_buckets(per_doc: DataFrame, num_hashes: int, bands: int) -> DataFrame:
 def minhash_candidate_pairs(
     df: DataFrame, id_col: str, text_col: str,
     n: int = 3, num_hashes: int = 32, bands: int = 8,
-    threshold: float = 0.5, seed: int = 42,
+    threshold: float = 0.5,
     bucket_window: int | None = None,
     tokens_col: str | None = None,
 ) -> DataFrame:
@@ -574,7 +578,7 @@ def minhash_candidate_pairs(
     # join); _minhash_per_doc persists it so Spark does not re-shingle and
     # re-hash the corpus for each read (see its cache-lifecycle note).
     per_doc = _minhash_per_doc(
-        df, id_col, text_col, n, num_hashes, seed, tokens_col=tokens_col
+        df, id_col, text_col, n, num_hashes, tokens_col=tokens_col
     )
     banded = _band_buckets(per_doc, num_hashes, bands)
 
@@ -617,7 +621,7 @@ def minhash_candidate_pairs(
 def minhash_incremental_pairs(
     new_df: DataFrame, corpus_df: DataFrame, id_col: str, text_col: str,
     n: int = 3, num_hashes: int = 32, bands: int = 8,
-    threshold: float = 0.5, seed: int = 42,
+    threshold: float = 0.5,
 ) -> DataFrame:
     """Incremental (cross-corpus) MinHash dedup: near-dup pairs between an
     INCOMING batch and an already-retained corpus — the steady-state form
@@ -635,8 +639,8 @@ def minhash_incremental_pairs(
     Returns (new_id, dup_of, jaccard): incoming docs near-duplicating a
     corpus doc at >= threshold.
     """
-    new_pd = _minhash_per_doc(new_df, id_col, text_col, n, num_hashes, seed)
-    corp_pd = _minhash_per_doc(corpus_df, id_col, text_col, n, num_hashes, seed)
+    new_pd = _minhash_per_doc(new_df, id_col, text_col, n, num_hashes)
+    corp_pd = _minhash_per_doc(corpus_df, id_col, text_col, n, num_hashes)
     cand = (
         _band_buckets(new_pd, num_hashes, bands)
         .withColumnRenamed("id", "new_id")

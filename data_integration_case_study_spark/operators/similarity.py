@@ -32,6 +32,15 @@ from data_integration_case_study_spark.operators import cache
 # binary value above that), summed exactly as DECIMAL(38,0).
 _GRID = float(1 << 40)
 
+# topk's mode='auto' cutoff: corpora up to this many rows are scored
+# exhaustively, larger ones through the multi-probe LSH path.
+_BRUTE_FORCE_LIMIT = 100_000
+
+# Expected LSH bucket population the adaptive plane count holds
+# (functions/vector.adaptive_n_planes): the kNN graph ranks within
+# buckets of ~32, near-dup verification pairs within buckets of ~16.
+KNN_BUCKET, NEARDUP_BUCKET = 32, 16
+
 
 def _exact_sum_of_products(x, y):
     from pyspark.sql import functions as _F
@@ -231,7 +240,6 @@ def ann_lsh_topk(
     vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 8,
-    seed: int = 42,
     probe_bits: int = 0,
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane buckets prune candidates, then
@@ -260,10 +268,10 @@ def ann_lsh_topk(
     # the exact O(d) cosine folded per candidate row (_pair_cosine) —
     # no exploded per-component join, no norm shuffle.
     c_sig = _rerank_side(corpus, id_col, vec_col, "c").withColumn(
-        "bucket", random_hyperplane_signature("c_v", n_planes, seed, dim=dim)
+        "bucket", random_hyperplane_signature("c_v", n_planes, dim=dim)
     )
     q_base = _rerank_side(queries, id_col, vec_col, "q").withColumn(
-        "__sig", random_hyperplane_signature("q_v", n_planes, seed, dim=dim)
+        "__sig", random_hyperplane_signature("q_v", n_planes, dim=dim)
     )
     masks = [0] + [1 << i for i in range(min(probe_bits, n_planes))]
     q_sig = q_base.select(
@@ -287,30 +295,28 @@ def topk(
     vec_col: str = "embedding",
     k: int = 5,
     mode: str = "auto",
-    brute_force_limit: int = 100_000,
     n_planes: int = 8,
     probe_bits: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """The similarity-join STRATEGY (SURVEY §4's candidate custom work):
     dispatch brute-force vs LSH from the corpus size.
 
     ``mode='auto'`` counts the corpus once (a metadata-cheap count on
-    parquet sources) and picks exhaustive scoring below
-    ``brute_force_limit`` — where exact recall costs less than the LSH
-    setup — and the multi-probe hyperplane path above it, where O(N·Q·d)
-    scoring stops being a job anyone waits for. This is a library-level
-    rewrite, deliberately NOT a Catalyst rule: the decision needs a
-    cardinality the optimizer already exposes, and a function keeps the
-    choice testable and overridable (``mode='brute'|'lsh'``)."""
+    parquet sources) and picks exhaustive scoring up to
+    ``_BRUTE_FORCE_LIMIT`` rows — where exact recall costs less than the
+    LSH setup — and the multi-probe hyperplane path above it, where
+    O(N·Q·d) scoring stops being a job anyone waits for. This is a
+    library-level rewrite, deliberately NOT a Catalyst rule: the decision
+    needs a cardinality the optimizer already exposes, and a function
+    keeps the choice testable (``mode='brute'|'lsh'`` forces a path)."""
     if mode == "auto":
-        mode = "brute" if corpus.count() <= brute_force_limit else "lsh"
+        mode = "brute" if corpus.count() <= _BRUTE_FORCE_LIMIT else "lsh"
     if mode == "brute":
         return cosine_topk_bruteforce(corpus, queries, id_col, vec_col, k)
     if mode == "lsh":
         return ann_lsh_topk(
             corpus, queries, id_col, vec_col, k,
-            n_planes=n_planes, seed=seed, probe_bits=probe_bits,
+            n_planes=n_planes, probe_bits=probe_bits,
         )
     raise ValueError(f"unknown mode {mode!r} (auto|brute|lsh)")
 
@@ -668,7 +674,7 @@ def embedding_neardup_pairs(
 
 def _bucket_pairs(
     df: DataFrame, id_col: str, vec_col: str, n_planes: int | None,
-    seed: int, target_bucket_size: int,
+    target_bucket_size: int,
 ) -> DataFrame:
     """The LSH blocking shared by :func:`embedding_neardup_pairs_lsh` and
     :func:`knn_graph`: :func:`_block_pairs` over random-hyperplane
@@ -696,7 +702,7 @@ def _bucket_pairs(
         spread_to_parallelism(df.select(id_col, vec_col)), id_col, vec_col, "a"
     )
     return _block_pairs(cache.track(side.withColumn(
-        "block", random_hyperplane_signature("a_v", n_planes, seed, dim=dim)
+        "block", random_hyperplane_signature("a_v", n_planes, dim=dim)
     )))
 
 
@@ -706,8 +712,6 @@ def embedding_neardup_pairs_lsh(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     n_planes: int | None = None,
-    seed: int = 42,
-    target_bucket_size: int = 16,
 ) -> DataFrame:
     """Embedding near-dup pairs blocked by the random-hyperplane LSH
     bucket — the 100 TB form of :func:`embedding_neardup_pairs`.
@@ -717,7 +721,7 @@ def embedding_neardup_pairs_lsh(
     ``n_planes=None`` (the default) derives the plane count from the
     corpus size via :func:`functions.vector.adaptive_n_planes`
     (one metadata-cheap count), holding expected bucket population at
-    ``target_bucket_size`` so the pair join stays ~linear as the corpus
+    ``NEARDUP_BUCKET`` so the pair join stays ~linear as the corpus
     grows — a fixed plane count would re-quadratize it.
     Cost: high-cosine pairs land in the same bucket with probability
     (1 - θ/π)^n_planes (θ = angle), so a single-probe blocking trades a
@@ -726,7 +730,7 @@ def embedding_neardup_pairs_lsh(
     :func:`knn_graph`; sha256-derived buckets keep it oracle-checkable.
     Output block = the shared bucket id."""
     return _bucket_pairs(
-        df, id_col, vec_col, n_planes, seed, target_bucket_size
+        df, id_col, vec_col, n_planes, NEARDUP_BUCKET
     ).filter(F.col("cosine") >= threshold)
 
 
@@ -736,8 +740,6 @@ def knn_graph(
     vec_col: str = "embedding",
     k: int = 3,
     n_planes: int | None = None,
-    seed: int = 42,
-    target_bucket_size: int = 32,
 ) -> DataFrame:
     """Approximate k-NN GRAPH: every vector's top-k neighbors within its
     LSH bucket — the all-sources form of :func:`ann_lsh_topk` (which
@@ -750,7 +752,7 @@ def knn_graph(
     ``n_planes=None`` (the default) derives the plane count from the
     corpus size (:func:`functions.vector.adaptive_n_planes`, one
     metadata-cheap count) so per-bucket work holds ~constant at
-    ``target_bucket_size`` as N grows; a fixed plane count would make
+    ``KNN_BUCKET`` as N grows; a fixed plane count would make
     the pair join quadratic in N. The top-k cut is a per-source window
     over bucket-local candidates only. Vectors whose bucket holds no
     neighbor emit no edges — the documented recall trade; multi-probe or
@@ -767,7 +769,7 @@ def knn_graph(
     widths fail the job with :data:`DEGENERATE_VECTOR`. On the LSH paths
     a width mismatch may fail first in the signature guard
     (``hyperplane signature: expected d-dim vector``)."""
-    pairs = _bucket_pairs(df, id_col, vec_col, n_planes, seed, target_bucket_size)
+    pairs = _bucket_pairs(df, id_col, vec_col, n_planes, KNN_BUCKET)
     edges = pairs.select(
         F.col("id_a").alias("q_id"), F.col("id_b").alias("c_id"), "cosine"
     ).unionByName(

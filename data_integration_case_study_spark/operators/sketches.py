@@ -38,6 +38,11 @@ from data_integration_case_study_spark.operators.dedup import (
 # in every engine.
 _KMV_M = float(1 << 60)
 
+# Affine-hash seeds, one per sketch family (dedup._affine_params). A
+# sketch merged or probed under another family's seed would be silently
+# wrong, and the DuckDB twins replay these exact values.
+CMS_SEED, BLOOM_SEED, AMS_SEED = 7, 11, 1009
+
 
 def kmv_distinct(
     df: DataFrame,
@@ -130,7 +135,7 @@ def kmv_estimate_from_sketch(
     )
 
 
-def _cms_cols(key: Column, depth: int, seed: int) -> list[Column]:
+def _cms_cols(key: Column, depth: int) -> list[Column]:
     """The ``depth`` counter-column indices of a key: independent affine
     permutations of its 60-bit hash (MinHash's constants), folded to the
     grid width by the caller. a*h stays under 2^62 (both factors < 2^31
@@ -139,7 +144,7 @@ def _cms_cols(key: Column, depth: int, seed: int) -> list[Column]:
     h = hash60(key.cast("string")) % F.lit(_MERSENNE)
     return [
         (F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE)
-        for a, b in _affine_params(depth, seed)
+        for a, b in _affine_params(depth, CMS_SEED)
     ]
 
 
@@ -148,14 +153,13 @@ def cms_build(
     key_col: str,
     depth: int = 4,
     width: int = 1024,
-    seed: int = 7,
 ) -> DataFrame:
     """Build the count-min counter grid: (row, col, cnt) with exactly one
     increment per input row per sketch row. depth x width counters
     (<= depth*width output rows) regardless of input size — the whole
     sketch broadcasts. ONE explode (depth rows/input row, depth is 4)
     feeds ONE map-side-combinable count aggregation."""
-    cols = _cms_cols(F.col(key_col), depth, seed)
+    cols = _cms_cols(F.col(key_col), depth)
     return (
         df.select(
             F.explode(
@@ -180,13 +184,12 @@ def cms_estimate(
     key_col: str,
     depth: int = 4,
     width: int = 1024,
-    seed: int = 7,
 ) -> DataFrame:
     """Frequency estimate for each key in ``keys``: min over its
     ``depth`` counters. The sketch side is <= depth*width rows and is
     broadcast — estimating any number of keys is a map-side join, never
     a shuffle of the keyed data."""
-    cols = _cms_cols(F.col(key_col), depth, seed)
+    cols = _cms_cols(F.col(key_col), depth)
     probes = keys.select(
         key_col,
         F.explode(
@@ -332,7 +335,7 @@ def _bit_mask(p: Column) -> Column:
     )
 
 
-def _bloom_positions(key: Column, k: int, m_bits: int, seed: int) -> list[Column]:
+def _bloom_positions(key: Column, k: int, m_bits: int) -> list[Column]:
     """The ``k`` bit positions of a key: independent affine permutations
     of its 60-bit hash (same constants as count-min), folded to the
     filter width. Deterministic and engine-portable — a SQL oracle
@@ -340,7 +343,7 @@ def _bloom_positions(key: Column, k: int, m_bits: int, seed: int) -> list[Column
     h = hash60(key.cast("string")) % F.lit(_MERSENNE)
     return [
         ((F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE)) % F.lit(m_bits)
-        for a, b in _affine_params(k, seed)
+        for a, b in _affine_params(k, BLOOM_SEED)
     ]
 
 
@@ -349,7 +352,6 @@ def bloom_build(
     key_col: str,
     m_bits: int = 4096,
     k: int = 3,
-    seed: int = 11,
 ) -> DataFrame:
     """Build a Bloom filter over a key column as (word_idx, word) rows —
     the distributed runtime-filter build side. Each key sets ``k`` bits;
@@ -364,7 +366,7 @@ def bloom_build(
     side BEFORE its shuffle — rows that cannot join never cross the
     wire. 32-bit words keep ``1 << bit`` inside positive BIGINT range in
     every engine (no sign-bit portability trap at bit 63)."""
-    pos = _bloom_positions(F.col(key_col), k, m_bits, seed)
+    pos = _bloom_positions(F.col(key_col), k, m_bits)
     return (
         df.select(
             F.explode(
@@ -389,14 +391,13 @@ def bloom_probe(
     key_col: str,
     m_bits: int = 4096,
     k: int = 3,
-    seed: int = 11,
 ) -> DataFrame:
     """Test each row of ``keys`` against the filter: adds a boolean
     ``bloom_pass`` (true iff all k bits are set — no false negatives by
     construction). The word table broadcasts; probing is a map-side
     join + one all-bits-set agg per key, never a shuffle of the probe
     data."""
-    pos = _bloom_positions(F.col(key_col), k, m_bits, seed)
+    pos = _bloom_positions(F.col(key_col), k, m_bits)
     probes = keys.select(
         key_col,
         F.explode(
@@ -421,11 +422,12 @@ def bloom_probe(
 
 
 def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Counter-wise sum of two count-min grids (same depth/width/seed):
-    the merge property that lets per-shard / per-day / per-microbatch
-    sketches roll up without re-reading data. Unlike KMV's merge this
-    one is NOT idempotent (counters add), so streaming maintenance must
-    gate on the batch id (streaming/sketches.streaming_cms_sketch)."""
+    """Counter-wise sum of two count-min grids of the same depth/width
+    (every grid hashes under ``CMS_SEED``): the merge property that lets
+    per-shard / per-day / per-microbatch sketches roll up without
+    re-reading data. Unlike KMV's merge this one is NOT idempotent
+    (counters add), so streaming maintenance must gate on the batch id
+    (streaming/sketches.streaming_cms_sketch)."""
     return (
         a.unionByName(b)
         .groupBy("row", "col")
@@ -630,7 +632,6 @@ def ams_counters(
     group_cols: list[str],
     value_col: str,
     d: int = 9,
-    seed: int = 1009,
 ) -> DataFrame:
     """Per-group AMS F2 sketch state: ``d`` signed counters
     z_j = sum(sign_j(value)) plus the row count, as ONE wide row per
@@ -644,7 +645,7 @@ def ams_counters(
     counters. Merge is column-wise ADDITION (:func:`ams_merge`):
     sign sums over a union are the sums of the parts."""
     h = hash60(F.col(value_col).cast("string")) % F.lit(_MERSENNE)
-    params = _affine_params(d, seed)
+    params = _affine_params(d, AMS_SEED)
     signs = [
         (
             F.lit(1)
@@ -663,10 +664,11 @@ def ams_counters(
 
 
 def ams_merge(a: DataFrame, b: DataFrame, group_cols: list[str], d: int = 9) -> DataFrame:
-    """Column-wise sum of two AMS counter tables (same d/seed): the
-    sketch of the concatenated inputs (proven in tests). Addition is
-    NOT idempotent, so streaming maintenance gates on the batch id
-    exactly like count-min (streaming/sketches.streaming_ams_sketch)."""
+    """Column-wise sum of two AMS counter tables of the same ``d`` (every
+    table signs under ``AMS_SEED``): the sketch of the concatenated
+    inputs (proven in tests). Addition is NOT idempotent, so streaming
+    maintenance gates on the batch id exactly like count-min
+    (streaming/sketches.streaming_ams_sketch)."""
     return (
         a.unionByName(b)
         .groupBy(*group_cols)

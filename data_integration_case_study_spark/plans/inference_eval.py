@@ -1,6 +1,6 @@
 """Model/cluster/ranking evaluation, text divergence, and data-quality
-scoring (split from plans/inference_queries.py in round 5; same
-provenance and determinism discipline)."""
+scoring — one of the four inference plan modules (inference_stats,
+inference_ts, inference_eval, inference_rec)."""
 
 from __future__ import annotations
 

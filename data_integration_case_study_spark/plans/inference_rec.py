@@ -1,6 +1,6 @@
 """Recommender evaluation, market-basket mining, and fraud/velocity
-flags (split from plans/inference_queries.py in round 5; same
-provenance and determinism discipline)."""
+flags — one of the four inference plan modules (inference_stats,
+inference_ts, inference_eval, inference_rec)."""
 
 from __future__ import annotations
 

@@ -1,6 +1,6 @@
 """Hypothesis tests, distribution fits, and causal/survey statistics
-(split from plans/inference_queries.py in round 5; same provenance and
-determinism discipline — see that module's docstring)."""
+— one of the four inference plan modules (inference_stats,
+inference_ts, inference_eval, inference_rec)."""
 
 from __future__ import annotations
 

@@ -1,6 +1,6 @@
 """Time-series diagnostics and business-series decompositions over the
-daily order-revenue series (split from plans/inference_queries.py in
-round 5; same provenance and determinism discipline)."""
+daily order-revenue series — one of the four inference plan modules
+(inference_stats, inference_ts, inference_eval, inference_rec)."""
 
 from __future__ import annotations
 

@@ -25,6 +25,7 @@ from data_integration_case_study_spark.operators.dedup import (
     _MERSENNE,
     _affine_params,
 )
+from data_integration_case_study_spark.operators.sketches import BLOOM_SEED
 from data_integration_case_study_spark.sources.readers import read_parquet_table
 
 
@@ -771,7 +772,6 @@ CROSS JOIN n
 
 _BLOOM_M = 4096
 _BLOOM_K = 3
-_BLOOM_SEED = 11
 
 
 def bloom_filter_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -796,16 +796,9 @@ def bloom_filter_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_parquet_table(spark, sf_dir, "orders")
     c = read_parquet_table(spark, sf_dir, "customer")
     urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
-    bloom = bloom_build(
-        urgent, "o_custkey", m_bits=_BLOOM_M, k=_BLOOM_K, seed=_BLOOM_SEED
-    )
+    bloom = bloom_build(urgent, "o_custkey", m_bits=_BLOOM_M, k=_BLOOM_K)
     probed = bloom_probe(
-        bloom,
-        c.select("c_custkey"),
-        "c_custkey",
-        m_bits=_BLOOM_M,
-        k=_BLOOM_K,
-        seed=_BLOOM_SEED,
+        bloom, c.select("c_custkey"), "c_custkey", m_bits=_BLOOM_M, k=_BLOOM_K
     )
     members = urgent.distinct().withColumn("__member", F.lit(True))
     audit = probed.join(
@@ -838,7 +831,7 @@ def _bloom_pos_sql(key_expr: str) -> list[str]:
     h = f"({hash60_sql(key_expr)} % {_MERSENNE})"
     arms = [
         f"SELECT __k, (({a} * {h} + {b}) % {_MERSENNE}) % {_BLOOM_M} AS p"
-        for a, b in _affine_params(_BLOOM_K, _BLOOM_SEED)
+        for a, b in _affine_params(_BLOOM_K, BLOOM_SEED)
     ]
     return arms
 

@@ -28,6 +28,7 @@ from data_integration_case_study_spark.operators.dedup import (
     _MERSENNE,
     _affine_params,
 )
+from data_integration_case_study_spark.operators.sketches import AMS_SEED
 from data_integration_case_study_spark.sources.readers import read_parquet_table
 
 # ln(2) as the exact double literal both engines parse identically; used
@@ -834,7 +835,6 @@ FROM flat CROSS JOIN exact e
 # --- AMS F2 (self-join size) sketch -----------------------------------------
 
 _AMS_D = 9
-_AMS_SEED = 1009
 
 
 def ams_f2_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -863,7 +863,7 @@ def ams_f2_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").isNotNull()
     )
     sketch = ams_estimate(
-        ams_counters(e, ["event_type"], "user_id", _AMS_D, _AMS_SEED), _AMS_D
+        ams_counters(e, ["event_type"], "user_id", _AMS_D), _AMS_D
     )
     exact = (
         e.groupBy("event_type", "user_id")
@@ -879,7 +879,7 @@ def ams_f2_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ams_sql() -> str:
-    params = _affine_params(_AMS_D, _AMS_SEED)
+    params = _affine_params(_AMS_D, AMS_SEED)
     h = f"({hash60_sql('CAST(user_id AS VARCHAR)')} % {_MERSENNE})"
     zs = ", ".join(
         f"SUM(1 - 2 * ((({a} * {h} + {b}) % {_MERSENNE}) % 2)) AS z{j}"

@@ -360,11 +360,11 @@ def minhash_lsh_neardups(
 
 
 # DuckDB replay of minhash_candidate_pairs(n=3, num_hashes=32, bands=8,
-# threshold=0.5, seed=42): same affine constants, same 60-bit shingle hash.
+# threshold=0.5): same affine constants, same 60-bit shingle hash.
 _MH_P = 2147483647
 _MH_MINS = ",\n         ".join(
     f"min(({a} * h + {b}) % {_MH_P}) AS m{i}"
-    for i, (a, b) in enumerate(dedup._affine_params(32, 42))
+    for i, (a, b) in enumerate(dedup._affine_params(32, dedup.MINHASH_SEED))
 )
 _MH_BANDS = ", ".join(
     "concat_ws(',', " + ", ".join(f"m{b * 4 + r}" for r in range(4)) + ")"

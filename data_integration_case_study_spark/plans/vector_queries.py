@@ -245,7 +245,7 @@ def embedding_neardups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _NEARDUP_PLANES_SQL = vector.adaptive_n_planes_sql(
-    "SELECT vec_id FROM corpus", target_bucket=16
+    "SELECT vec_id FROM corpus", target_bucket=similarity.NEARDUP_BUCKET
 )
 
 EMBEDDING_NEARDUPS_LSH_SQL = f"""
@@ -1187,7 +1187,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KNN_PLANES_SQL = vector.adaptive_n_planes_sql(
-    "SELECT vec_id FROM embeddings", target_bucket=32
+    "SELECT vec_id FROM embeddings", target_bucket=similarity.KNN_BUCKET
 )
 
 KNN_GRAPH_SQL = f"""

@@ -20,6 +20,7 @@ from data_integration_case_study_spark.operators.dedup import (
     _MERSENNE,
     _affine_params,
 )
+from data_integration_case_study_spark.operators.sketches import AMS_SEED, CMS_SEED
 from data_integration_case_study_spark.sources.readers import read_parquet_table
 
 
@@ -196,7 +197,7 @@ FROM sk
 """
 
 
-_CMS_DEPTH, _CMS_WIDTH, _CMS_SEED = 4, 1024, 7
+_CMS_DEPTH, _CMS_WIDTH = 4, 1024
 
 
 def cms_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -213,11 +214,10 @@ def cms_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = read_parquet_table(spark, sf_dir, "events")
-    sketch = cms_build(e, "user_id", _CMS_DEPTH, _CMS_WIDTH, _CMS_SEED)
+    sketch = cms_build(e, "user_id", _CMS_DEPTH, _CMS_WIDTH)
     truth = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("true_count"))
     est = cms_estimate(
-        sketch, truth.select("user_id"), "user_id",
-        _CMS_DEPTH, _CMS_WIDTH, _CMS_SEED,
+        sketch, truth.select("user_id"), "user_id", _CMS_DEPTH, _CMS_WIDTH
     )
     return est.join(truth, "user_id").select("user_id", "est_count", "true_count")
 
@@ -226,7 +226,7 @@ def _cms_cols_sql() -> str:
     h = f"({hash60_sql('CAST(user_id AS VARCHAR)')} % {_MERSENNE})"
     cells = ", ".join(
         f"(({a} * {h} + {b}) % {_MERSENNE}) % {_CMS_WIDTH}"
-        for a, b in _affine_params(_CMS_DEPTH, _CMS_SEED)
+        for a, b in _affine_params(_CMS_DEPTH, CMS_SEED)
     )
     rows = ", ".join(str(i) for i in range(_CMS_DEPTH))
     return f"unnest([{rows}]) AS row, unnest([{cells}]) AS col"
@@ -1045,7 +1045,6 @@ FROM (
 
 
 _JSE_D = 9
-_JSE_SEED = 1009
 
 
 def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1089,8 +1088,8 @@ def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     outs = []
     for name, a, b in pairs:
-        sa = ams_counters(a, [], "k", _JSE_D, _JSE_SEED)
-        sb = ams_counters(b, [], "k", _JSE_D, _JSE_SEED)
+        sa = ams_counters(a, [], "k", _JSE_D)
+        sb = ams_counters(b, [], "k", _JSE_D)
         prods = F.array_sort(
             F.array(
                 *[
@@ -1142,7 +1141,7 @@ def _join_size_sql() -> str:
     )
     from data_integration_case_study_spark.functions.text import hash60_sql
 
-    params = _affine_params(_JSE_D, _JSE_SEED)
+    params = _affine_params(_JSE_D, AMS_SEED)
     h = f"({hash60_sql('CAST(k AS VARCHAR)')} % {_MERSENNE})"
 
     def zsum(j, a, b):

@@ -19,6 +19,10 @@ from pyspark.sql import functions as F
 from data_integration_case_study_spark.functions.numeric import dsum
 from data_integration_case_study_spark.sources.sinks import replace_dir
 
+# Event-time watermark both runners put on the ``ts`` column: how late an
+# event may arrive before windowed and session state for it is dropped.
+_GAP_WATERMARK = "1 day"
+
 
 def extract_props(events: DataFrame) -> DataFrame:
     """JSON extraction from the props column (get_json_object — no full
@@ -108,7 +112,6 @@ def run_streaming_foreach_batch(
     transform,
     sink_dir: str,
     checkpoint_dir: str,
-    gap_watermark: str = "1 day",
 ):
     """Production-shaped runner: transform each micro-batch and replace
     the parquet sink via foreachBatch (the standard pattern for sinks
@@ -116,7 +119,7 @@ def run_streaming_foreach_batch(
     crash-safe staging swap ``sources.sinks.replace_dir``. availableNow
     drains the source then stops."""
     stream = (
-        spark.readStream.schema(schema).parquet(source_dir).withWatermark("ts", gap_watermark)
+        spark.readStream.schema(schema).parquet(source_dir).withWatermark("ts", _GAP_WATERMARK)
     )
     out = transform(stream)
 
@@ -137,7 +140,6 @@ def run_streaming(
     source_dir: str,
     schema,
     transform,
-    gap_watermark: str = "1 day",
     query_name: str = "events_stream",
 ):
     """Execute a batch-defined transform as a Structured Streaming query.
@@ -152,7 +154,7 @@ def run_streaming(
     and watermark are unchanged — that is the point of batch-first design.
     """
     stream = (
-        spark.readStream.schema(schema).parquet(source_dir).withWatermark("ts", gap_watermark)
+        spark.readStream.schema(schema).parquet(source_dir).withWatermark("ts", _GAP_WATERMARK)
     )
     out = transform(stream)
     return (

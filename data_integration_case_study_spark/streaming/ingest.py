@@ -22,12 +22,16 @@ from pyspark.sql import functions as F
 from data_integration_case_study_spark.functions import text as T
 from data_integration_case_study_spark.streaming.events import streaming_dedup
 
+# Event-time horizon of corpus_ingest's fingerprint dedup: duplicates
+# farther apart re-emit, and dedup state is bounded by it.
+_DEDUP_HORIZON = "2 days"
 
-def corpus_ingest(docs: DataFrame, watermark: str = "2 days") -> DataFrame:
+
+def corpus_ingest(docs: DataFrame) -> DataFrame:
     """Gate + dedup a document feed; batch/stream agnostic.
 
     Stages: language identified (lang != 'und') → quality ≥ 0.6 →
-    exact dedup on the content fingerprint within the watermark horizon.
+    exact dedup on the content fingerprint within ``_DEDUP_HORIZON``.
     Emits the kept documents with their audit columns (lang_pred,
     quality, fp) — the row-level counterpart of the batch
     ``corpus_retention_funnel`` report.
@@ -36,7 +40,7 @@ def corpus_ingest(docs: DataFrame, watermark: str = "2 days") -> DataFrame:
     a deterministic stand-in is derived from doc_id (second-of-day);
     a real feed supplies its ingest/crawl time column instead — the
     dedup contract (state bounded by the horizon; duplicates farther
-    apart than the watermark re-emit) is the same either way.
+    apart than the horizon re-emit) is the same either way.
     """
     cleaned = (
         docs.select(
@@ -51,7 +55,7 @@ def corpus_ingest(docs: DataFrame, watermark: str = "2 days") -> DataFrame:
         )
         .filter((F.col("lang_pred") != "und") & (F.col("quality") >= F.lit(0.6)))
     )
-    return streaming_dedup(cleaned, ["fp"], "ts", watermark).select(
+    return streaming_dedup(cleaned, ["fp"], "ts", _DEDUP_HORIZON).select(
         "doc_id", "lang_pred", "quality", "fp"
     )
 

@@ -16,6 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Event-time watermark on both join sides: with ``max_gap`` it bounds how
+# long each side's join state is buffered before eviction.
+_WATERMARK = "1 day"
+
 
 def stream_stream_interval_join(
     left: DataFrame,
@@ -24,41 +28,19 @@ def stream_stream_interval_join(
     left_ts: str,
     right_ts: str,
     max_gap: str = "1 hour",
-    watermark: str = "1 day",
 ) -> DataFrame:
     """Inner-join two event streams on ``key`` where the right event lands
     within [left_ts, left_ts + max_gap].
 
-    State bound: each side buffers at most ``watermark`` + ``max_gap`` of
+    State bound: each side buffers at most ``_WATERMARK`` + ``max_gap`` of
     event time per key — the condition gives the engine both directions of
     the eviction proof. Scale: state is partitioned by the join key, so
     the operator distributes like any keyed shuffle."""
-    l = left.withWatermark(left_ts, watermark)
-    r = right.withWatermark(right_ts, watermark)
+    l = left.withWatermark(left_ts, _WATERMARK)
+    r = right.withWatermark(right_ts, _WATERMARK)
     cond = (
         (l[key] == r[key])
         & (r[right_ts] >= l[left_ts])
         & (r[right_ts] <= l[left_ts] + F.expr(f"INTERVAL {max_gap}"))
     )
     return l.join(r, cond)
-
-
-def stream_static_enrich(
-    stream: DataFrame,
-    dim: DataFrame,
-    key: str,
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static dimension enrichment: join a fact stream to a
-    (bounded) dimension DataFrame — the lookup shape of every streaming
-    pipeline (events x user profile, clicks x catalog). Stateless by
-    construction: the static side needs no watermark and holds no join
-    state; Spark re-evaluates the static side per micro-batch, so a
-    file-backed dimension picks up compacted refreshes between batches.
-
-    Scale: a small dimension broadcast-joins under every micro-batch
-    (AQE sizes it); a large one hash-joins per batch — either way no
-    streaming state accumulates, unlike stream-stream joins. Left join
-    keeps facts whose dimension row hasn't arrived yet (the late-dim
-    case); inner drops them."""
-    return stream.join(dim, key, how)

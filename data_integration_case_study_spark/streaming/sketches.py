@@ -100,7 +100,6 @@ def streaming_cms_sketch(
     checkpoint_dir: str,
     depth: int = 4,
     width: int = 1024,
-    seed: int = 7,
 ):
     """Maintain a count-min frequency grid at ``state_path`` from a
     streaming frame: sketch each microbatch and ADD it counter-wise into
@@ -114,7 +113,7 @@ def streaming_cms_sketch(
 
     return _maintain(
         stream, state_path, checkpoint_dir,
-        lambda df: cms_build(df, key_col, depth, width, seed),
+        lambda df: cms_build(df, key_col, depth, width),
         cms_merge,
     )
 
@@ -125,12 +124,11 @@ def streaming_hll_sketch(
     value_col: str,
     state_path: str,
     checkpoint_dir: str,
-    p: int = 8,
 ):
     """Maintain a HyperLogLog register table at ``state_path`` from a
     streaming frame — the third streaming sketch next to KMV and CMS:
     the merge is an element-wise MAX. State: <= 2^p rows per group
-    forever."""
+    forever, at ``hll_register_rows``' precision p = 8."""
     from data_integration_case_study_spark.operators.sketches import (
         hll_merge_registers,
         hll_register_rows,
@@ -138,7 +136,7 @@ def streaming_hll_sketch(
 
     return _maintain(
         stream, state_path, checkpoint_dir,
-        lambda df: hll_register_rows(df, group_cols, value_col, p),
+        lambda df: hll_register_rows(df, group_cols, value_col),
         lambda prev, new: hll_merge_registers(prev, new, group_cols),
     )
 
@@ -149,13 +147,11 @@ def streaming_ams_sketch(
     value_col: str,
     state_path: str,
     checkpoint_dir: str,
-    d: int = 9,
-    seed: int = 1009,
 ):
     """Maintain per-group AMS F2 counters at ``state_path`` from a
     streaming frame — the fourth streaming sketch: like count-min the
     merge is ADDITIVE (sign sums add across batches). State: one wide
-    row per group (d counters + n_rows) forever."""
+    row per group (``ams_counters``' d = 9 counters + n_rows) forever."""
     from data_integration_case_study_spark.operators.sketches import (
         ams_counters,
         ams_merge,
@@ -163,8 +159,8 @@ def streaming_ams_sketch(
 
     return _maintain(
         stream, state_path, checkpoint_dir,
-        lambda df: ams_counters(df, group_cols, value_col, d, seed),
-        lambda prev, new: ams_merge(prev, new, group_cols, d),
+        lambda df: ams_counters(df, group_cols, value_col),
+        lambda prev, new: ams_merge(prev, new, group_cols),
     )
 
 

@@ -41,61 +41,41 @@ STATE_SCHEMA = StructType(
 )
 
 
-def _make_update_user_totals(ttl_ms: int | None):
-    def update(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if ttl_ms is not None and state.hasTimedOut:
-            # idle key: emit the final snapshot and evict the state row
-            n, total = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {"user_id": [user_id], "n_events": [n], "total_value": [total]}
-            )
-            return
-        if state.exists:
-            n, total = state.get
-        else:
-            n, total = 0, 0.0
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(
-            {"user_id": [user_id], "n_events": [n], "total_value": [total]}
-        )
-
-    return update
+def _update_user_totals(
+    key, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    (user_id,) = key
+    if state.exists:
+        n, total = state.get
+    else:
+        n, total = 0, 0.0
+    for pdf in pdfs:
+        n += len(pdf)
+        total += float(pdf["value"].sum())
+    state.update((n, total))
+    yield pd.DataFrame(
+        {"user_id": [user_id], "n_events": [n], "total_value": [total]}
+    )
 
 
-def running_user_totals(stream: DataFrame, ttl_minutes: int | None = None) -> DataFrame:
+def running_user_totals(stream: DataFrame) -> DataFrame:
     """Arrow-batched stateful transform: one state row per user, updated
     per micro-batch. State is partitioned by the group key — at scale each
     executor owns a shard of users, no global coordination.
 
-    ``ttl_minutes`` bounds state for unbounded key spaces (anonymous/
-    one-shot users): keys idle past the TTL emit a final snapshot and are
-    evicted (processing-time timeout). Default keeps state forever — only
-    correct when the key space itself is bounded."""
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if ttl_minutes is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
+    State is kept forever (no timeout), which is correct only while the
+    key space itself is bounded; an unbounded key space (anonymous or
+    one-shot users) would need an eviction policy this operator does not
+    have."""
     return (
         stream.select("user_id", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
-            _make_update_user_totals(
-                None if ttl_minutes is None else ttl_minutes * 60_000
-            ),
+            _update_user_totals,
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="update",
-            timeoutConf=timeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 

@@ -115,14 +115,14 @@ def test_incremental_dedup_probes_bucketed_signature_table(spark, sf_dir, no_bro
     shutil.rmtree(f"{warehouse}/corpus_bands", ignore_errors=True)
 
     d = read_parquet_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus_bands = _band_buckets(_minhash_per_doc(d, "doc_id", "text", 3, 32, 42), 32, 8)
+    corpus_bands = _band_buckets(_minhash_per_doc(d, "doc_id", "text", 3, 32), 32, 8)
     # the maintenance write: pay the (band, bucket) shuffle once
     bucketing.write_bucketed(
         corpus_bands, "corpus_bands", ["band", "bucket"], 8, ["band", "bucket"]
     )
 
     probe = _band_buckets(
-        _minhash_per_doc(_incoming(spark, sf_dir), "doc_id", "text", 3, 32, 42), 32, 8
+        _minhash_per_doc(_incoming(spark, sf_dir), "doc_id", "text", 3, 32), 32, 8
     ).withColumnRenamed("id", "new_id")
     stored = bucketing.read_table(spark, "corpus_bands").withColumnRenamed(
         "id", "dup_of"
@@ -136,7 +136,7 @@ def test_incremental_dedup_probes_bucketed_signature_table(spark, sf_dir, no_bro
     # correctness: identical to joining the freshly-computed (unbucketed)
     # corpus band table
     fresh = probe.join(
-        _band_buckets(_minhash_per_doc(d, "doc_id", "text", 3, 32, 42), 32, 8)
+        _band_buckets(_minhash_per_doc(d, "doc_id", "text", 3, 32), 32, 8)
         .withColumnRenamed("id", "dup_of"),
         ["band", "bucket"],
     ).select("new_id", "dup_of").distinct()

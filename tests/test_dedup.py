@@ -56,3 +56,34 @@ def test_only_cache_module_materializes():
         and node.func.attr in ("persist", "checkpoint", "localCheckpoint")
     ]
     assert offenders == []
+
+
+def test_hash_seeds_are_module_constants():
+    """Each hash family's seed is part of its answer (the DuckDB twins
+    replay it, and a sketch merged or probed under another seed is
+    silently wrong), so no function under functions/, operators/,
+    streaming/ or multimodal/ takes a ``seed`` parameter. The one
+    exception is ``dedup._affine_params``, which the families share,
+    each passing its own seed constant."""
+    import ast
+    from pathlib import Path
+
+    import data_integration_case_study_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    files = sorted(
+        f for sub in ("functions", "operators", "streaming", "multimodal")
+        for f in (root / sub).rglob("*.py")
+    )
+    assert len(files) > 20
+    offenders = [
+        f"{f.relative_to(root)}:{node.name}"
+        for f in files
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and "seed" in [
+            a.arg for a in (*node.args.posonlyargs, *node.args.args,
+                            *node.args.kwonlyargs)
+        ]
+    ]
+    assert offenders == ["operators/dedup.py:_affine_params"]

@@ -11,7 +11,12 @@ from collections import defaultdict
 
 import pytest
 
-from data_integration_case_study_spark.plans import inference_queries as iq
+from data_integration_case_study_spark.plans import (
+    inference_eval,
+    inference_rec,
+    inference_stats,
+    inference_ts,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,7 +51,7 @@ def test_lof_outliers_replay(spark):
         for s, nbrs in out_edges.items()
     }
 
-    rows = {r["vec_id"]: r for r in iq.lof_outliers(spark, SF).collect()}
+    rows = {r["vec_id"]: r for r in inference_eval.lof_outliers(spark, SF).collect()}
     n_ids = e.count()
     assert len(rows) == n_ids
     for s in out_edges:
@@ -118,7 +123,7 @@ def test_log_rank_conversion_replay(spark):
         n_at -= l
         n1_at -= l1
 
-    row = iq.log_rank_conversion(spark, SF).collect()[0]
+    row = inference_stats.log_rank_conversion(spark, SF).collect()[0]
     assert row["n_users_0"] == n_tot - n1_tot
     assert row["n_users_1"] == n1_tot
     assert row["n_event_hours"] == n_event_hours
@@ -157,7 +162,7 @@ def test_ar1_forecast_backtest_replay(spark):
     rmse = math.sqrt(sum(e * e for e in errs) / len(errs))
     mae_naive = sum(abs(a - b) for a, b in pairs) / (len(pairs) * n)
 
-    row = iq.ar1_forecast_backtest(spark, SF).collect()[0]
+    row = inference_ts.ar1_forecast_backtest(spark, SF).collect()[0]
     assert row["n_days"] == n
     assert row["n_pairs"] == len(pairs)
     assert row["phi"] == pytest.approx(phi, abs=2e-6)
@@ -182,7 +187,7 @@ def test_overdispersion_events_replay(spark):
     for r in ev:
         counts[(r["ts"].date(), r["event_type"])] += 1
     rows = {r["event_type"]: r for r in
-            iq.overdispersion_events(spark, SF).collect()}
+            inference_stats.overdispersion_events(spark, SF).collect()}
     assert set(rows) == set(types)
     for t in types:
         cs = [counts.get((d, t), 0) for d in days]
@@ -215,7 +220,7 @@ def test_g_test_independence_replay(spark):
         2.0 * c * math.log(c * n / (row_t[p] * col_t[s]))
         for (p, s), c in sorted(cells.items())
     )
-    out = iq.g_test_independence(spark, SF).collect()
+    out = inference_stats.g_test_independence(spark, SF).collect()
     assert len(out) == len(cells)
     for r in out:
         key = (r["o_orderpriority"], r["o_orderstatus"])
@@ -239,7 +244,7 @@ def test_schema_matching_replay_and_fk_containment(spark):
     """Exact python set replay; FK candidates show containment 1.0 and
     the deliberate non-matches score ~0."""
     doms = {}
-    for tbl, col in iq._SM_COLUMNS:
+    for tbl, col in inference_eval._SM_COLUMNS:
         vals = {
             str(r[col])
             for r in spark.read.parquet(f"{SF}/{tbl}.parquet")
@@ -249,8 +254,8 @@ def test_schema_matching_replay_and_fk_containment(spark):
         }
         doms[f"{tbl}.{col}"] = vals
     out = {(r["col_a"], r["col_b"]): r
-           for r in iq.schema_matching_scores(spark, SF).collect()}
-    assert set(out) == set(iq._SM_CANDIDATES)
+           for r in inference_eval.schema_matching_scores(spark, SF).collect()}
+    assert set(out) == set(inference_eval._SM_CANDIDATES)
     for (a, b), r in out.items():
         A, B = doms[a], doms[b]
         inter = len(A & B)
@@ -279,9 +284,9 @@ def test_schema_matching_replay_and_fk_containment(spark):
 def test_approx_fd_strength_replay(spark):
     """Python g3 replay; exact keys hold with zero violations."""
     out = {(r["tbl"], r["lhs"], r["rhs"]): r
-           for r in iq.approx_fd_strength(spark, SF).collect()}
-    assert set(out) == {(t, l, r) for t, l, r in iq._AFD_CANDIDATES}
-    for tbl, lhs, rhs in iq._AFD_CANDIDATES:
+           for r in inference_eval.approx_fd_strength(spark, SF).collect()}
+    assert set(out) == {(t, l, r) for t, l, r in inference_eval._AFD_CANDIDATES}
+    for tbl, lhs, rhs in inference_eval._AFD_CANDIDATES:
         rows = spark.read.parquet(f"{SF}/{tbl}.parquet").select(lhs, rhs).collect()
         groups = defaultdict(lambda: defaultdict(int))
         for r in rows:
@@ -363,7 +368,7 @@ def test_rec_hitrate_eval_replay(spark):
             if recos & test_items[u]:
                 hit_users.add(u)
 
-    row = iq.rec_hitrate_eval(spark, SF).collect()[0]
+    row = inference_rec.rec_hitrate_eval(spark, SF).collect()[0]
     assert row["n_users_eval"] == len(eval_users)
     assert row["n_users_with_reco"] == len(reco_users)
     assert row["n_hits"] == len(hit_users)
@@ -396,7 +401,10 @@ def test_modularity_knn_labels_replay(spark):
         deg[lb] += 1
         nodes[la].add(a)
         nodes[lb].add(b)
-    rows = {r["label"]: r for r in iq.modularity_knn_labels(spark, SF).collect()}
+    rows = {
+        r["label"]: r
+        for r in inference_eval.modularity_knn_labels(spark, SF).collect()
+    }
     assert set(rows) == set(deg)
     q = 0.0
     for label in deg:
@@ -430,7 +438,7 @@ def test_evt_gumbel_daily_replay(spark):
     beta = sd * math.sqrt(6) / math.pi
     mu = mean - 0.5772156649015329 * beta
     y30 = -math.log(-math.log(29 / 30))
-    row = iq.evt_gumbel_daily(spark, SF).collect()[0]
+    row = inference_stats.evt_gumbel_daily(spark, SF).collect()[0]
     assert row["n_days"] == n
     assert row["mean_daily_max"] == pytest.approx(mean / 100, abs=1e-2)
     assert row["sd_daily_max"] == pytest.approx(sd / 100, abs=1e-2)
@@ -467,7 +475,7 @@ def test_dickey_fuller_daily_replay(spark):
     s2 = sum(e * e for e in errs) / (len(pairs) - 1)
     se = math.sqrt(s2 * n * n / sxx)
     t = rho / se
-    row = iq.dickey_fuller_daily(spark, SF).collect()[0]
+    row = inference_ts.dickey_fuller_daily(spark, SF).collect()[0]
     assert row["n_pairs"] == len(pairs)
     assert row["rho"] == pytest.approx(rho, abs=2e-6)
     assert row["t_stat"] == pytest.approx(t, abs=2e-3)
@@ -488,7 +496,7 @@ def test_burstiness_interevent_replay(spark):
     for r in ev:
         streams[r["event_type"]].append(r["ts"])
     rows = {r["event_type"]: r
-            for r in iq.burstiness_interevent(spark, SF).collect()}
+            for r in inference_stats.burstiness_interevent(spark, SF).collect()}
     for t, tss in streams.items():
         # engines floor each timestamp to the second, then diff
         tss0 = [ts.replace(microsecond=0) for ts in tss]
@@ -530,7 +538,7 @@ def test_duplicate_payment_flags_replay(spark):
     got = {
         (r["o_custkey"], r["orderkey_a"], r["orderkey_b"], r["cents"],
          r["day_gap"])
-        for r in iq.duplicate_payment_flags(spark, SF).collect()
+        for r in inference_rec.duplicate_payment_flags(spark, SF).collect()
     }
     assert got == expected
 
@@ -548,7 +556,10 @@ def test_abc_analysis_parts_replay(spark):
         )
     ranked = sorted(rev.items(), key=lambda kv: (-kv[1], kv[0]))
     tot = sum(rev.values())
-    rows = {r["l_partkey"]: r for r in iq.abc_analysis_parts(spark, SF).collect()}
+    rows = {
+        r["l_partkey"]: r
+        for r in inference_rec.abc_analysis_parts(spark, SF).collect()
+    }
     assert len(rows) == len(rev)
     cum = 0
     classes = defaultdict(int)
@@ -572,7 +583,9 @@ def test_abc_analysis_parts_replay(spark):
 def test_woe_iv_quality_replay(spark):
     """Replay from the query's own bin table (the binning itself is
     oracle-proven); checks the smoothed-WoE and IV algebra."""
-    rows = sorted(iq.woe_iv_quality(spark, SF).collect(), key=lambda r: r["bin"])
+    rows = sorted(
+        inference_eval.woe_iv_quality(spark, SF).collect(), key=lambda r: r["bin"]
+    )
     B = len(rows)
     P = sum(r["n_pos"] for r in rows)
     N = sum(r["n_neg"] for r in rows)
@@ -596,7 +609,7 @@ def test_decision_stump_quality_replay(spark):
     """Entropy-gain replay from the stump's own split counts; exactly
     one best row, and its gain is the maximum."""
     rows = sorted(
-        iq.decision_stump_quality(spark, SF).collect(),
+        inference_eval.decision_stump_quality(spark, SF).collect(),
         key=lambda r: r["split_after_bin"],
     )
     n = rows[0]["n_left"] + rows[0]["n_right"]
@@ -651,7 +664,7 @@ def test_silhouette_labels_replay(spark):
         s = (b - a) / max(a, b) if max(a, b) > 0 else 0.0
         sums[r["label"]] += s
         counts[r["label"]] += 1
-    rows = {r["label"]: r for r in iq.silhouette_labels(spark, SF).collect()}
+    rows = {r["label"]: r for r in inference_eval.silhouette_labels(spark, SF).collect()}
     assert set(rows) == set(by_label)
     for lab in by_label:
         assert rows[lab]["n_vecs"] == counts[lab]
@@ -669,7 +682,7 @@ def test_silhouette_labels_replay(spark):
 def test_adjusted_rand_kmeans_labels_replay(spark):
     """ARI pair-counting algebra replay from the query's own contingency
     counts (the assignment itself is oracle-proven), plus bounds."""
-    row = iq.adjusted_rand_kmeans_labels(spark, SF).collect()[0]
+    row = inference_eval.adjusted_rand_kmeans_labels(spark, SF).collect()[0]
     n = row["n"]
     T = n * (n - 1) // 2
     A, B, I = row["sum_comb_cells"], row["sum_comb_labels"], row["sum_comb_cont"]
@@ -715,7 +728,7 @@ def test_average_precision_quality_replay(spark):
             cum += 1
             ap_sum += cum / k
     P = cum
-    row = iq.average_precision_quality(spark, SF).collect()[0]
+    row = inference_eval.average_precision_quality(spark, SF).collect()[0]
     assert row["n_docs"] == len(ranked)
     assert row["n_pos"] == P
     assert row["average_precision"] == pytest.approx(ap_sum / P, abs=1e-5)
@@ -738,7 +751,7 @@ def test_lorenz_curve_deciles_replay(spark):
     gini = 2 * sum(i * rc for i, (_, rc) in enumerate(ranked, 1)) / (n * tot) - (
         n + 1
     ) / n
-    rows = sorted(iq.lorenz_curve_deciles(spark, SF).collect(),
+    rows = sorted(inference_stats.lorenz_curve_deciles(spark, SF).collect(),
                   key=lambda r: r["decile"])
     assert len(rows) == 10
     assert sum(r["n_customers"] for r in rows) == n
@@ -781,7 +794,7 @@ def test_cochran_armitage_trend_replay(spark):
     B = R * (N - R) * (N * sn2 - sn * sn)
     z = A / math.sqrt(B * N)
     rows = {r["score"]: r for r in
-            iq.cochran_armitage_trend(spark, SF).collect()}
+            inference_stats.cochran_armitage_trend(spark, SF).collect()}
     assert set(rows) == set(g)
     for s, (n, r_) in g.items():
         assert rows[s]["n"] == n and rows[s]["r"] == r_
@@ -807,7 +820,7 @@ def test_mcnemar_halves_replay(spark):
     b = sum(1 for u in users if x1[u] and not x2[u])
     c = sum(1 for u in users if not x1[u] and x2[u])
     both = sum(1 for u in users if x1[u] and x2[u])
-    row = iq.mcnemar_halves(spark, SF).collect()[0]
+    row = inference_stats.mcnemar_halves(spark, SF).collect()[0]
     assert row["n_users"] == len(users)
     assert row["n_both"] == both
     assert row["b"] == b and row["c"] == c
@@ -839,7 +852,7 @@ def test_ljung_box_daily_replay(spark):
         )
         q += (num / den) ** 2 / (n - lag)
     q *= n * (n + 2)
-    row = iq.ljung_box_daily(spark, SF).collect()[0]
+    row = inference_ts.ljung_box_daily(spark, SF).collect()[0]
     assert row["n_days"] == n
     assert row["dof"] == 10
     assert row["q_stat"] == pytest.approx(q, abs=2e-3)
@@ -874,7 +887,7 @@ def test_uplift_by_segment_replay(spark):
             cell[2] += 1
             cell[3] += conv[u]
     rows = {r["c_mktsegment"]: r for r in
-            iq.uplift_by_segment(spark, SF).collect()}
+            inference_stats.uplift_by_segment(spark, SF).collect()}
     assert set(rows) == {s for s, c in cells.items() if c[0] or c[2]}
     for sgm, (nt, ct, nc, cc) in cells.items():
         r = rows[sgm]
@@ -908,7 +921,7 @@ def test_periodogram_daily_replay(spark):
     n = len(days)
     s = sum(daily.values())
     u = [(n * daily[d] - s) / n for d in days]
-    rows = {r["period"]: r for r in iq.periodogram_daily(spark, SF).collect()}
+    rows = {r["period"]: r for r in inference_ts.periodogram_daily(spark, SF).collect()}
     assert set(rows) == set(range(2, 15))
     powers = {}
     for p in range(2, 15):
@@ -934,7 +947,7 @@ def test_hurst_rs_daily_replay(spark):
     for r in o:
         daily[r["o_orderdate"].date()] += int(round(r["o_totalprice"] * 100))
     xs = [daily[d] for d in sorted(daily)]
-    rows = {r["m"]: r for r in iq.hurst_rs_daily(spark, SF).collect()}
+    rows = {r["m"]: r for r in inference_ts.hurst_rs_daily(spark, SF).collect()}
     assert set(rows) == {8, 16, 32}
     pts = []
     for m in (8, 16, 32):
@@ -982,7 +995,10 @@ def test_jsd_sources_replay(spark):
     def H(dist):
         return -sum(p * math.log(p) for p in sorted(dist.values()))
 
-    rows = {(r["sa"], r["sb"]): r for r in iq.jsd_sources(spark, SF).collect()}
+    rows = {
+        (r["sa"], r["sb"]): r
+        for r in inference_eval.jsd_sources(spark, SF).collect()
+    }
     srcs = sorted(counts)
     expected_pairs = {
         (a, b) for i, a in enumerate(srcs) for b in srcs[i + 1:]
@@ -1023,7 +1039,7 @@ def test_price_elasticity_parts_replay(spark):
     syy = sum(b * b for b in ys)
     slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
     r2 = (n * sxy - sx * sy) ** 2 / ((n * sxx - sx * sx) * (n * syy - sy * sy))
-    row = iq.price_elasticity_parts(spark, SF).collect()[0]
+    row = inference_ts.price_elasticity_parts(spark, SF).collect()[0]
     assert row["n_parts"] == n
     assert row["elasticity"] == pytest.approx(slope, abs=1e-4)
     assert row["intercept"] == pytest.approx((sy - slope * sx) / n, abs=1e-3)
@@ -1037,7 +1053,7 @@ def test_price_elasticity_parts_replay(spark):
 def test_quantile_normalize_sources_replay(spark):
     """Replay from the query's own bin means (binning is oracle-proven);
     the reference is the cross-source mean per bin and shifts cancel."""
-    rows = iq.quantile_normalize_sources(spark, SF).collect()
+    rows = inference_eval.quantile_normalize_sources(spark, SF).collect()
     by_bin = defaultdict(list)
     for r in rows:
         by_bin[r["bin"]].append(r)
@@ -1087,7 +1103,7 @@ def test_log_odds_tokens_replay(spark):
         z = d / math.sqrt(1 / (ya[t] + a) + 1 / (yb[t] + a))
         scored[t] = (d, z)
     top = sorted(scored, key=lambda t: (-abs(scored[t][1]), t))[:20]
-    rows = iq.log_odds_tokens(spark, SF).collect()
+    rows = inference_eval.log_odds_tokens(spark, SF).collect()
     assert [r["token"] for r in sorted(rows, key=lambda r: r["rank"])] == top
     for r in rows:
         d, z = scored[r["token"]]
@@ -1136,7 +1152,7 @@ def test_granger_signups_revenue_replay(spark):
     sse_u = syy - b * b1 - c * b2
     sse_r = syy - b1 * b1 / a11
     f = (sse_r - sse_u) * (np_ - 3) / sse_u
-    row = iq.granger_signups_revenue(spark, SF).collect()[0]
+    row = inference_ts.granger_signups_revenue(spark, SF).collect()[0]
     assert row["n_pairs"] == np_
     assert row["beta_rev_lag"] == pytest.approx(b, abs=1e-4)
     assert row["beta_sig_lag"] == pytest.approx(c, abs=1e-2)
@@ -1163,7 +1179,7 @@ def test_order_velocity_flags_replay(spark):
                 expected[(cust, ok)] = cnt
     got = {
         (r["o_custkey"], r["o_orderkey"]): r["orders_7d"]
-        for r in iq.order_velocity_flags(spark, SF).collect()
+        for r in inference_rec.order_velocity_flags(spark, SF).collect()
     }
     assert got == expected
 
@@ -1181,7 +1197,7 @@ def test_good_turing_mass_replay(spark):
     V = len(counts)
     n1 = sum(1 for c in counts.values() if c == 1)
     n2 = sum(1 for c in counts.values() if c == 2)
-    row = iq.good_turing_mass(spark, SF).collect()[0]
+    row = inference_eval.good_turing_mass(spark, SF).collect()[0]
     assert row["n_tokens"] == N and row["vocab"] == V
     assert row["n1"] == n1 and row["n2"] == n2
     assert row["missing_mass"] == pytest.approx(n1 / N, abs=1e-6)
@@ -1218,7 +1234,7 @@ def test_cohort_ltv_matrix_replay(spark):
                     math.floor(r["value"] * 100 + 0.5)
                 )
     rows = {(r["cohort_week"], r["age_week"]): r
-            for r in iq.cohort_ltv_matrix(spark, SF).collect()}
+            for r in inference_ts.cohort_ltv_matrix(spark, SF).collect()}
     assert set(rows) == set(rev)
     cums = defaultdict(int)
     for (cw, aw) in sorted(rev):
@@ -1264,7 +1280,7 @@ def test_markov_entropy_rate_replay(spark):
             for b in sorted({b for (x, b) in trans if x == a})
         )
     rate = sum((row_n[a] / tot) * hs[a] for a in sorted(row_n))
-    rows = {r["state"]: r for r in iq.markov_entropy_rate(spark, SF).collect()}
+    rows = {r["state"]: r for r in inference_ts.markov_entropy_rate(spark, SF).collect()}
     assert set(rows) == set(row_n)
     for a in row_n:
         r = rows[a]
@@ -1309,7 +1325,7 @@ def test_weibull_fit_conversion_replay(spark):
     syy = sum(b * b for b in ys)
     shape = (n * sxy - sx * sy) / (n * sxx - sx * sx)
     intercept = (sy - shape * sx) / n
-    row = iq.weibull_fit_conversion(spark, SF).collect()[0]
+    row = inference_stats.weibull_fit_conversion(spark, SF).collect()[0]
     assert row["n_converters"] == n
     assert row["weibull_shape"] == pytest.approx(shape, abs=1e-4)
     assert row["weibull_scale_h"] == pytest.approx(
@@ -1348,7 +1364,7 @@ def test_neardup_method_agreement_replay(spark):
         },
     }
     rows = {(r["method_a"], r["method_b"]): r
-            for r in iq.neardup_method_agreement(spark, SF).collect()}
+            for r in inference_eval.neardup_method_agreement(spark, SF).collect()}
     methods = ["minhash", "ngram", "simhash"]
     assert set(rows) == {
         (a, b) for i, a in enumerate(methods) for b in methods[i + 1:]
@@ -1402,7 +1418,7 @@ def test_bass_diffusion_fit_replay(spark):
     b = (b1 * a22 - b2 * a12) / det
     c = (b2 * a11 - b1 * a12) / det
     a = (sa - b * s1 - c * s2) / np_
-    row = iq.bass_diffusion_fit(spark, SF).collect()[0]
+    row = inference_ts.bass_diffusion_fit(spark, SF).collect()[0]
     assert row["n_days"] == np_
     assert row["coef_a"] == pytest.approx(a, abs=1e-3)
     assert row["coef_b"] == pytest.approx(b, abs=1e-4)
@@ -1440,7 +1456,7 @@ def test_control_chart_daily_replay(spark):
         r4 = i >= 7 and abs(sum(sides[i - 7: i + 1])) == 8
         if r1 or r4:
             expected[d] = (z, r1, r4)
-    rows = {r["d"]: r for r in iq.control_chart_daily(spark, SF).collect()}
+    rows = {r["d"]: r for r in inference_ts.control_chart_daily(spark, SF).collect()}
     assert set(rows) == set(expected)
     for d, (z, r1, r4) in expected.items():
         assert rows[d]["zscore"] == pytest.approx(z, abs=1e-3)
@@ -1478,7 +1494,7 @@ def test_burrows_delta_sources_replay(spark):
             vals = [abs(z[(a, t)] - z[(b, t)]) for t in toks if (a, t) in z]
             deltas[(a, b)] = sum(vals) / len(vals)
     rows = {(r["sa"], r["sb"]): r
-            for r in iq.burrows_delta_sources(spark, SF).collect()}
+            for r in inference_eval.burrows_delta_sources(spark, SF).collect()}
     assert set(rows) == set(deltas)
     for k, r in rows.items():
         assert r["delta"] == pytest.approx(deltas[k], abs=1e-4)
@@ -1493,7 +1509,7 @@ def test_dau_wau_mau_replay(spark):
     ud = {(r["user_id"], r["ts"].date()) for r in ev}
     days = sorted({d for _, d in ud})
     mau = len({u for u, _ in ud})
-    rows = {r["d"]: r for r in iq.dau_wau_mau(spark, SF).collect()}
+    rows = {r["d"]: r for r in inference_ts.dau_wau_mau(spark, SF).collect()}
     assert set(rows) == set(days)
     for d in days:
         dau = len({u for u, dd in ud if dd == d})
@@ -1524,7 +1540,7 @@ def test_frequent_triples_replay(spark):
     N = len(baskets)
     expected = {t: c for t, c in tri.items() if c >= 2}
     rows = {(r["pa"], r["pb"], r["pc"]): r
-            for r in iq.frequent_triples(spark, SF).collect()}
+            for r in inference_rec.frequent_triples(spark, SF).collect()}
     assert set(rows) == set(expected)
     for t, c in expected.items():
         r = rows[t]
@@ -1567,7 +1583,7 @@ def test_price_volume_mix_replay(spark):
             new_c += rev2
         else:
             exit_c += rev1
-    row = iq.price_volume_mix(spark, SF).collect()[0]
+    row = inference_ts.price_volume_mix(spark, SF).collect()[0]
     assert row["n_parts"] == len(agg)
     assert row["n_parts_both"] == both
     assert row["total_delta"] == pytest.approx(delta / 100, abs=0.02)
@@ -1614,7 +1630,7 @@ def test_rocchio_expansion_replay(spark):
         t: c * round(math.log(n / dfreq[t]), 6) for t, c in rel_tf.items()
     }
     top = sorted(scored, key=lambda t: (-round(scored[t], 6), t))[:10]
-    rows = sorted(iq.rocchio_expansion(spark, SF).collect(),
+    rows = sorted(inference_rec.rocchio_expansion(spark, SF).collect(),
                   key=lambda r: r["rank"])
     assert [r["token"] for r in rows] == top
     for r in rows:
@@ -1637,7 +1653,7 @@ def test_hill_tail_index_replay(spark):
     xk1 = vals[k][0]
     lsum = sum(math.log(c / xk1) for c, _ in vals[:k])
     alpha = k / lsum
-    row = iq.hill_tail_index(spark, SF).collect()[0]
+    row = inference_stats.hill_tail_index(spark, SF).collect()[0]
     assert row["k"] == k
     assert row["threshold_value"] == pytest.approx(xk1 / 100, abs=0.02)
     assert row["hill_alpha"] == pytest.approx(alpha, abs=1e-3)
@@ -1674,7 +1690,7 @@ def test_bounce_rate_daily_replay(spark):
         a = agg[start.date()]
         a[0] += 1
         a[1] += int(c == 1)
-    rows = {r["d"]: r for r in iq.bounce_rate_daily(spark, SF).collect()}
+    rows = {r["d"]: r for r in inference_ts.bounce_rate_daily(spark, SF).collect()}
     assert set(rows) == set(agg)
     for d, (ns, nb) in agg.items():
         assert rows[d]["n_sessions"] == ns
@@ -1699,7 +1715,7 @@ def test_empirical_bayes_returns_replay(spark):
     ab = m * (1 - m) / v - 1
     alpha, beta = m * ab, (1 - m) * ab
     rows = {r["l_partkey"]: r
-            for r in iq.empirical_bayes_returns(spark, SF).collect()}
+            for r in inference_stats.empirical_bayes_returns(spark, SF).collect()}
     assert set(rows) == set(per)
     raws, shrunks = [], []
     for pk, (n, x) in per.items():
@@ -1726,7 +1742,7 @@ def test_geometric_median_embeddings_replay(spark):
     for r in e:
         by_label[r["label"]].append([float(x) for x in r["embedding"]])
     rows = {(r["label"], r["pos"]): r
-            for r in iq.geometric_median_embeddings(spark, SF).collect()}
+            for r in inference_eval.geometric_median_embeddings(spark, SF).collect()}
     for lab, vs in by_label.items():
         dim = len(vs[0])
         m = [sum(col) / len(vs) for col in zip(*vs)]
@@ -1781,7 +1797,7 @@ def test_stratified_ate_replay(spark):
             c[2] += post
         else:
             c[3] += post
-    rows = {r["stratum"]: r for r in iq.stratified_ate(spark, SF).collect()}
+    rows = {r["stratum"]: r for r in inference_stats.stratified_ate(spark, SF).collect()}
     assert set(rows) == set(cells)
     n_valid = sum(nu for nu, nt, _, _ in cells.values() if 0 < nt < nu)
     ate = 0.0
@@ -1821,7 +1837,7 @@ def test_rec_catalog_coverage_replay(spark):
     gini = 2 * sum(i * c for i, (_, c) in enumerate(ranked, 1)) / (k * tot) - (
         k + 1
     ) / k
-    row = iq.rec_catalog_coverage(spark, SF).collect()[0]
+    row = inference_rec.rec_catalog_coverage(spark, SF).collect()[0]
     assert row["n_catalog"] == len(catalog)
     assert row["n_recommended"] == k
     assert row["n_slots"] == tot
@@ -1846,7 +1862,7 @@ def test_quota_apportionment_replay(spark):
     order = sorted(counts, key=lambda s: (-rem[s], s))
     extra = {s: int(i < leftover) for i, s in enumerate(order)}
     rows = {r["source"]: r
-            for r in iq.quota_apportionment_sources(spark, SF).collect()}
+            for r in inference_stats.quota_apportionment_sources(spark, SF).collect()}
     assert set(rows) == set(counts)
     for s in counts:
         r = rows[s]
@@ -1863,7 +1879,7 @@ def test_quota_apportionment_replay(spark):
 
 def test_wilson_ci_segments_replay(spark):
     z = 1.959963984540054
-    rows = iq.wilson_ci_segments(spark, SF).collect()
+    rows = inference_stats.wilson_ci_segments(spark, SF).collect()
     assert rows
     for r in rows:
         n, conv = r["n"], r["conv"]
@@ -1899,7 +1915,7 @@ def test_icc_design_effect_replay(spark):
     n0 = (N - sn2 / N) / (k - 1)
     icc = (msb - msw) / (msb + (n0 - 1) * msw)
     mbar = N / k
-    row = iq.icc_design_effect(spark, SF).collect()[0]
+    row = inference_stats.icc_design_effect(spark, SF).collect()[0]
     assert row["k"] == k and row["n_total"] == N
     assert row["mean_cluster_size"] == pytest.approx(mbar, abs=1e-3)
     assert row["icc"] == pytest.approx(icc, abs=1e-4)
