@@ -18,18 +18,14 @@ FR_FORMAT = "dd/MM/yyyy"  # reference %d/%m/%Y
 ISO_FORMAT = "yyyy-MM-dd"  # reference %Y-%m-%d
 
 
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
 def parse_date_fr(c: Column | str) -> Column:
     """T1: parse ``dd/MM/yyyy`` strings (reference insert.py:110-113)."""
-    return F.try_to_date(_col(c), FR_FORMAT)
+    return F.try_to_date(c, FR_FORMAT)
 
 
 def parse_date_iso(c: Column | str) -> Column:
     """T2: parse ``yyyy-MM-dd`` strings (reference insert.py:114-115)."""
-    return F.try_to_date(_col(c), ISO_FORMAT)
+    return F.try_to_date(c, ISO_FORMAT)
 
 
 def reformat_fr_to_iso(c: Column | str) -> Column:
@@ -39,4 +35,4 @@ def reformat_fr_to_iso(c: Column | str) -> Column:
 
 def format_fr(c: Column | str) -> Column:
     """date/timestamp → ``dd/MM/yyyy`` string (inverse of T1, for round-trips)."""
-    return F.date_format(_col(c), FR_FORMAT)
+    return F.date_format(c, FR_FORMAT)

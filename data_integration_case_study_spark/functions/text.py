@@ -12,14 +12,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
 def tokenize(c: Column | str) -> Column:
     """Whitespace tokenization with empty tokens dropped (robust to
     leading/trailing/multiple spaces)."""
-    return F.filter(F.split(F.trim(_col(c)), r"\s+"), lambda t: t != "")
+    return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
 
 
 def token_count(c: Column | str) -> Column:
@@ -74,14 +70,13 @@ def quality_score(c: Column | str) -> Column:
     ratio + low digit ratio + stopword presence. The exact formula is a
     placeholder policy; what matters is the shape — all ratio features in
     one projection, ANSI-safe division via nullif."""
-    text = _col(c)
-    tokens = tokenize(text)
-    n_chars = F.length(text)
+    tokens = tokenize(c)
+    n_chars = F.length(c)
     safe_chars = F.nullif(n_chars.cast("double"), F.lit(0.0))
     punct_ratio = (
-        n_chars - F.length(F.regexp_replace(text, r"\p{Punct}", ""))
+        n_chars - F.length(F.regexp_replace(c, r"\p{Punct}", ""))
     ) / safe_chars
-    digit_ratio = (n_chars - F.length(F.regexp_replace(text, r"[0-9]", ""))) / safe_chars
+    digit_ratio = (n_chars - F.length(F.regexp_replace(c, r"[0-9]", ""))) / safe_chars
     n_tokens = F.size(tokens)
     all_stop = [w for ws in STOPWORDS.values() for w in ws]
     stop_ratio = _stopword_hits(tokens, all_stop) / F.nullif(
@@ -106,7 +101,7 @@ def hash60(c: Column | str) -> Column:
     cross-engine reproducibility is not needed; sha256 here is still a
     codegen'd JVM expression and the dedup pipelines are shuffle-bound,
     not hash-bound."""
-    return F.conv(F.substring(F.sha2(_col(c), 256), 1, 15), 16, 10).cast("long")
+    return F.conv(F.substring(F.sha2(c, 256), 1, 15), 16, 10).cast("long")
 
 
 def hash60_sql(expr: str) -> str:
@@ -120,7 +115,7 @@ def normalize_text(c: Column | str) -> Column:
     (trim only strips literal spaces; collapsing first turns any leading
     tab/newline run into a trimmable space). Idempotence is asserted by a
     hypothesis property test."""
-    return F.lower(F.trim(F.regexp_replace(_col(c), r"\s+", " ")))
+    return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
 
 
 def fingerprint(c: Column | str) -> Column:

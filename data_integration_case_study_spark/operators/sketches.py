@@ -427,7 +427,7 @@ def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
     per-shard / per-day / per-microbatch sketches roll up without
     re-reading data. Unlike KMV's merge this one is NOT idempotent
     (counters add), so streaming maintenance must gate on the batch id
-    (streaming/sketches.streaming_cms_sketch)."""
+    (streaming/state.streaming_cms_sketch)."""
     return (
         a.unionByName(b)
         .groupBy("row", "col")
@@ -668,7 +668,7 @@ def ams_merge(a: DataFrame, b: DataFrame, group_cols: list[str], d: int = 9) -> 
     table signs under ``AMS_SEED``): the sketch of the concatenated
     inputs (proven in tests). Addition is NOT idempotent, so streaming
     maintenance gates on the batch id exactly like count-min
-    (streaming/sketches.streaming_ams_sketch)."""
+    (streaming/state.streaming_ams_sketch)."""
     return (
         a.unionByName(b)
         .groupBy(*group_cols)

@@ -853,7 +853,7 @@ def ams_f2_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     so every engine derives identical +-1 draws. Built from the
     MERGEABLE parts in operators/sketches (ams_counters/ams_estimate);
     the additive merge powers the streaming maintenance twin
-    (streaming/sketches.streaming_ams_sketch)."""
+    (streaming/state.streaming_ams_sketch)."""
     from data_integration_case_study_spark.operators.sketches import (
         ams_counters,
         ams_estimate,

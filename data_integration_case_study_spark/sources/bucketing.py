@@ -20,7 +20,7 @@ semantics. Both sides must agree on bucket count (or be multiples with
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -29,24 +29,19 @@ def write_bucketed(
     bucket_cols: list[str],
     num_buckets: int = 16,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist ``df`` as a bucketed (and optionally bucket-sorted) catalog
     table. ``num_buckets`` should be sized so one bucket of the LARGER
     table fits an executor's memory at the target scale — at 100 TB that
     means thousands of buckets, not 16; the local default just keeps
-    small-SF files sensible."""
-    if mode == "overwrite":
-        # a stale catalog entry (e.g. from a previous session sharing the
-        # warehouse dir) blocks CREATE; drop it so overwrite means overwrite
-        df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
-    writer = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *bucket_cols)
+    small-SF files sensible. Replaces ``table``: a stale catalog entry
+    (e.g. from a previous session sharing the warehouse dir) blocks
+    CREATE, so it is dropped first. Read it back with ``spark.table``
+    (bucket metadata rides along — joins and aggs on the bucket key
+    skip their Exchange)."""
+    df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
+    writer = df.write.mode("overwrite").format("parquet").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
 
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    """Read a catalog table (bucket metadata rides along — joins and aggs
-    on the bucket key skip their Exchange)."""
-    return spark.table(table)

@@ -14,8 +14,8 @@ Spark-side equivalents:
   distributed, not a post-load index build).
 
 The reference's ``if_exists='replace'`` is a whole-table swap. Here every
-sink that replaces a directory (the quality gate, the streaming CDC
-snapshot, the foreachBatch parquet sink, the streaming sketch states)
+sink that replaces a directory (the quality gate, and through
+``streaming/state.run_state_loop`` every streaming state directory)
 goes through :func:`replace_dir`: write a staging copy, then swap it in
 by rename, so a failed write or a crash never leaves the only copy
 half-written.

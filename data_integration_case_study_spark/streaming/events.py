@@ -17,10 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_integration_case_study_spark.functions.numeric import dsum
-from data_integration_case_study_spark.sources.sinks import replace_dir
+from data_integration_case_study_spark.streaming.state import run_state_loop
 
-# Event-time watermark both runners put on the ``ts`` column: how late an
-# event may arrive before windowed and session state for it is dropped.
+# Event-time watermark both runners and both sides of the interval join
+# put on event time: how late an event may arrive before windowed,
+# session and join state for it is dropped.
 _GAP_WATERMARK = "1 day"
 
 
@@ -105,6 +106,35 @@ def streaming_dedup(stream: DataFrame, keys: list[str], watermark_col: str = "ts
     return wm.dropDuplicates(keys)
 
 
+def stream_stream_interval_join(
+    left: DataFrame,
+    right: DataFrame,
+    key: str,
+    left_ts: str,
+    right_ts: str,
+    max_gap: str = "1 hour",
+) -> DataFrame:
+    """Stream-stream interval join (SURVEY §2.8), the attribution shape:
+    inner-join two event streams on ``key`` where the right event lands
+    within [left_ts, left_ts + max_gap].
+
+    State bound: each side buffers at most ``_GAP_WATERMARK`` +
+    ``max_gap`` of event time per key — the two-sided condition gives the
+    engine both directions of the eviction proof; without the time bound
+    stream-stream join state grows forever. Scale: state is partitioned
+    by the join key, so the operator distributes like any keyed shuffle.
+    Batch twin: the same call on two batch frames (withWatermark is a
+    no-op in batch)."""
+    l = left.withWatermark(left_ts, _GAP_WATERMARK)
+    r = right.withWatermark(right_ts, _GAP_WATERMARK)
+    cond = (
+        (l[key] == r[key])
+        & (r[right_ts] >= l[left_ts])
+        & (r[right_ts] <= l[left_ts] + F.expr(f"INTERVAL {max_gap}"))
+    )
+    return l.join(r, cond)
+
+
 def run_streaming_foreach_batch(
     spark: SparkSession,
     source_dir: str,
@@ -114,24 +144,18 @@ def run_streaming_foreach_batch(
     checkpoint_dir: str,
 ):
     """Production-shaped runner: transform each micro-batch and replace
-    the parquet sink via foreachBatch (the standard pattern for sinks
-    Structured Streaming doesn't support in complete mode) through the
-    crash-safe staging swap ``sources.sinks.replace_dir``. availableNow
-    drains the source then stops."""
+    the parquet sink through the state loop's foreachBatch (the standard
+    pattern for sinks Structured Streaming doesn't support in complete
+    mode) and its crash-safe staging swap. availableNow drains the
+    source then stops. The sink's ``_BATCH`` marker ties it to
+    ``checkpoint_dir``: a new checkpoint needs a fresh ``sink_dir``."""
     stream = (
         spark.readStream.schema(schema).parquet(source_dir).withWatermark("ts", _GAP_WATERMARK)
     )
-    out = transform(stream)
-
-    def sink(batch_df, batch_id):
-        replace_dir(sink_dir, batch_df.write.parquet)
-
-    return (
-        out.writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_state_loop(
+        transform(stream), sink_dir, checkpoint_dir,
+        lambda batch_df, prev, staging: batch_df.write.parquet(staging),
+        output_mode="complete",
     )
 
 

@@ -40,8 +40,8 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, no_broadcast):
     bucketing.write_bucketed(l, "b_lineitem", ["l_orderkey"], 8, ["l_orderkey"])
     bucketing.write_bucketed(o, "b_orders", ["o_orderkey"], 8, ["o_orderkey"])
 
-    bl = bucketing.read_table(spark, "b_lineitem")
-    bo = bucketing.read_table(spark, "b_orders")
+    bl = spark.table("b_lineitem")
+    bo = spark.table("b_orders")
     joined = bl.join(bo, bl.l_orderkey == bo.o_orderkey)
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan
@@ -124,7 +124,7 @@ def test_incremental_dedup_probes_bucketed_signature_table(spark, sf_dir, no_bro
     probe = _band_buckets(
         _minhash_per_doc(_incoming(spark, sf_dir), "doc_id", "text", 3, 32), 32, 8
     ).withColumnRenamed("id", "new_id")
-    stored = bucketing.read_table(spark, "corpus_bands").withColumnRenamed(
+    stored = spark.table("corpus_bands").withColumnRenamed(
         "id", "dup_of"
     )
     cand = probe.join(stored, ["band", "bucket"]).select("new_id", "dup_of").distinct()

@@ -223,3 +223,29 @@ def test_only_sinks_module_renames():
                 for a in n.args)
     ]
     assert renames == [] and overwrites == []
+
+
+def test_one_streaming_state_loop():
+    """streaming/state.run_state_loop is the package's one foreachBatch
+    loop: exactly one ``foreachBatch(`` call in the package, in
+    streaming/state.py, and no module under streaming/ imports
+    ``shutil`` (no commit protocol of its own beside replace_dir)."""
+    import ast
+    from pathlib import Path
+
+    import data_integration_case_study_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    loops, shutil_imports = [], []
+    for f in sorted(root.rglob("*.py")):
+        name = f.relative_to(root).as_posix()
+        for n in ast.walk(ast.parse(f.read_text())):
+            if isinstance(n, ast.Call) and getattr(n.func, "attr", "") == "foreachBatch":
+                loops.append(f"{name}:{n.lineno}")
+            if (name.startswith("streaming/")
+                    and isinstance(n, (ast.Import, ast.ImportFrom))
+                    and "shutil" in [getattr(n, "module", None),
+                                     *(a.name for a in n.names)]):
+                shutil_imports.append(f"{name}:{n.lineno}")
+    assert [x.split(":")[0] for x in loops] == ["streaming/state.py"], loops
+    assert shutil_imports == []

@@ -3,6 +3,7 @@ identical results when executed as a stream (availableNow drain)."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
@@ -55,8 +56,6 @@ def test_streaming_tumbling_matches_batch(spark, normalized_events_dir):
 def test_streaming_dedup_matches_batch_distinct(spark, normalized_events_dir):
     # duplicate the source by reading it twice via union in a batch file,
     # then stream-dedup must converge to the distinct event set
-    import tempfile
-
     dup_dir = tempfile.mkdtemp(prefix="events_dup_")
     src = spark.read.parquet(normalized_events_dir)
     src.union(src).write.mode("overwrite").parquet(dup_dir)
@@ -96,8 +95,6 @@ def test_streaming_corpus_ingest_matches_batch(spark, sf_dir):
 
 
 def test_streaming_foreach_batch_parquet_sink(spark, normalized_events_dir):
-    import tempfile
-
     sink = tempfile.mkdtemp(prefix="events_sink_")
     ckpt = tempfile.mkdtemp(prefix="events_ckpt_")
     q = ev.run_streaming_foreach_batch(
@@ -137,7 +134,7 @@ def test_stateful_running_totals_matches_batch(spark, normalized_events_dir):
 
 
 def test_stream_stream_interval_join_matches_batch(spark, normalized_events_dir):
-    from data_integration_case_study_spark.streaming.joins import (
+    from data_integration_case_study_spark.streaming.events import (
         stream_stream_interval_join,
     )
 
@@ -171,7 +168,7 @@ def test_stream_stream_interval_join_matches_batch(spark, normalized_events_dir)
 
 def test_streaming_cdc_merge_equals_batch_merge(spark):
     from data_integration_case_study_spark.operators.merge import merge_upsert
-    from data_integration_case_study_spark.streaming.cdc import run_streaming_merge
+    from data_integration_case_study_spark.streaming.state import run_streaming_merge
 
     base_dir = tempfile.mkdtemp(prefix="cdc_target_") + "/snap"
     src_dir = tempfile.mkdtemp(prefix="cdc_updates_")
@@ -223,8 +220,6 @@ def test_streaming_paragraph_dedup_chained_stateful(spark, sf_dir):
     windows, and the flushed output must show every duplicated pair
     deduped at BLOCK level: the pair's combined kept-block count equals
     one document's block count."""
-    import tempfile
-
     from data_integration_case_study_spark.streaming import ingest
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
@@ -320,7 +315,7 @@ def test_streaming_kmv_sketch_matches_batch(spark, normalized_events_dir, tmp_pa
         kmv_distinct,
         kmv_estimate_from_sketch,
     )
-    from data_integration_case_study_spark.streaming.sketches import (
+    from data_integration_case_study_spark.streaming.state import (
         streaming_kmv_sketch,
     )
 
@@ -355,7 +350,7 @@ def test_streaming_cms_sketch_matches_batch(spark, normalized_events_dir, tmp_pa
     microbatch (with the batch-id replay guard) converges to the batch
     sketch of all data."""
     from data_integration_case_study_spark.operators.sketches import cms_build
-    from data_integration_case_study_spark.streaming.sketches import (
+    from data_integration_case_study_spark.streaming.state import (
         streaming_cms_sketch,
     )
 
@@ -398,8 +393,6 @@ def test_stream_static_enrich_matches_batch(spark, normalized_events_dir):
             ).alias("cents"),
         )
     )
-    import tempfile
-
     dim_dir = tempfile.mkdtemp(prefix="user_dim_")
     dim.write.mode("overwrite").parquet(dim_dir)
     static_dim = spark.read.parquet(dim_dir)
@@ -441,13 +434,11 @@ def test_streaming_session_windows_match_batch(spark, normalized_events_dir):
 
 
 def test_streaming_hll_sketch_matches_batch(spark, normalized_events_dir):
-    import tempfile
-
     from data_integration_case_study_spark.operators.sketches import (
         hll_estimate_registers,
         hll_sketch,
     )
-    from data_integration_case_study_spark.streaming.sketches import (
+    from data_integration_case_study_spark.streaming.state import (
         streaming_hll_sketch,
     )
 
@@ -481,10 +472,9 @@ def test_streaming_ams_sketch_matches_batch(spark, normalized_events_dir):
     from data_integration_case_study_spark.operators.sketches import (
         ams_counters,
     )
-    from data_integration_case_study_spark.streaming.sketches import (
+    from data_integration_case_study_spark.streaming.state import (
         streaming_ams_sketch,
     )
-    import tempfile
 
     state = tempfile.mkdtemp(prefix="ams_state_") + "/sketch"
     ckpt = tempfile.mkdtemp(prefix="ams_ckpt_")
@@ -503,38 +493,41 @@ def test_streaming_ams_sketch_matches_batch(spark, normalized_events_dir):
     assert _canon(streamed) == _canon(batch)
 
 
+def _drain_ivm(spark, tmp_path) -> str:
+    """Drain the IVM stream over ``tmp_path/log`` into its state directory
+    (checkpoint ``tmp_path/ckpt``); return that directory."""
+    from data_integration_case_study_spark.streaming.state import (
+        run_streaming_ivm,
+    )
+
+    src, state = str(tmp_path / "log"), str(tmp_path / "state")
+    run_streaming_ivm(
+        spark, src, spark.read.parquet(src).schema, state,
+        keys=["o_orderkey"], group_col="o_orderstatus",
+        value_col="o_totalprice", checkpoint_dir=str(tmp_path / "ckpt"),
+    ).awaitTermination(180)
+    return state
+
+
 def test_streaming_ivm_matches_batch_recompute(spark, sf_dir, tmp_path):
-    """Streaming IVM: snapshot + aggregate maintained transactionally
-    per micro-batch (versioned-directory commits) converge to the
-    batch CDC apply + from-scratch aggregate."""
+    """Streaming IVM: snapshot + aggregate maintained per micro-batch
+    (both committed by one directory rename) converge to the batch CDC
+    apply + from-scratch aggregate."""
     from data_integration_case_study_spark.operators.merge import (
         merge_apply_changes,
     )
     from data_integration_case_study_spark.plans.warehouse_queries import (
         _orders_change_log,
     )
-    from data_integration_case_study_spark.streaming.ivm import (
-        read_ivm_state,
-        run_streaming_ivm,
-    )
+    from data_integration_case_study_spark.streaming.state import read_ivm_state
 
     log = _orders_change_log(spark, sf_dir)
-    src = str(tmp_path / "log")
     # one file per version -> three micro-batches in log order
     for v in (1, 2, 3):
         log.filter(F.col("version") == v).coalesce(1).write.mode(
             "append"
-        ).parquet(src)
-    schema = spark.read.parquet(src).schema
-    state = str(tmp_path / "state")
-    q = run_streaming_ivm(
-        spark, src, schema, state,
-        keys=["o_orderkey"], group_col="o_orderstatus",
-        value_col="o_totalprice",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(180)
-
+        ).parquet(str(tmp_path / "log"))
+    state = _drain_ivm(spark, tmp_path)
     snap, agg = read_ivm_state(spark, state)
     assert snap is not None
     want_snap = merge_apply_changes(
@@ -548,58 +541,46 @@ def test_streaming_ivm_matches_batch_recompute(spark, sf_dir, tmp_path):
     assert _canon(agg) == _canon(want_agg)
 
     # a restart over the same checkpoint replays nothing and changes
-    # nothing (the _COMMIT guard)
-    q2 = run_streaming_ivm(
-        spark, src, schema, state,
-        keys=["o_orderkey"], group_col="o_orderstatus",
-        value_col="o_totalprice",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q2.awaitTermination(120)
+    # nothing (the _BATCH replay guard)
+    _drain_ivm(spark, tmp_path)
     snap2, agg2 = read_ivm_state(spark, state)
     assert _canon(snap2) == _canon(snap)
     assert _canon(agg2) == _canon(agg)
 
+    # inside a crashed swap's rename window the committed pair sits at
+    # state.prev; the pure reader still sees it
+    os.rename(state, state + ".prev")
+    snap3, agg3 = read_ivm_state(spark, state)
+    assert _canon(snap3) == _canon(want_snap)
+    assert _canon(agg3) == _canon(want_agg)
+
 
 def test_streaming_ivm_ignores_uncommitted_state(spark, sf_dir, tmp_path):
-    """A half-written version directory (no _COMMIT marker — the crash
-    window) must be invisible to readers and harmlessly replaced on
-    replay."""
-    import os
-
+    """A half-written staging copy (the crash window before the swap's
+    rename) must be invisible to readers and discarded on the next run,
+    which rebuilds the state from the source."""
     from data_integration_case_study_spark.plans.warehouse_queries import (
         _orders_change_log,
     )
-    from data_integration_case_study_spark.streaming.ivm import (
-        read_ivm_state,
-        run_streaming_ivm,
-    )
+    from data_integration_case_study_spark.streaming.state import read_ivm_state
 
     log = _orders_change_log(spark, sf_dir).filter(F.col("version") == 1)
-    src = str(tmp_path / "log")
-    log.coalesce(1).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    log.coalesce(1).write.parquet(str(tmp_path / "log"))
     state = str(tmp_path / "state")
-    # plant a HALF-WRITTEN v0 (data, no marker): simulates a crash after
-    # the writes but before the commit point
-    os.makedirs(os.path.join(state, "v0", "snapshot"), exist_ok=True)
-    log.limit(3).drop("op").write.mode("overwrite").parquet(
-        os.path.join(state, "v0", "snapshot")
+    # plant a HALF-WRITTEN staging copy (snapshot, no agg, no marker):
+    # simulates a crash after the first write but before the swap
+    log.limit(3).drop("op").write.parquet(
+        os.path.join(state + ".staging", "snapshot")
     )
     assert read_ivm_state(spark, state) == (None, None)
 
-    q = run_streaming_ivm(
-        spark, src, schema, state,
-        keys=["o_orderkey"], group_col="o_orderstatus",
-        value_col="o_totalprice",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
+    _drain_ivm(spark, tmp_path)
     snap, agg = read_ivm_state(spark, state)
-    # the replayed batch rebuilt v0 from scratch: full v1 row count, not
+    # the batch rebuilt the state from scratch: full v1 row count, not
     # the planted 3-row leftover
     assert snap.count() == log.count()
     assert agg.agg(F.sum("n_rows")).collect()[0][0] == log.count()
+    assert not os.path.exists(state + ".staging")
 
 
 def test_space_saving_exact_when_m_covers_domain(spark, normalized_events_dir):
@@ -695,10 +676,8 @@ def test_streaming_weighted_reservoir_matches_batch(spark, normalized_events_dir
     """Streaming Efraimidis-Spirakis reservoir: per-microbatch
     union+re-cut of content-hashed keys converges to the batch sample
     of all data (top-k merges; no batch-id guard needed)."""
-    import tempfile
-
     from data_integration_case_study_spark.functions.text import hash60
-    from data_integration_case_study_spark.streaming.sketches import (
+    from data_integration_case_study_spark.streaming.state import (
         streaming_weighted_reservoir,
     )
 
@@ -740,14 +719,12 @@ def test_streaming_histogram_sketch_matches_batch(spark, normalized_events_dir):
     microbatch (batch-id replay guard) converges to the batch bin
     counts of all data, and the estimated quantiles match the batch
     estimator exactly."""
-    import tempfile
-
     from data_integration_case_study_spark.operators.sketches import (
         histogram_bin_counts,
         histogram_estimate,
         histogram_quantiles,
     )
-    from data_integration_case_study_spark.streaming.sketches import (
+    from data_integration_case_study_spark.streaming.state import (
         streaming_histogram_sketch,
     )
 
@@ -784,10 +761,8 @@ def test_streaming_sketch_heals_interrupted_swap(spark, normalized_events_dir, t
     missing and ``state.prev`` holding the earlier grid. The restarted
     stream must restore that grid and merge into it, not start over as
     if it were the first batch."""
-    import os
-
     from data_integration_case_study_spark.operators.sketches import cms_build
-    from data_integration_case_study_spark.streaming.sketches import (
+    from data_integration_case_study_spark.streaming.state import (
         streaming_cms_sketch,
     )
 
@@ -821,10 +796,8 @@ def test_streaming_cms_sketch_skips_replayed_batch(spark, normalized_events_dir,
     """Restart after the last batch's state committed but its checkpoint
     commit did not: Spark replays that batch, and the additive count-min
     merge must not count it twice."""
-    import os
-
     from data_integration_case_study_spark.operators.sketches import cms_build
-    from data_integration_case_study_spark.streaming.sketches import (
+    from data_integration_case_study_spark.streaming.state import (
         streaming_cms_sketch,
     )
 
