@@ -75,6 +75,13 @@ MUST_PROVE = (
     # BPE training no longer reuses merges across queries
     "bpe_train_merges",
     "bpe_encode_stats",
+    # one candidate-and-verify path for the set-similarity detectors
+    "minhash_lsh_neardups",
+    "neardup_clusters",
+    "set_similarity_exact",
+    "containment_pairs",
+    "cross_corpus_neardup",
+    "embedding_neardups",
 )
 
 

@@ -11,6 +11,14 @@ applies them:
    band-of-bits blocking.
 5. embedding-cosine near-dup — lives in operators/similarity.py.
 
+Every set-similarity detector is candidate generation followed by one
+exact verify — the SSJoin primitive (Chaudhuri, Ganti & Kaushik, ICDE
+2006). Candidates come from :func:`_key_pairs` (rows sharing a key:
+block, LSH band bucket, SimHash quarter, prefix shingle) or
+:func:`_successor_pairs` (a ranked frame's rank-window successors);
+:func:`_verify_join` attaches the per-doc summaries to both pair ends;
+every Jaccard is :func:`_jaccard` over |a ∩ b|, |a| and |b|.
+
 All native expressions (sha2 / transform / aggregate) — no UDFs.
 MinHash/SimHash signatures hash shingles/tokens with the sha256-derived
 :func:`~data_integration_case_study_spark.functions.text.hash60`, which
@@ -76,28 +84,33 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def jaccard(a, b):
-    """Jaccard similarity of two array columns (as sets)."""
-    a_d, b_d = F.array_distinct(a), F.array_distinct(b)
-    inter = F.size(F.array_intersect(a_d, b_d)).cast("double")
-    union = F.size(F.array_union(a_d, b_d)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+def _intersection_size(a, b):
+    """|a ∩ b| of two array columns holding sets."""
+    return F.size(F.array_intersect(a, b))
+
+
+def _jaccard(inter, size_a, size_b):
+    """Jaccard from |a ∩ b|, |a| and |b| of two sets — every verify's
+    one formula. The union is never materialized: |a ∪ b| = |a| + |b| −
+    |a ∩ b|, so the same exact integers enter the same double division
+    whichever verify (array intersect, bitset popcount, prefix join)
+    counted the intersection. Two empty sets score 0. The guard reads
+    |a| + |b| > 0, which for sets holds exactly when |a ∪ b| > 0: a
+    threshold filter on the result is pushed into the verify join's
+    condition, where each mention of ``inter`` is evaluated again."""
+    inter = inter.cast("double")
+    total = (size_a + size_b).cast("double")
+    return F.when(total > 0, inter / (total - inter)).otherwise(F.lit(0.0))
 
 
 def jaccard_distinct(a, b):
-    """Jaccard of two ALREADY-DISTINCT array columns — the verify-path
-    form (guide §1.2 step 2, per-pair work): skips the two redundant
-    ``array_distinct`` re-normalizations and never materializes the
-    union array, since |a ∪ b| = |a| + |b| − |a ∩ b| for sets. Every
-    verify below feeds sets by construction (``array_distinct`` at the
-    summary build, or ``collect_set`` shingles), and the candidate join
-    replays each array per pair — so per-pair cost is one intersect +
-    two sizes instead of two distincts + intersect + a materialized
-    union. Values are identical: the same exact integers enter the same
-    double division."""
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = (F.size(a) + F.size(b)).cast("double") - inter
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    """Jaccard of two ALREADY-DISTINCT array columns — the array verify
+    (guide §1.2 step 2, per-pair work): no ``array_distinct``
+    re-normalization and no union array, so per-pair cost is one
+    intersect + two sizes. Its callers feed sets by construction
+    (``array_distinct`` at the summary build, or ``collect_set``
+    shingles)."""
+    return _jaccard(_intersection_size(a, b), F.size(a), F.size(b))
 
 
 def blocked_rank(df: DataFrame, block_col: str, order_col: str) -> DataFrame:
@@ -233,13 +246,41 @@ def blocked_rank(df: DataFrame, block_col: str, order_col: str) -> DataFrame:
     )
 
 
-def _successor_pairs(keys: DataFrame, window: int) -> DataFrame:
-    """(id_a, id_b, block): every ``id`` of ``keys`` (id, block) paired
-    with its ``window`` id-ordered successors inside its block, ranked
-    by :func:`blocked_rank`. The successor-window candidates of
-    :func:`ngram_jaccard_pairs` and
-    :func:`operators.similarity.embedding_neardup_pairs`."""
-    ranked = blocked_rank(keys, "block", "id")
+def _key_pairs(
+    keyed: DataFrame, keys: list[str], carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """The shared-key candidate self-join: one (id_a < id_b) row per
+    pair of ``keyed`` rows (id, *keys, *carry) sharing a key, however
+    many keys they share, as (id_a, *{c}_a, id_b, *{c}_b) for each
+    carried column c. Used by the ngram exhaustive form, the MinHash
+    bands, the SimHash quarters and the Jaccard prefix join."""
+
+    def end(side: str, tag: str) -> list:
+        return [
+            F.col(f"{side}.{c}").alias(f"{c}_{tag}") for c in ("id", *carry)
+        ]
+
+    return (
+        keyed.alias("x")
+        .join(keyed.alias("y"), keys)
+        .filter(F.col("x.id") < F.col("y.id"))
+        .select(*end("x", "a"), *end("y", "b"))
+        .distinct()
+    )
+
+
+def _successor_pairs(
+    ranked: DataFrame, window: int, keys: tuple[str, ...] = ("block",)
+) -> DataFrame:
+    """(id_a, id_b, *keys): every row of an already-ranked frame
+    ``ranked`` (id, *keys, __r) paired with the ``window`` rows ranked
+    after it under the same keys — an equi-join on the TARGET rank, not
+    a residual range filter over the key self-join (which would still
+    enumerate |group|² rows), so a g-member group costs g·window rows.
+    The successor-window candidates of :func:`ngram_jaccard_pairs` and
+    :func:`operators.similarity.embedding_neardup_pairs` (ranked by
+    :func:`blocked_rank`) and of :func:`minhash_candidate_pairs`'
+    ``bucket_window`` (ranked per LSH bucket)."""
     # REPARTITION after the W-way explode: the slim ranked frame is tiny,
     # so AQE coalesces its shuffle to ~1 partition, and with only
     # broadcast joins downstream the entire exploded-probe + verify
@@ -248,15 +289,43 @@ def _successor_pairs(keys: DataFrame, window: int) -> DataFrame:
     # both restores parallelism and co-partitions the candidate join.
     probes = ranked.select(
         F.col("id").alias("id_a"),
-        "block",
+        *keys,
         F.explode(
             F.sequence(F.col("__r") + 1, F.col("__r") + window)
         ).alias("__r"),
-    ).repartition(F.col("block"), F.col("__r"))
+    ).repartition(*keys, "__r")
     return probes.join(
-        ranked.select(F.col("id").alias("id_b"), "block", "__r"),
-        ["block", "__r"],
-    ).select("id_a", "id_b", "block")
+        ranked.select(F.col("id").alias("id_b"), *keys, "__r"),
+        [*keys, "__r"],
+    ).select("id_a", "id_b", *keys)
+
+
+def _verify_join(
+    pairs: DataFrame,
+    summary: DataFrame,
+    other: DataFrame | None = None,
+    ends: tuple[str, str] = ("id_a", "id_b"),
+    tags: tuple[str, str] = ("a", "b"),
+) -> DataFrame:
+    """``pairs`` with a per-doc ``summary`` (id, *cols) attached to both
+    pair ends — the one two-sided verify join: end ``ends[i]`` gains
+    ``{c}_{tags[i]}`` for every summary column c. ``other`` replaces
+    ``summary`` on the second end (the incremental form's corpus side,
+    or a narrower projection). Callers pass only the columns the verify
+    reads: renaming EVERY column of a cached frame is the cached plan
+    itself to Spark's cache lookup, which drops the rename projection.
+    Candidates carry only ids up to here, so per-key replication never
+    multiplies the variable-length payload."""
+    sides = (summary, summary if other is None else other)
+    for end, tag, side in zip(ends, tags, sides):
+        pairs = pairs.join(
+            side.select(
+                F.col("id").alias(end),
+                *[F.col(c).alias(f"{c}_{tag}") for c in side.columns if c != "id"],
+            ),
+            end,
+        )
+    return pairs
 
 
 def ngram_jaccard_pairs(
@@ -285,9 +354,10 @@ def ngram_jaccard_pairs(
     group); distant same-block pairs are not emitted. The rank comes
     from :func:`blocked_rank` (two-phase range ranking), not a plain
     window — PARTITION BY lang would single-task-sort a whole language
-    at 100 TB. The probe side explodes only (id, block, rank) longs; the
-    token arrays join in AFTER the candidate equi-join, so the
-    variable-length payload is never replicated per probe.
+    at 100 TB. Both forms are candidate generation (:func:`_key_pairs`
+    on the block, or :func:`_successor_pairs`) over (id, block) longs,
+    followed by the one verify (:func:`_verify_join`), so the token
+    payload joins in only AFTER the candidates are known.
 
     A frequency-prefix-filtered exact form (AllPairs/PPJoin) was
     A/B-measured and REJECTED for this corpus family: with a bounded
@@ -316,6 +386,8 @@ def ngram_jaccard_pairs(
     the cap (real-text corpora) keep the array verify: one wasted
     slim probe pass, no other cost.
     """
+    from data_integration_case_study_spark.operators import cache
+
     base_toks = _tokens(text_col, tokens_col)
     toks = F.array_distinct(
         base_toks if n == 1 else word_ngrams(base_toks, n)
@@ -323,25 +395,6 @@ def ngram_jaccard_pairs(
     base = df.select(
         F.col(id_col).alias("id"), F.col(block_col).alias("block"), toks.alias("toks")
     )
-    if block_window is None:
-        a = base.select(
-            F.col("id").alias("id_a"), "block", F.col("toks").alias("toks_a")
-        )
-        b = base.select(
-            F.col("id").alias("id_b"), "block", F.col("toks").alias("toks_b")
-        )
-        return (
-            a.join(b, "block")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn(
-                "jaccard", F.round(jaccard_distinct(F.col("toks_a"), F.col("toks_b")), 6)
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "block", "jaccard")
-        )
-
-    from data_integration_case_study_spark.operators import cache
-
     # Bounded vocab probe (see docstring): ONE slim pass; at most
     # cap+1 distinct token values reach the driver. Numeric (long)
     # token domains only — both catalog callers pre-hash to hash60
@@ -349,7 +402,7 @@ def ngram_jaccard_pairs(
     # strings into SQL text is an escaping liability for zero catalog
     # benefit).
     vocab: list[int] | None = None
-    if BITSET_MAX_VOCAB:
+    if BITSET_MAX_VOCAB and block_window is not None:
         probe = [
             r[0]
             for r in base.select(F.explode("toks").alias("__t"))
@@ -379,48 +432,27 @@ def ngram_jaccard_pairs(
                 for w in range(nw)
             ],
         )
-        # the compact mask summary (8*nw+4 bytes/doc) is what the two
-        # verify sides re-read — cache IT, not the token arrays
-        summary = cache.track(summary)
-        cand = _successor_pairs(summary.select("id", "block"), block_window)
-        sa = summary.select(
-            F.col("id").alias("id_a"), F.col("__sz").alias("__sza"),
-            *[F.col(f"__m{w}").alias(f"__ma{w}") for w in range(nw)],
-        )
-        sb = summary.select(
-            F.col("id").alias("id_b"), F.col("__sz").alias("__szb"),
-            *[F.col(f"__m{w}").alias(f"__mb{w}") for w in range(nw)],
-        )
         inter = F.expr(
-            " + ".join(f"bit_count(__ma{w} & __mb{w})" for w in range(nw))
-        ).cast("double")
-        union = (F.col("__sza") + F.col("__szb")).cast("double") - inter
-        return (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "block", "jaccard")
+            " + ".join(f"bit_count(__m{w}_a & __m{w}_b)" for w in range(nw))
         )
-
-    # token arrays are read twice (both verify sides)
-    base = cache.track(base)
-    cand = _successor_pairs(base.select("id", "block"), block_window)
+        sizes = F.col("__sz_a"), F.col("__sz_b")
+    else:
+        summary = base
+        inter = _intersection_size("toks_a", "toks_b")
+        sizes = F.size("toks_a"), F.size("toks_b")
+    # the summary — the compact masks (8*nw+4 bytes/doc) or the token
+    # arrays — is read by the candidate step and both verify sides
+    summary = cache.track(summary)
+    keys = summary.select("id", "block")
+    if block_window is None:
+        cand = _key_pairs(keys, ["block"], ("block",)).select(
+            "id_a", "id_b", F.col("block_a").alias("block")
+        )
+    else:
+        cand = _successor_pairs(blocked_rank(keys, "block", "id"), block_window)
     return (
-        cand.join(
-            base.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a")),
-            "id_a",
-        )
-        .join(
-            base.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b")),
-            "id_b",
-        )
-        .withColumn("jaccard", F.round(jaccard_distinct(F.col("toks_a"), F.col("toks_b")), 6))
+        _verify_join(cand, summary.drop("block"))
+        .withColumn("jaccard", F.round(_jaccard(inter, *sizes), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "block", "jaccard")
     )
@@ -543,6 +575,26 @@ def _band_buckets(per_doc: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("id", "bb.band", "bb.bucket")
 
 
+def _shingle_jaccard(
+    pairs: DataFrame, threshold: float, per_doc: DataFrame,
+    other: DataFrame | None = None, ends: tuple[str, str] = ("id_a", "id_b"),
+) -> DataFrame:
+    """The MinHash verify: exact Jaccard, rounded to 6, of the two pair
+    ends' shingle-hash sets from :func:`_minhash_per_doc` summaries,
+    kept at >= threshold. ``other`` is the second end's summary when it
+    differs (the incremental form's corpus side)."""
+    sides = [
+        pd.select("id", F.col("shingles").alias("sh"))
+        for pd in (per_doc, per_doc if other is None else other)
+    ]
+    return (
+        _verify_join(pairs, *sides, ends)
+        .withColumn("jaccard", F.round(jaccard_distinct(F.col("sh_a"), F.col("sh_b")), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select(*ends, "jaccard")
+    )
+
+
 def minhash_candidate_pairs(
     df: DataFrame, id_col: str, text_col: str,
     n: int = 3, num_hashes: int = 32, bands: int = 8,
@@ -581,41 +633,21 @@ def minhash_candidate_pairs(
         df, id_col, text_col, n, num_hashes, tokens_col=tokens_col
     )
     banded = _band_buckets(per_doc, num_hashes, bands)
-
     if bucket_window is None:
-        cand = (
-            banded.alias("x")
-            .join(banded.alias("y"), ["band", "bucket"])
-            .filter(F.col("x.id") < F.col("y.id"))
-        )
+        pairs = _key_pairs(banded, ["band", "bucket"])
     else:
-        # equi-join on the TARGET rank (not a residual range filter over the
-        # bucket self-join, which would still enumerate |bucket|^2 rows):
-        # each member explodes to its `bucket_window` successor ranks, so
-        # the join produces exactly |bucket| * window candidates.
-        w = Window.partitionBy("band", "bucket").orderBy("id")
-        ranked = banded.withColumn("__r", F.row_number().over(w))
-        probes = ranked.select(
-            "id", "band", "bucket",
-            F.explode(
-                F.sequence(F.col("__r") + 1, F.col("__r") + bucket_window)
-            ).alias("__r"),
+        # each bucket member explodes to its `bucket_window` successor
+        # ranks, so the join produces exactly |bucket| * window candidates
+        ranked = banded.withColumn(
+            "__r",
+            F.row_number().over(Window.partitionBy("band", "bucket").orderBy("id")),
         )
-        cand = probes.alias("x").join(ranked.alias("y"), ["band", "bucket", "__r"])
-    pairs = (
-        cand.select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh = per_doc.select("id", "shingles")
-    verify = (
-        pairs.join(sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a")
-        .join(sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b")
-    )
-    return (
-        verify.withColumn("jaccard", F.round(jaccard_distinct(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+        pairs = (
+            _successor_pairs(ranked, bucket_window, ("band", "bucket"))
+            .select("id_a", "id_b")
+            .distinct()
+        )
+    return _shingle_jaccard(pairs, threshold, per_doc)
 
 
 def minhash_incremental_pairs(
@@ -652,17 +684,8 @@ def minhash_incremental_pairs(
         .select("new_id", "dup_of")
         .dropDuplicates(["new_id", "dup_of"])
     )
-    verify = cand.join(
-        new_pd.select(F.col("id").alias("new_id"), F.col("shingles").alias("sh_a")),
-        "new_id",
-    ).join(
-        corp_pd.select(F.col("id").alias("dup_of"), F.col("shingles").alias("sh_b")),
-        "dup_of",
-    )
-    return (
-        verify.withColumn("jaccard", F.round(jaccard_distinct(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "dup_of", "jaccard")
+    return _shingle_jaccard(
+        cand, threshold, new_pd, corp_pd, ("new_id", "dup_of")
     )
 
 
@@ -730,18 +753,12 @@ def simhash_near_pairs(
             ) for q in range(4)
         ])).alias("qq"),
     ).select("id", "simhash", "qq.q", "qq.qv")
-    cand = (
-        quarters.alias("x")
-        .join(quarters.alias("y"), ["q", "qv"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(
-            F.col("x.id").alias("id_a"), F.col("x.simhash").alias("h_a"),
-            F.col("y.id").alias("id_b"), F.col("y.simhash").alias("h_b"),
-        )
-        .distinct()
-    )
     return (
-        cand.withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
+        _key_pairs(quarters, ["q", "qv"], ("simhash",))
+        .withColumn(
+            "hamming",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
+        )
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
@@ -784,10 +801,12 @@ def _ordered_shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int):
     return sh_rows, cache.track(sets)
 
 
-def _prefix_len(threshold: float):
-    """|S| - ceil(t*|S|) + 1 — the prefix-filter bound shared by both
+def _prefix(sets: DataFrame, threshold: float) -> DataFrame:
+    """(id, h) rows of each doc's prefix: the first |S| - ceil(t*|S|) + 1
+    shingles of its ordered set — the prefix-filter bound shared by both
     prefix joins."""
-    return F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")).cast("int") + 1
+    plen = F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")).cast("int") + 1
+    return sets.select("id", F.explode(F.slice("sh", F.lit(1), plen)).alias("h"))
 
 
 def jaccard_join_prefix(
@@ -829,44 +848,12 @@ def jaccard_join_prefix(
     oracle twin is DEFINITIONAL (shared-shingle join + exact Jaccard,
     no prefix logic), so its green row proves the pruning lossless."""
     _, sets = _ordered_shingle_sets(df, id_col, text_col, n)
-    plen = _prefix_len(threshold)
-    prefix = sets.select(
-        "id", F.explode(F.slice("sh", F.lit(1), plen)).alias("h")
-    )
-    cand = (
-        prefix.alias("x")
-        .join(prefix.alias("y"), "h")
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
-    )
-    s = sets.select("id", "sh", "sz")
-    verify = (
-        cand.join(
-            s.select(
-                F.col("id").alias("id_a"),
-                F.col("sh").alias("sh_a"),
-                F.col("sz").alias("sz_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            s.select(
-                F.col("id").alias("id_b"),
-                F.col("sh").alias("sh_b"),
-                F.col("sz").alias("sz_b"),
-            ),
-            "id_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
-        )
-    )
-    return verify.filter(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
+    verify = _verify_join(_key_pairs(_prefix(sets, threshold), ["h"]), sets)
+    return (
+        verify.withColumn("inter", _intersection_size("sh_a", "sh_b"))
+        .withColumn("jaccard", _jaccard(F.col("inter"), F.col("sz_a"), F.col("sz_b")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -904,39 +891,24 @@ def containment_join_prefix(
     (shared-shingle join + exact containment, no prefix logic),
     proving the pruning lossless."""
     sh_rows, sets = _ordered_shingle_sets(df, id_col, text_col, n)
-    plen = _prefix_len(threshold)
-    prefix = sets.select(
-        "id", F.explode(F.slice("sh", F.lit(1), plen)).alias("h")
-    )
     cand = (
-        prefix.alias("x")
+        _prefix(sets, threshold).alias("x")
         .join(sh_rows.alias("y"), "h")
         .filter(F.col("x.id") != F.col("y.id"))
         .select(F.col("x.id").alias("src_id"), F.col("y.id").alias("dst_id"))
         .distinct()
     )
-    s = sets.select("id", "sh", "sz")
-    verify = (
-        cand.join(
-            s.select(
-                F.col("id").alias("src_id"),
-                F.col("sh").alias("sh_s"),
-                F.col("sz").alias("sz_s"),
-            ),
-            "src_id",
-        )
-        .join(
-            s.select(F.col("id").alias("dst_id"), F.col("sh").alias("sh_d")),
-            "dst_id",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("sh_s", "sh_d")))
+    verify = _verify_join(
+        cand, sets, sets.select("id", "sh"), ("src_id", "dst_id"), ("s", "d")
+    )
+    return (
+        verify.withColumn("n_common", _intersection_size("sh_s", "sh_d"))
         .withColumn(
             "containment",
             F.col("n_common").cast("double") / F.col("sz_s").cast("double"),
         )
-    )
-    return verify.filter(F.col("containment") >= threshold).select(
-        "src_id", "dst_id", "n_common", "containment"
+        .filter(F.col("containment") >= threshold)
+        .select("src_id", "dst_id", "n_common", "containment")
     )
 
 

@@ -647,13 +647,17 @@ def embedding_neardup_pairs(
     same way ``bucket_window`` bounds degenerate LSH buckets in
     :func:`dedup.minhash_candidate_pairs`: each vector is compared only
     with its W id-ordered successors inside its block (b·W pairs, not
-    b²/2; duplicate clusters survive via successor chaining). The pairs
-    come from :func:`dedup._successor_pairs`, shared with the n-gram
-    Jaccard verify, which ranks with :func:`dedup.blocked_rank` —
-    bounded-cardinality blocks must not become one whole-block window
-    sort. ``None`` keeps the
-    exhaustive in-block semantics. Input contract as :func:`knn_graph`."""
-    from data_integration_case_study_spark.operators.dedup import _successor_pairs
+    b²/2; duplicate clusters survive via successor chaining). The rank
+    is :func:`dedup.blocked_rank` (bounded-cardinality blocks must not
+    become one whole-block window sort), and the pairs come from
+    :func:`dedup._successor_pairs`, the successor-pairing step the
+    n-gram Jaccard window and MinHash's ``bucket_window`` share.
+    ``None`` keeps the exhaustive in-block semantics. Input contract as
+    :func:`knn_graph`."""
+    from data_integration_case_study_spark.operators.dedup import (
+        _successor_pairs,
+        blocked_rank,
+    )
 
     side = _rerank_side(
         df.select(id_col, vec_col, F.col(block_col).alias("block")), id_col, vec_col, "a"
@@ -662,8 +666,9 @@ def embedding_neardup_pairs(
         scored = _block_pairs(side)
     else:
         side = cache.track(side)
+        keys = side.select(F.col("a_id").alias("id"), "block")
         cand = _successor_pairs(
-            side.select(F.col("a_id").alias("id"), "block"), block_window
+            blocked_rank(keys, "block", "id"), block_window
         ).withColumnsRenamed({"id_a": "a_id", "id_b": "b_id"})
         scored = _scored_pairs(
             cand.join(_renamed(side, "a", "a"), "a_id")

@@ -3,9 +3,10 @@ micro-batch — the CDC snapshot, the IVM snapshot+aggregate pair, the
 foreachBatch parquet sink and the six sketch states — commits through
 one foreachBatch loop, :func:`run_state_loop`.
 
-Per micro-batch the loop heals an interrupted swap
-(``sources.sinks.recover_dir``), skips a replayed batch id, has the
-caller's ``step(batch_df, prev_dir, staging)`` write the new state into
+When the loop starts it heals an interrupted swap once
+(``sources.sinks.recover_dir``), so a restart that finds no new input
+and runs no batch still leaves the committed state readable. Per
+micro-batch it skips a replayed batch id, has the caller's ``step(batch_df, prev_dir, staging)`` write the new state into
 staging (reading the committed state at ``prev_dir``, or ``None``
 before the first commit), writes the batch id into a ``_BATCH`` marker
 inside staging, and swaps staging in with ``sources.sinks.replace_dir``.
@@ -68,13 +69,13 @@ def run_state_loop(stream: DataFrame, state_dir: str, checkpoint_dir: str,
     """Start the foreachBatch loop keeping ``state_dir`` equal to what
     ``step(batch_df, prev_dir, staging)`` writes for every micro-batch
     (availableNow trigger; the caller awaits/stops the returned query).
-    ``prev_dir`` is ``state_dir`` when it exists after
-    :func:`recover_dir`, else ``None``; any read failure inside ``step``
-    propagates — silently resetting accumulated state would be data
-    loss."""
+    ``prev_dir`` is ``state_dir`` when it exists, else ``None``; any read
+    failure inside ``step`` propagates — silently resetting accumulated
+    state would be data loss. A swap interrupted by a crash is healed
+    (:func:`recover_dir`) before the stream starts, not per batch: a
+    restart with no new input runs no batch at all."""
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        recover_dir(state_dir)
         prev = state_dir if os.path.exists(state_dir) else None
         marker = os.path.join(state_dir, _MARKER)
         if os.path.exists(marker):
@@ -89,6 +90,7 @@ def run_state_loop(stream: DataFrame, state_dir: str, checkpoint_dir: str,
 
         replace_dir(state_dir, write)
 
+    recover_dir(state_dir)
     return (
         stream.writeStream.foreachBatch(update)
         .outputMode(output_mode)

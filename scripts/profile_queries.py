@@ -8,8 +8,14 @@ run of the whole plan — ``exec_jobs``) and the exec phase's shuffle-write
 and spill bytes and peak execution memory (the largest plan node's).
 ``--explain TAG`` also writes ``.explain("formatted")`` to
 .perfbench/plans/<name>_<TAG>.txt (gitignored) so plan claims are
-checkable without running Spark; ``--json-out`` keeps the full records,
-operator counts included.
+checkable without running Spark. The session's counters are stripped
+from the dumps (expression ids ``#n``, ``plan_id=n``, ``RDD[n]``,
+lambda variable suffixes) and so are the codegen and query-stage ids
+that adaptive execution numbers in whatever order stages happen to be
+planned, so the dumps of two source trees diff clean when their plans
+are the same: ``diff -r A/.perfbench/plans
+B/.perfbench/plans`` is the plan-identity check. ``--json-out`` keeps
+the full records, operator counts included.
 
 Usage:
   python scripts/profile_queries.py NAME [NAME...] [--explain TAG] [--reps N]
@@ -22,11 +28,27 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 from pathlib import Path
 
 HERE = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(HERE))
+
+# counters in an explain dump that differ between runs of one plan
+_SESSION_IDS = (
+    (re.compile(r"#\d+|plan_id=\d+"), ""),
+    (re.compile(r"(RDD)\[\d+\]"), r"\1"),
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id]"),
+    (re.compile(r"(?m)^Arguments: \d+$"), "Arguments:"),  # query-stage id
+)
+
+
+def _strip_session_ids(txt: str) -> str:
+    for pattern, repl in _SESSION_IDS:
+        txt = pattern.sub(repl, txt)
+    return txt
 
 
 def main() -> None:
@@ -80,7 +102,8 @@ def main() -> None:
             df = qs[name](spark, sf_dir)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
-            (plans_dir / f"{name}_{args.explain}.txt").write_text(txt)
+            (plans_dir / f"{name}_{args.explain}.txt").write_text(
+                _strip_session_ids(txt))
         results[name] = best
         print(f"{best['wall_s']:8.2f}  (build {best['build_s']:6.2f} "
               f"[{best['build_jobs']} jobs] + exec {best['exec_s']:6.2f})  "

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_integration_case_study_spark.functions import text as T
@@ -456,3 +457,87 @@ def test_ngram_window_empty_vocabulary_returns_empty_frame(spark, monkeypatch):
     )
     assert out.collect() == []
     assert out.schema == array_path.schema
+
+
+_TWIN_TEXT = "the quick brown fox jumps over the lazy dog"
+
+# detector -> call on a frame (id, t, blk); the incremental form takes
+# odd ids as the incoming batch and even ids as the retained corpus
+_DETECTORS = {
+    "ngram": lambda d: dedup.ngram_jaccard_pairs(d, "id", "t", "blk", n=1),
+    "ngram_window": lambda d: dedup.ngram_jaccard_pairs(
+        d, "id", "t", "blk", n=1, block_window=2
+    ),
+    "minhash": lambda d: dedup.minhash_candidate_pairs(d, "id", "t"),
+    "minhash_window": lambda d: dedup.minhash_candidate_pairs(
+        d, "id", "t", bucket_window=2
+    ),
+    "minhash_incremental": lambda d: dedup.minhash_incremental_pairs(
+        d.filter(F.col("id") % 2 == 1), d.filter(F.col("id") % 2 == 0),
+        "id", "t",
+    ),
+    "simhash": lambda d: dedup.simhash_near_pairs(d, "id", "t"),
+    "jaccard_prefix": lambda d: dedup.jaccard_join_prefix(d, "id", "t"),
+    "containment_prefix": lambda d: dedup.containment_join_prefix(d, "id", "t"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DETECTORS))
+def test_set_similarity_detectors_on_degenerate_input(spark, name):
+    """An empty frame and a one-row frame have no pair: each detector
+    returns zero rows with the schema it returns when two twins match."""
+    detect = _DETECTORS[name]
+    schema = "id long, t string, blk string"
+    twins = detect(spark.createDataFrame(
+        [(1, _TWIN_TEXT, "x"), (2, _TWIN_TEXT, "x")], schema
+    ))
+    assert twins.count() > 0
+    for rows in ([], [(1, _TWIN_TEXT, "x")]):
+        out = detect(spark.createDataFrame(rows, schema))
+        assert out.collect() == []
+        assert out.schema == twins.schema
+
+
+def test_one_candidate_and_verify_path():
+    """The set-similarity detectors share one candidate-and-verify path:
+    ``array_intersect`` is called only by ``_intersection_size``, a join
+    keyed on a pair end happens only inside ``_verify_join``, and the
+    successor explode ``F.sequence(__r + 1, ...)`` appears only in
+    ``_successor_pairs`` and ``sorted_neighborhood_pairs``."""
+    import ast
+    from pathlib import Path
+
+    tree = ast.parse(Path(dedup.__file__).read_text())
+    ends = {"id_a", "id_b", "new_id", "dup_of", "src_id", "dst_id"}
+
+    def name(call):
+        return getattr(call.func, "id", getattr(call.func, "attr", None))
+
+    def owners(pred):
+        return sorted({
+            fn.name
+            for fn in tree.body
+            if isinstance(fn, ast.FunctionDef)
+            for node in ast.walk(fn)
+            if isinstance(node, ast.Call) and pred(node)
+        })
+
+    def pair_end_join(call):
+        keys = call.args[1:2] + [k.value for k in call.keywords if k.arg == "on"]
+        return name(call) == "join" and any(
+            isinstance(c, ast.Constant) and c.value in ends
+            for k in keys
+            for c in ast.walk(k)
+        )
+
+    def successor_explode(call):
+        return name(call) == "sequence" and any(
+            isinstance(c, ast.Constant) and c.value == "__r"
+            for c in ast.walk(call.args[0])
+        )
+
+    assert owners(lambda c: name(c) == "array_intersect") == ["_intersection_size"]
+    assert set(owners(pair_end_join)) <= {"_verify_join"}
+    assert owners(successor_explode) == [
+        "_successor_pairs", "sorted_neighborhood_pairs"
+    ]
