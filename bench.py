@@ -29,7 +29,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from data_integration_case_study_spark.session import local_cores  # noqa: E402
+from data_integration_case_study_spark.session import (  # noqa: E402
+    class_archive_state,
+    local_cores,
+)
 
 # Bumped once per driver round so the full-detail sidecar file name matches
 # the round's BENCH_r{N}.json record. NOTE for round-over-round diffs: since
@@ -120,6 +123,10 @@ def _env_fingerprint() -> dict:
                     fp[label] = round(int(line.split()[1]) / 1048576, 1)
     except OSError:
         pass
+    # mapped / recording / rejected / off:<reason>: the driver JVM's start
+    # with or without the class archive (session.py), so a setup shift in
+    # the record explains itself
+    fp["class_archive"] = class_archive_state()
     return fp
 
 

@@ -334,6 +334,15 @@ def test_fingerprint_cpus_defaults_like_session(monkeypatch):
     assert bench.local_cores() == 6
 
 
+def test_fingerprint_records_the_class_archive_state():
+    # a setup_s shift in a bench record is explained by how the driver JVM
+    # started (session.py's class-data-sharing archive)
+    from data_integration_case_study_spark import session
+
+    assert bench._env_fingerprint()["class_archive"] == (
+        session.class_archive_state())
+
+
 def test_fingerprint_cpus_malformed_falls_back_to_cpu_count(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "four")
     assert bench.local_cores() == multiprocessing.cpu_count()
